@@ -7,9 +7,10 @@ import org.apache.spark.sql.functions._
 
 /** The key-value surface the sync engine consumes (ref `store/store.go:
   * 6-17` — Get/Set plus the prefix scan). Three conformant backends:
-  * [[KvStore]] (versioned parquet `_SUCCESS` commits), the tx manifest's
-  * embedded use of the same, and [[JdbcKvStore]] (an external RDBMS, the
-  * `postgresql_store.go` shape).
+  * [[KvStore]] (a versioned JSON log on the Hadoop FileSystem), the tx
+  * manifest's embedded use of the same, and [[JdbcKvStore]] (an external
+  * RDBMS, the `postgresql_store.go` shape). No backend reads
+  * `claimStaleMs`.
   */
 trait KeyValueStore {
   def get(key: String): Option[String]
@@ -69,9 +70,8 @@ object JdbcStore {
 
 /** RDBMS-backed [[KeyValueStore]]: one `GRAFT_KV` table, upserts as a
   * transactional update-then-insert (the portable ON CONFLICT), CAS via a
-  * version row updated in the SAME transaction — the one backend whose
-  * compare-and-set is natively atomic (the database's lock manager
-  * replaces the parquet backends' claim-file protocol).
+  * version row updated in the SAME transaction (the database's lock
+  * manager plays the part of [[KvStore]]'s create-if-absent rename).
   */
 final class JdbcKvStore(spark: SparkSession, url: String)
     extends KeyValueStore {
@@ -116,7 +116,7 @@ final class JdbcKvStore(spark: SparkSession, url: String)
   /** One transaction: CAS check on the version row, upserts, prefix
     * drops, version bump. A concurrent committer serializes on the
     * version row's lock; a stale `expectedVersion` aborts with
-    * [[ConcurrentCommitException]] exactly like the parquet backends.
+    * [[ConcurrentCommitException]] exactly like [[KvStore]].
     */
   override def setAll(kvs: Map[String, String], drop: String => Boolean,
       expectedVersion: Option[Long], claimStaleMs: Long): Unit =

@@ -3,8 +3,8 @@ package graft.store
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The store layer (SURVEY.md §1.1e): per-filter append-only indexed log +
-  * tiny KV metadata table, over parquet directories.
+/** The store layer (SURVEY.md §1.1e): per-filter append-only indexed log
+  * over parquet directories, plus a tiny KV metadata log ([[KvStore]]).
   *
   * Reference contract (`store/store.go:6-36`): `LastIndex`, `StoreLogs`
   * (append batch with consecutive indices), `RemoveLogs(n)` (truncate
@@ -35,10 +35,9 @@ final class LogTable(spark: SparkSession, root: String, filterHash: String,
   private val dir = s"$root/logs/filter_hash=$filterHash"
 
   /** Tiny versioned metadata store for the truncation journal — its
-    * versioned-`_SUCCESS` commit is the ATOMIC POINTER this table's
-    * crash-safe truncation pivots on (the plain-parquet analog of a
-    * Delta/Iceberg metadata commit; ref `bolt_store.go:180-197`
-    * transactional truncate).
+    * atomic version commit is the POINTER this table's crash-safe
+    * truncation pivots on (the plain-parquet analog of a Delta/Iceberg
+    * metadata commit; ref `bolt_store.go:180-197` transactional truncate).
     */
   private lazy val meta = new KvStore(spark, s"$root/logs_meta/filter_hash=$filterHash")
   private def metaDirExists: Boolean =
@@ -444,304 +443,5 @@ final class LogTable(spark: SparkSession, root: String, filterHash: String,
       // hash the address so the second dimension is dense + numeric;
       // pruning still works on the raw address column's file stats
       xxhash64(col("address")).bitwiseAND((1L << bits) - 1), bits)))
-  }
-}
-
-/** S6/S7 — string→string KV metadata store (genesis hash, chainID,
-  * lastBlock checkpoint, filter registry — ref `store/store.go:8-14`).
-  * Tiny by construction (a handful of keys per filter), so the upsert is a
-  * read-modify-rewrite of one small parquet; at scale this is the streaming
-  * checkpoint / a Delta MERGE, never a data-sized table.
-  *
-  * Crash safety: every write lands in a fresh `v<nanos>` directory whose
-  * `_SUCCESS` marker is written last by the commit protocol; readers pick
-  * the newest *complete* version and stale versions are pruned on the next
-  * write. There is no delete-before-rename window — a crash at any point
-  * leaves the previous version readable (losing the checkpoint would
-  * otherwise silently re-backfill the whole history on restart).
-  *
-  * Single-writer by design: the reference's store is driven by one sync
-  * goroutine per filter (`tracker.go:582`) and this engine keeps that
-  * contract — the KV is per-tracker metadata, not a shared database.
-  */
-/** A compare-and-set commit lost its race: the expected version was no
-  * longer the newest committed one, or another writer claimed the next
-  * version number first. Callers rebase on the fresh state and retry
-  * (see [[TxLogTable.storeLogs]]).
-  */
-final class ConcurrentCommitException(msg: String)
-  extends RuntimeException(msg)
-
-object KvStore {
-  // one monitor per store directory (same-JVM compare-and-set writers
-  // serialize here; see setAll)
-  private val monitors =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private[store] def commitMonitor(dir: String): Object =
-    monitors.computeIfAbsent(dir, _ => new Object)
-
-  /** How many committed KV versions a commit retains (newest inclusive).
-    * Non-atomic list-then-read readers stay whole as long as a concurrent
-    * committer can't burn through this many commits between their list
-    * and their read.
-    */
-  private[store] val retainKvVersions = 4
-
-  /** Missing-path detector shared by every list-then-read retry (this
-    * store's readers and the CDC manifest poller): walks the cause chain
-    * and matches the message variants different filesystems / wrapping
-    * layers surface a pruned path as — a bare FileNotFoundException case
-    * misses object-store and Spark-wrapped forms.
-    */
-  private[graft] def isMissingPath(e: Throwable): Boolean =
-    e != null && (e.isInstanceOf[java.io.FileNotFoundException] ||
-      (e.getMessage != null && (e.getMessage.contains("Path does not exist") ||
-        e.getMessage.contains("PATH_NOT_FOUND") ||
-        e.getMessage.contains("No such file"))) ||
-      isMissingPath(e.getCause))
-}
-
-final class KvStore(spark: SparkSession, root: String,
-    val retainVersions: Int = KvStore.retainKvVersions)
-    extends KeyValueStore {
-  require(retainVersions >= 2,
-    s"retainVersions must be >= 2 (newest + at least one reader window), " +
-      s"got $retainVersions")
-  private val dir = s"$root/kv"
-
-  // scheme-aware: the store root decides the filesystem (HDFS/object
-  // store/local), not fs.defaultFS — a table on s3a:// must not be probed
-  // through the cluster's default HDFS
-  private def fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-    spark.sparkContext.hadoopConfiguration)
-
-  /** Readers list-then-read non-atomically; a concurrent committer prunes
-    * superseded versions, so the version a reader just listed can vanish
-    * before the read lands. Two defenses: commits RETAIN the last
-    * [[retainVersions]] versions (the common window — a DIAL, sized to
-    * how many commits a committer storm can land inside one reader's
-    * list-to-read gap), and this retry re-lists on a missing-path failure
-    * (the pathological one) — the re-list pins the new newest version, so
-    * the retried read is against a version the pruner must retain. A
-    * reader that STILL loses after every retry (a storm sustained through
-    * all 8 re-lists) fails LOUDLY with the dial named, not with the raw
-    * FileNotFound of whichever version vanished last.
-    */
-  private def withReadRetry[A](body: => A): A = {
-    var attempt = 0
-    while (true) {
-      try return body
-      catch {
-        case e: Exception if KvStore.isMissingPath(e) =>
-          if (attempt >= 8) throw new IllegalStateException(
-            s"kv read at $dir outlived the retention window across " +
-              s"$attempt re-list retries (retainVersions=$retainVersions); " +
-              "a sustained commit storm is pruning versions faster than " +
-              "this reader re-lists — raise retainVersions on the writer",
-            e)
-          attempt += 1
-      }
-    }
-    sys.error("unreachable")
-  }
-
-  /** Complete (committed) versions, oldest→newest. */
-  private def versions(): Seq[(Long, org.apache.hadoop.fs.Path)] = {
-    val base = new org.apache.hadoop.fs.Path(dir)
-    if (!fs.exists(base)) Nil
-    else fs.listStatus(base).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("v"))
-      .flatMap { st =>
-        val name = st.getPath.getName.drop(1)
-        if (name.forall(_.isDigit) &&
-          fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-          Some(name.toLong -> st.getPath)
-        else None
-      }
-      .sortBy(_._1)
-  }
-
-  /** Test seam: runs after a reader pins the newest version path and
-    * before the pinned read executes — the retention-boundary spec
-    * interleaves a deterministic concurrent-committer storm here (a real
-    * thread race between lister and pruner would be flaky).
-    */
-  private[graft] var afterPin: () => Unit = () => ()
-
-  def read: DataFrame =
-    versions().lastOption match {
-      case Some((_, p)) => afterPin(); spark.read.parquet(p.toString)
-      case None =>
-        spark.createDataFrame(Seq.empty[(String, String)]).toDF("key", "value")
-    }
-
-  def get(key: String): Option[String] = withReadRetry {
-    read.where(col("key") === key).select("value")
-      .collect().headOption.map(_.getString(0))
-  }
-
-  /** One key plus the commit version it was read at — the snapshot a
-    * compare-and-set commit ([[setAll]] with `expectedVersion`) validates
-    * against. Version 0 = no committed version yet.
-    */
-  def getWithVersion(key: String): (Option[String], Long) = withReadRetry {
-    versions().lastOption match {
-      case None => (None, 0L)
-      case Some((v, p)) =>
-        afterPin()
-        (spark.read.parquet(p.toString).where(col("key") === key)
-          .select("value").collect().headOption.map(_.getString(0)), v)
-    }
-  }
-
-  /** Upsert (ref `postgresql_store.go:72` ON CONFLICT DO UPDATE). */
-  def set(key: String, value: String): Unit = setAll(Map(key -> value))
-
-  /** Batched upsert — one versioned rewrite for any number of keys (a
-    * checkpoint writes lastBlock + header backlog together).
-    *
-    * `drop` removes matching keys in the SAME commit (bounded-history
-    * pruning); `expectedVersion` turns the write into a compare-and-set:
-    * the commit aborts with [[ConcurrentCommitException]] unless the
-    * newest committed version still equals it. Losing a claim race for
-    * the next version number also aborts — the per-version `.claim` file
-    * is the mutual-exclusion primitive (put-if-absent; atomic on HDFS
-    * `create(overwrite=false)`, conditional-put on object stores). Stale
-    * claims (a claimant that crashed pre-commit) unblock after
-    * `claimStaleMs`.
-    */
-  def setAll(kvs: Map[String, String], drop: String => Boolean = _ => false,
-      expectedVersion: Option[Long] = None,
-      claimStaleMs: Long = 10L * 60 * 1000): Unit =
-    // same-JVM writers serialize on a per-store monitor: the claim file
-    // arbitrates distinct PROCESSES (atomic create on HDFS, conditional
-    // put on object stores), but a local filesystem's exclusive create is
-    // check-then-act, so two threads of one driver need the lock the
-    // filesystem can't give them. Cross-process local-FS writers remain
-    // best-effort — documented, and not the deployment shape (one driver
-    // per store root).
-    if (expectedVersion.isDefined)
-      KvStore.commitMonitor(dir).synchronized {
-        setAllLocked(kvs, drop, expectedVersion, claimStaleMs)
-      }
-    else setAllLocked(kvs, drop, expectedVersion, claimStaleMs)
-
-  /** Test seam: the commit path WITHOUT the same-JVM monitor — the claim
-    * contract test drives two writer "processes" through it over a
-    * deliberately non-atomic filesystem to prove the protocol's
-    * cross-process guarantees don't secretly lean on the monitor.
-    */
-  private[store] def setAllNoMonitor(kvs: Map[String, String],
-      expectedVersion: Option[Long]): Unit =
-    setAllLocked(kvs, _ => false, expectedVersion, 10L * 60 * 1000)
-
-  /** Test seam: runs after claim acquisition + in-claim re-validation and
-    * before the target write — the claim contract test interleaves a
-    * competing committer here DETERMINISTICALLY (thread races would be
-    * flaky) to prove the protocol's behavior on both atomic and
-    * non-atomic filesystems.
-    */
-  private[store] var beforeWrite: () => Unit = () => ()
-
-  private def setAllLocked(kvs: Map[String, String], drop: String => Boolean,
-      expectedVersion: Option[Long], claimStaleMs: Long): Unit = {
-    def requireAt(e: Long): Unit = {
-      val have = versions().lastOption.map(_._1).getOrElse(0L)
-      if (have != e) throw new ConcurrentCommitException(
-        s"expected version $e but newest committed is $have")
-    }
-    val cur = versions().lastOption
-    expectedVersion.foreach(requireAt)
-    val updated = read
-      .where(!col("key").isin(kvs.keys.toSeq: _*))
-      .filter(r => !drop(r.getString(0)))
-      .unionByName(spark.createDataFrame(kvs.toSeq).toDF("key", "value"))
-      .collect() // tiny by construction; pin before touching directories
-    // Monotonic across JVM restarts: nanoTime's origin is arbitrary per JVM
-    // (boot-relative on Linux), so a restart could mint a version SMALLER
-    // than an existing one and read() would pin to the stale dir forever.
-    val v = cur.map(_._1 + 1L).getOrElse(System.currentTimeMillis())
-    // the claim is named by the version the writer is advancing FROM, so
-    // any two writers that read the same snapshot contend on one file —
-    // including on an empty store, where the target version is minted
-    // from the clock and would otherwise differ between them
-    val claim = new org.apache.hadoop.fs.Path(
-      s"$dir/cas${expectedVersion.getOrElse(0L)}.claim")
-    if (expectedVersion.isDefined) {
-      // sweep dead claims: their base version is already superseded, or
-      // the claimant crashed pre-commit and the claim went stale
-      val basePath = new org.apache.hadoop.fs.Path(dir)
-      (if (fs.exists(basePath)) fs.listStatus(basePath).toSeq else Seq.empty)
-        .filter(_.getPath.getName.endsWith(".claim"))
-        .filter { st =>
-          val cv = st.getPath.getName.stripPrefix("cas").stripSuffix(".claim")
-          (cv.forall(_.isDigit) && cv.nonEmpty &&
-            cv.toLong < cur.map(_._1).getOrElse(0L)) ||
-            System.currentTimeMillis() - st.getModificationTime > claimStaleMs
-        }
-        .foreach(st => fs.delete(st.getPath, false))
-      try fs.create(claim, false).close()
-      catch {
-        case _: java.io.IOException => throw new ConcurrentCommitException(
-          s"advance from version ${expectedVersion.get} already claimed " +
-            "by a concurrent writer")
-      }
-      // re-validate INSIDE the claim: a winner may have committed and
-      // released between the entry check and our acquisition — without
-      // this, the loser would proceed to overwrite the winner's version
-      try requireAt(expectedVersion.get)
-      catch { case e: ConcurrentCommitException =>
-        fs.delete(claim, false); throw e
-      }
-    }
-    try {
-      beforeWrite()
-      // a crashed earlier commit can leave a partial target dir; clear it
-      // or the write below stalls forever. _SUCCESS-guarded: a committed
-      // dir is never deleted, whatever state the version math is in
-      val target = new org.apache.hadoop.fs.Path(s"$dir/v$v")
-      val committed = fs.exists(target) &&
-        fs.exists(new org.apache.hadoop.fs.Path(target, "_SUCCESS"))
-      if (committed && expectedVersion.isDefined)
-        // LAST line of defense on filesystems whose exclusive create is
-        // itself check-then-act (plain local FS): if two writers both
-        // "won" the claim, the versions they mint collide — the loser
-        // detects the winner's committed target here and aborts instead
-        // of silently overwriting it. Lost CLAIM, never a lost UPDATE.
-        throw new ConcurrentCommitException(
-          s"version $v already committed by a concurrent writer " +
-            "(non-atomic claim detected at the target)")
-      if (fs.exists(target) && !committed)
-        fs.delete(target, true)
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(updated.toSeq, 1),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("key",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("value",
-            org.apache.spark.sql.types.StringType))))
-        .write.parquet(target.toString)
-    } finally if (expectedVersion.isDefined) fs.delete(claim, false): Unit
-    // prune superseded versions but RETAIN a short window: readers
-    // list-then-read non-atomically, so deleting the version a reader just
-    // listed fails its read with FileNotFound — retaining the last few
-    // (plus the reader-side re-list retry) closes the window. Tiny dirs;
-    // the retained count is versions, not data.
-    versions().filter(_._1 < v).dropRight(retainVersions - 1)
-      .foreach(x => fs.delete(x._2, true))
-  }
-
-  /** S7 — prefix scan (ref `store/store.go:11`). */
-  def listPrefix(prefix: String): DataFrame =
-    read.where(col("key").startsWith(prefix)).orderBy("key")
-
-  /** Materialized prefix scan with the reader retry applied — for callers
-    * that collect anyway (manifest/history loads); the lazy [[listPrefix]]
-    * can't be retried once it leaves this class.
-    */
-  def getPrefix(prefix: String): Seq[(String, String)] = withReadRetry {
-    read.where(col("key").startsWith(prefix))
-      .collect().toSeq.map(r => (r.getString(0), r.getString(1)))
-      .sortBy(_._1)
   }
 }

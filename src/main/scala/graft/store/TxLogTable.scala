@@ -26,8 +26,8 @@ trait LogStore {
 /** Transactional log table: immutable per-commit parquet directories plus
   * a versioned MANIFEST naming the live directories — the snapshot-
   * isolation design of Delta Lake / Iceberg, built on the machinery this
-  * store layer already trusts ([[KvStore]]'s versioned `_SUCCESS` commits
-  * are the atomic pointer).
+  * store layer already trusts ([[KvStore]]'s create-if-absent version
+  * commit is the atomic pointer).
   *
   * Why: [[LogTable]]'s truncation is crash-safe but PHYSICAL — survivors
   * of the affected tail partitions are rewritten and swapped under a
@@ -42,12 +42,13 @@ trait LogStore {
   *
   * The manifest is VERSIONED: every commit advances `version` by one and
   * retains the last [[retainVersions]] manifests in the same atomic KV
-  * commit, giving `VERSION AS OF` time travel ([[readAt]]), a
-  * `DESCRIBE HISTORY` surface ([[history]]), and snapshot-protected
-  * [[vacuum]]. Commits are optimistic compare-and-sets: a writer that
-  * loses the race gets [[ConcurrentCommitException]] and REBASES (an
-  * append recomputes its indices from the fresh watermark), so
-  * concurrent appenders serialize with contiguous indices and no loss.
+  * commit (read and written on the driver, with no Spark job), giving
+  * `VERSION AS OF` time travel ([[readAt]]), a `DESCRIBE HISTORY` surface
+  * ([[history]]), and snapshot-protected [[vacuum]]. Commits are
+  * optimistic compare-and-sets: a writer that loses the race gets
+  * [[ConcurrentCommitException]] and REBASES (an append recomputes its
+  * indices from the fresh watermark), so concurrent appenders serialize
+  * with contiguous indices and no loss.
   *
   * Commit protocol (optimistic writers, concurrent readers):
   *  1. append: write the batch to a fresh `data/c<nanos>` directory
@@ -76,24 +77,19 @@ final class TxLogTable(spark: SparkSession, root: String, filterHash: String,
     val retainVersions: Int = 32,
     kvRetainVersions: Int = KvStore.retainKvVersions) extends LogStore {
 
-  private val dir = s"$root/txlogs/filter_hash=$filterHash"
-  private val dataDir = s"$dir/data"
+  private val dataDir = TxLogTable.dataDir(root, filterHash)
 
-  /** The manifest lives in a KvStore — its versioned-`_SUCCESS` commit is
-    * the table's atomic pointer. One key, one value: the encoded manifest.
-    * `kvRetainVersions` is the reader-window dial on that pointer store:
-    * raise it when a commit storm (streaming micro-commits) overlaps slow
-    * manifest readers (a long CDC poll, a pinned history scan).
+  /** The manifest log ([[TxLogTable.manifestLog]]). `kvRetainVersions` is
+    * the reader-window dial on that pointer store: raise it when a commit
+    * storm (streaming micro-commits) overlaps slow manifest readers (a
+    * long CDC poll, a pinned history scan).
     */
-  private val meta = new KvStore(spark,
-    s"$root/txlogs_meta/filter_hash=$filterHash", kvRetainVersions)
-  private val manifestKey = "manifest"
+  private val meta =
+    TxLogTable.manifestLog(spark, root, filterHash, kvRetainVersions)
 
-  import TxLogTable.{dec, enc, Entry, Manifest}
+  import TxLogTable.{dec, enc, historyPrefix, manifestKey, Entry, Manifest}
 
-  private[store] def manifest(): Manifest =
-    meta.get(manifestKey).filter(_.nonEmpty).map(dec)
-      .getOrElse(Manifest(0L, Seq.empty))
+  private[store] def manifest(): Manifest = TxLogTable.manifestOf(meta)
 
   /** Current manifest plus the KV commit version it was read at — the
     * snapshot every mutation validates against at commit time (optimistic
@@ -115,14 +111,11 @@ final class TxLogTable(spark: SparkSession, root: String, filterHash: String,
     // stamp the commit wall-clock (TIMESTAMP AS OF; best-effort across
     // writers, the Delta caveat — versions, not clocks, are the truth)
     val m = m0.copy(ts = System.currentTimeMillis())
-    // locals only — the drop closure ships to executors and must not
-    // capture `this` (SparkSession field)
     val floorV = m.version - retainVersions + 1
-    val prefix = s"$manifestKey@v"
     meta.setAll(
-      Map(manifestKey -> enc(m), s"$prefix${m.version}" -> enc(m)),
-      drop = k => k.startsWith(prefix) && {
-        val p = k.stripPrefix(prefix)
+      Map(manifestKey -> enc(m), s"$historyPrefix${m.version}" -> enc(m)),
+      drop = k => k.startsWith(historyPrefix) && {
+        val p = k.stripPrefix(historyPrefix)
         p.forall(_.isDigit) && p.toLong < floorV
       },
       expectedVersion = Some(expectedKv))
@@ -162,9 +155,7 @@ final class TxLogTable(spark: SparkSession, root: String, filterHash: String,
   /** Current table version — advances by one per committed mutation. */
   def version(): Long = manifest().version
 
-  private def retained(): Seq[Manifest] =
-    meta.getPrefix(s"$manifestKey@v").map(kv => dec(kv._2))
-      .sortBy(_.version)
+  private def retained(): Seq[Manifest] = TxLogTable.retainedOf(meta)
 
   /** Time travel: the table exactly as of commit `version` — dropped
     * directories outlive their manifest until [[vacuum]] (which protects
@@ -498,7 +489,7 @@ final class TxLogTable(spark: SparkSession, root: String, filterHash: String,
     * the harness) scans directly. Data lands index-clustered under
     * `path/data`; `path/MANIFEST` records the snapshot version, its
     * lastIndex and the exported file names (`k=v` lines + one `file=`
-    * line per part, the same no-JSON codec style as the commit log).
+    * line per part, the same plain codec style as the manifest).
     *
     * The export is a MATERIALIZED copy, not a view: the snapshot's cap
     * filters are applied while writing, so external readers need zero
@@ -682,11 +673,32 @@ final class TxLogTable(spark: SparkSession, root: String, filterHash: String,
   }
 }
 
-/** Manifest model + codec, shared with the driver-side loader the
-  * streaming CDC source uses ([[graft.stream.TxCdcSource]] polls the
-  * commit log without spinning Spark jobs).
+/** Manifest model, codec and location, shared with the streaming CDC
+  * source ([[graft.stream.TxCdcSource]] polls the same manifest log).
   */
 private[graft] object TxLogTable {
+
+  private[graft] def dataDir(root: String, filterHash: String): String =
+    s"$root/txlogs/filter_hash=$filterHash/data"
+
+  /** The table's manifest log: one KV key holds the encoded live manifest,
+    * one `manifest@v<N>` key per retained snapshot. Its version commit is
+    * the table's atomic pointer.
+    */
+  private[graft] def manifestLog(spark: SparkSession, root: String,
+      filterHash: String, retain: Int = KvStore.retainKvVersions): KvStore =
+    new KvStore(spark, s"$root/txlogs_meta/filter_hash=$filterHash", retain)
+
+  private val manifestKey = "manifest"
+  private val historyPrefix = s"$manifestKey@v"
+
+  private[graft] def manifestOf(meta: KvStore): Manifest =
+    meta.get(manifestKey).filter(_.nonEmpty).map(dec)
+      .getOrElse(Manifest(0L, Seq.empty))
+
+  /** Retained snapshots, oldest first. */
+  private[graft] def retainedOf(meta: KvStore): Seq[Manifest] =
+    meta.getPrefix(historyPrefix).map(kv => dec(kv._2)).sortBy(_.version)
 
   private[graft] val logSchema = StructType(Seq(
     StructField("tx_index", LongType), StructField("tx_hash", StringType),
@@ -737,10 +749,11 @@ private[graft] object TxLogTable {
     groups
   }
 
-  // encoding mirrors the truncation journal's pipe/semicolon style — no
-  // JSON dependency, dir names are `c<digits>` and ops are bare words so
-  // the charset is safe. Head is `lastIndex@version@op@tsMillis`; shorter
-  // heads (the earlier formats) decode with version 0 / ts 0.
+  // encoding mirrors the truncation journal's pipe/semicolon style (the
+  // string rides as one value of the KV's JSON map); dir names are
+  // `c<digits>` and ops are bare words so the charset is safe. Head is
+  // `lastIndex@version@op@tsMillis`; shorter heads (the earlier formats)
+  // decode with version 0 / ts 0.
   private[graft] def enc(m: Manifest): String =
     (s"${m.lastIndex}@${m.version}@${m.op}@${m.ts}" +: m.entries.map(e =>
       s"${e.name};${e.minIndx};${e.maxIndx};${e.minBlock};${e.maxBlock};${e.cap}"))

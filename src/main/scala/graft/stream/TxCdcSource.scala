@@ -2,13 +2,13 @@ package graft.stream
 
 import java.util
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.FilterApi
 import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -20,7 +20,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.store.TxLogTable
+import graft.store.{KvStore, TxLogTable}
 
 /** Structured Streaming source over a [[graft.store.TxLogTable]] commit
   * log — the Delta streaming-source shape: OFFSETS ARE TABLE VERSIONS,
@@ -31,8 +31,9 @@ import graft.store.TxLogTable
   *
   * Scale shape:
   *  - the driver never runs a Spark job to poll: `latestOffset` reads the
-  *    newest manifest directly through parquet-hadoop (the KV is one tiny
-  *    file), once per trigger;
+  *    newest manifest from the table's own manifest log
+  *    ([[graft.store.TxLogTable.manifestLog]], one small JSON file), once
+  *    per trigger;
   *  - planning is manifest-interval arithmetic (appends insert
   *    `[prev, cur)`, truncations delete `[cur, prev)`, compactions are
   *    invisible) — one input partition per affected parquet file, so a
@@ -141,16 +142,21 @@ final class TxCdcMicroBatchStream(root: String, filterHash: String,
     maxCommitsPerBatch: Long = Long.MaxValue)
   extends MicroBatchStream with SupportsTriggerAvailableNow {
 
-  private val tableDir = s"$root/txlogs/filter_hash=$filterHash"
-  private val dataDir = s"$tableDir/data"
-  private val kvDir = s"$root/txlogs_meta/filter_hash=$filterHash/kv"
+  private val dataDir = TxLogTable.dataDir(root, filterHash)
+  // the driver's Hadoop conf (cluster FS credentials, defaultFS)
+  private def hadoopConf = SparkSession.active.sparkContext.hadoopConfiguration
+
+  /** The writing table's manifest log, read through the same store. */
+  private[graft] lazy val manifests: KvStore =
+    TxLogTable.manifestLog(SparkSession.active, root, filterHash)
+
+  private def currentVersion(): Long =
+    TxLogTable.manifestOf(manifests).version
 
   override def initialOffset(): Offset =
-    VersionOffset(startingVersion.getOrElse(
-      TxManifests.currentVersion(kvDir)))
+    VersionOffset(startingVersion.getOrElse(currentVersion()))
 
-  private def latest(): VersionOffset =
-    VersionOffset(TxManifests.currentVersion(kvDir))
+  private def latest(): VersionOffset = VersionOffset(currentVersion())
 
   /** Admission: at most `maxCommitsPerBatch` commits per micro-batch —
     * bounds each batch to the ingest batches that produced those
@@ -166,7 +172,7 @@ final class TxCdcMicroBatchStream(root: String, filterHash: String,
     * terminate).
     */
   private def admit(committed: Long): VersionOffset = {
-    val live = TxManifests.currentVersion(kvDir)
+    val live = currentVersion()
     val head =
       if (availableNowTarget >= 0) math.min(availableNowTarget, live)
       else live
@@ -187,23 +193,23 @@ final class TxCdcMicroBatchStream(root: String, filterHash: String,
   // the run drains a fixed prefix even while writers keep committing
   private var availableNowTarget: Long = -1L
   override def prepareForTriggerAvailableNow(): Unit =
-    availableNowTarget = TxManifests.currentVersion(kvDir)
+    availableNowTarget = currentVersion()
   override def reportLatestOffset(): Offset =
     VersionOffset(
       if (availableNowTarget >= 0) availableNowTarget
-      else TxManifests.currentVersion(kvDir))
+      else currentVersion())
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val from = start.asInstanceOf[VersionOffset].version
     val to = end.asInstanceOf[VersionOffset].version
     if (from >= to) return Array.empty
-    val byV = TxManifests.retainedByVersion(kvDir)
+    val byV = TxLogTable.retainedOf(manifests).map(m => m.version -> m)
+      .toMap + (0L -> TxLogTable.Manifest(0L, Seq.empty))
     // Hadoop FS listing (not java.io.File): commit dirs live wherever
     // the table does — HDFS/object store on a cluster
-    val conf = TxManifests.driverConf()
     TxCdcSource.slices(dataDir, byV, from, to).flatMap { s =>
       val dirPath = new Path(s.dir)
-      val fs = dirPath.getFileSystem(conf)
+      val fs = dirPath.getFileSystem(hadoopConf)
       val files =
         (if (fs.exists(dirPath)) fs.listStatus(dirPath).toSeq else Seq.empty)
           .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
@@ -218,8 +224,7 @@ final class TxCdcMicroBatchStream(root: String, filterHash: String,
   override def createReaderFactory(): PartitionReaderFactory = {
     // ship the driver's Hadoop conf to the executor readers (FS
     // credentials, defaultFS) — the standard DSv2 connector shape
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      TxManifests.driverConf())
+    val conf = new org.apache.spark.util.SerializableConfiguration(hadoopConf)
     (partition: InputPartition) => {
       val p = partition.asInstanceOf[TxCdcInputPartition]
       new PartitionReader[InternalRow] {
@@ -280,96 +285,3 @@ final class TxCdcMicroBatchStream(root: String, filterHash: String,
 
 final case class TxCdcInputPartition(file: String, lo: Long, hi: Long,
     changeType: String, version: Long) extends InputPartition
-
-/** Driver-side manifest access WITHOUT Spark jobs: the KV store's newest
-  * committed version is one tiny parquet directory; reading it through
-  * parquet-hadoop keeps the per-trigger poll at file-listing cost.
-  */
-private[graft] object TxManifests {
-
-  /** The driver's Hadoop conf when a session is up (cluster FS creds,
-    * defaultFS); a bare Configuration otherwise (tests, tools).
-    */
-  private[stream] def driverConf(): Configuration =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .map(_.sparkContext.hadoopConfiguration)
-      .getOrElse(new Configuration())
-
-  /** The KV commit prune retains a short version window, but a poller
-    * could still list a version a fast committer burns through — re-list
-    * on a missing-path read rather than fail the trigger. Matches through
-    * [[graft.store.KvStore.isMissingPath]] (cause-chain walk + message
-    * variants), the same matcher the KvStore reader retry uses: on object
-    * stores or through wrapping layers a pruned path can surface as
-    * something other than a top-level FileNotFoundException.
-    */
-  private def withReadRetry[A](body: => A): A = {
-    var attempt = 0
-    while (true) {
-      try return body
-      catch {
-        case e: Exception
-            if attempt < 8 && graft.store.KvStore.isMissingPath(e) =>
-          attempt += 1
-      }
-    }
-    sys.error("unreachable")
-  }
-
-  /** Test seam: runs between the poller's version listing and its read —
-    * the sustained-commit-storm spec prunes the listed version here
-    * deterministically.
-    */
-  private[graft] var afterList: () => Unit = () => ()
-
-  private def newestKv(kvDir: String): Option[Path] = {
-    val base = new Path(kvDir)
-    val fs = base.getFileSystem(driverConf())
-    if (!fs.exists(base)) return None
-    fs.listStatus(base).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("v") &&
-        st.getPath.getName.drop(1).forall(_.isDigit) &&
-        fs.exists(new Path(st.getPath, "_SUCCESS")))
-      .map(_.getPath)
-      .sortBy(_.getName.drop(1).toLong)
-      .lastOption
-  }
-
-  private def readKv(dir: Path): Map[String, String] = {
-    val conf = driverConf()
-    val fs = dir.getFileSystem(conf)
-    fs.listStatus(dir).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .flatMap { st =>
-        val r = ParquetReader
-          .builder(new GroupReadSupport(), st.getPath)
-          .withConf(conf).build()
-        try Iterator.continually(r.read()).takeWhile(_ != null)
-          .map(g => g.getString("key", 0) -> g.getString("value", 0))
-          .toList
-        finally r.close()
-      }.toMap
-  }
-
-  def currentVersion(kvDir: String): Long = withReadRetry {
-    newestKv(kvDir).map { d =>
-      afterList()
-      readKv(d).get("manifest")
-        .filter(_.nonEmpty).map(TxLogTable.dec(_).version).getOrElse(0L)
-    }.getOrElse(0L)
-  }
-
-  /** All retained manifests keyed by version, plus the implicit empty
-    * version 0.
-    */
-  def retainedByVersion(kvDir: String): Map[Long, TxLogTable.Manifest] = {
-    val kv = withReadRetry(newestKv(kvDir).map { d =>
-      afterList(); readKv(d)
-    }.getOrElse(Map.empty[String, String]))
-    kv.collect {
-      case (k, v) if k.startsWith("manifest@v") && v.nonEmpty =>
-        val m = TxLogTable.dec(v)
-        m.version -> m
-    } + (0L -> TxLogTable.Manifest(0L, Seq.empty))
-  }
-}

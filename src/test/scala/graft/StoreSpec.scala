@@ -261,23 +261,22 @@ class StoreSpec extends SparkSpec {
     assert(kv.get("k1").contains("v1"))
     kv.set("k1", "v2")               // update in place
     assert(kv.get("k1").contains("v2"))
-    assert(kv.read.count() == 1)
+    assert(kv.getPrefix("") == Seq("k1" -> "v2"))
   }
 
   test("kv versions are monotonic across restarts (stale-dir regression)") {
-    // nanoTime's origin is arbitrary per JVM — a restart could mint a
-    // smaller version and pin read() to the stale dir forever; versions
-    // must instead derive from max(existing)+1
+    // a restarted store must continue from the newest version on disk —
+    // a smaller version would pin reads to a stale snapshot forever
     val dir = tmpDir("kv")
     val kv = new KvStore(spark, dir)
     kv.set("k", "1")
     def vers() = new java.io.File(dir, "kv").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("v"))
-      .map(_.getName.drop(1).toLong).sorted.toSeq
+      .filter(f => f.isFile && f.getName.forall(_.isDigit))
+      .map(_.getName.toLong).sorted.toSeq
     val v1 = vers()
     assert(v1.size == 1)
-    // a "restarted JVM" writing after a clock regression: new KvStore
-    // instance must still write a strictly larger version and prune
+    // a "restarted JVM": a new KvStore instance must still write a
+    // strictly larger version and prune
     val kv2 = new KvStore(spark, dir)
     kv2.set("k", "2")
     val v2 = vers()
@@ -305,25 +304,27 @@ class StoreSpec extends SparkSpec {
     // commits; the retain-th prunes v
     val dir = tmpDir("kv")
     val retain = 3
-    val kv = new KvStore(spark, dir, retain)
-    kv.set("k", "pinned")
-    // success side: pin, then storm retain-1 commits — the pinned
-    // snapshot must still read whole (and see the OLD value)
-    val pinnedOk = kv.read
-    (1 until retain).foreach(i => kv.set("k", s"storm$i"))
-    assert(pinnedOk.where($"key" === "k").select("value")
-      .as[String].collect().toSeq == Seq("pinned"))
-    // failure side: pin again, storm retain commits — the pinned version
-    // dir is pruned and the stale snapshot read fails (a LIVE reader
-    // re-lists via the retry; only a reader clinging to the dead pin
-    // loses)
-    val pinnedGone = kv.read
-    (0 until retain).foreach(i => kv.set("k", s"storm2$i"))
-    intercept[Exception] {
-      pinnedGone.where($"key" === "k").collect()
-    }
-    // the store itself is fine — a fresh (re-listing) read sees the tail
-    assert(kv.get("k").contains(s"storm2${retain - 1}"))
+    val reader = new KvStore(spark, dir, retain)
+    val writer = new KvStore(spark, dir, retain)
+    writer.set("k", "pinned")
+    // storm `n` commits right after the reader's FIRST pin; count pins
+    var pins = 0
+    def stormAfterFirstPin(n: Int, tag: String): Unit =
+      reader.afterPin = () => {
+        pins += 1
+        if (pins == 1) (0 until n).foreach(i => writer.set("k", s"$tag$i"))
+      }
+    try {
+      // success side: retain-1 commits after the pin — the pinned
+      // snapshot still reads whole (and sees the OLD value)
+      stormAfterFirstPin(retain - 1, "storm")
+      assert(reader.get("k").contains("pinned") && pins == 1)
+      // failure side: retain commits prune the pinned version; the
+      // reader loses that snapshot and re-lists onto the new tail
+      pins = 0
+      stormAfterFirstPin(retain, "storm2")
+      assert(reader.get("k").contains(s"storm2${retain - 1}") && pins == 2)
+    } finally reader.afterPin = () => ()
   }
 
   test("kv reader outliving the retention window fails LOUDLY naming the " +
@@ -355,5 +356,14 @@ class StoreSpec extends SparkSpec {
     }
     try assert(reader.get("k").contains(s"c$burst"))
     finally reader.afterPin = () => ()
+  }
+
+  test("kv refuses the legacy parquet layout instead of reading it as empty") {
+    // an empty read would drop the sync checkpoint and re-backfill into a
+    // non-empty log table
+    val dir = tmpDir("kv")
+    assert(new java.io.File(dir, "kv/v1700000000000").mkdirs())
+    val e = intercept[java.io.IOException](new KvStore(spark, dir))
+    assert(e.getMessage.contains("old parquet layout"))
   }
 }

@@ -160,29 +160,30 @@ class TxCdcSpec extends SparkSpec {
     "between its list and its read") {
     // the poller lists the newest kv version then reads it non-atomically;
     // a committer storm can prune the listed version in that gap. Drive
-    // the race DETERMINISTICALLY through the afterList seam: the first two
-    // polls lose their listed version to a burst that burns the whole kv
-    // retention window, the third reads clean — the retry must deliver the
-    // newest manifest, never fail the trigger
+    // the race DETERMINISTICALLY through the poller's KvStore afterPin
+    // seam: the first two polls lose their listed version to a burst that
+    // burns the whole kv retention window, the third reads clean — the
+    // retry must deliver the newest manifest, never fail the trigger
     val root = tmpDir("txcdc-storm")
     val t = new TxLogTable(spark, root, "fstorm")
     t.storeLogs(mkLogs(0, 1))
-    val kvDir = s"$root/txlogs_meta/filter_hash=fstorm/kv"
+    val stream = new graft.stream.TxCdcMicroBatchStream(root, "fstorm", None)
     var bursts = 0
-    graft.stream.TxManifests.afterList = () => if (bursts < 2) {
+    stream.manifests.afterPin = () => if (bursts < 2) {
       bursts += 1
       // each append = one kv commit; the default window is 4, so 4
       // commits prune the version the poller just listed
       (0 until 4).foreach(_ => t.storeLogs(mkLogs(2, 2)): Unit)
     }
     try {
-      val v = graft.stream.TxManifests.currentVersion(kvDir)
+      val v = stream.latestOffset()
       assert(bursts == 2, "the storm seam must have fired and pruned twice")
-      assert(v == t.version(),
+      assert(v == graft.stream.VersionOffset(t.version()),
         "the retried poll must pin the newest committed manifest")
-      val retained = graft.stream.TxManifests.retainedByVersion(kvDir)
-      assert(retained.contains(v))
-    } finally graft.stream.TxManifests.afterList = () => ()
+      // planning reads the retained manifests through the same store
+      assert(stream.planInputPartitions(graft.stream.VersionOffset(0L), v)
+        .nonEmpty)
+    } finally stream.manifests.afterPin = () => ()
   }
 
   test("a version that aged out of retention fails the stream loudly") {

@@ -565,7 +565,7 @@ class TxStoreSpec extends SparkSpec {
     } finally pool.shutdown()
   }
 
-  test("KvStore compare-and-set aborts on a stale expected version or a live claim") {
+  test("KvStore compare-and-set aborts on a stale expected version") {
     val kv = new graft.store.KvStore(spark, tmpDir("kvcas"))
     val (_, v0) = kv.getWithVersion("x")
     assert(v0 == 0L)
@@ -579,19 +579,6 @@ class TxStoreSpec extends SparkSpec {
     intercept[graft.store.ConcurrentCommitException] {
       kv.setAll(Map("x" -> "3"), expectedVersion = Some(v1))
     }
-    assert(kv.get("x").contains("2"))
-    // a live claim from another writer blocks the same advance...
-    val claimDir = kv.read.inputFiles.head
-      .replaceAll("/v[0-9]+/.*$", "")
-    val claim = new java.io.File(
-      new java.net.URI(s"$claimDir/cas$v2.claim").getPath)
-    assert(claim.createNewFile())
-    intercept[graft.store.ConcurrentCommitException] {
-      kv.setAll(Map("x" -> "3"), expectedVersion = Some(v2))
-    }
-    // ...until it goes stale, after which the advance proceeds
-    Thread.sleep(10)
-    kv.setAll(Map("x" -> "3"), expectedVersion = Some(v2), claimStaleMs = 1L)
-    assert(kv.get("x").contains("3"))
+    assert(kv.getWithVersion("x") == (Some("2"), v2))
   }
 }

@@ -2,53 +2,34 @@ package graft.store
 
 import java.net.URI
 
-import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
-import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.hadoop.util.Progressable
+import org.apache.hadoop.fs.RawLocalFileSystem
 
 import graft.SparkSpec
 
-/** A filesystem whose "exclusive" create is deliberately NON-ATOMIC for
-  * `.claim` files: a second claimant silently clobbers the first — the
-  * worst case of a local FS / eventually-consistent store whose
-  * `create(overwrite=false)` is check-then-act and the check raced.
-  * Everything else delegates to the local filesystem, so Spark reads and
-  * writes through it unchanged.
+/** The local filesystem under a scheme with no `AbstractFileSystem`
+  * binding, so Spark's checkpoint file manager falls back to its
+  * FileSystem-based implementation: there the no-overwrite commit rename
+  * is check-then-act (an `exists` probe, then a rename that would clobber)
+  * — the shape of an object store or a local FS without atomic rename.
   */
 class RacyFileSystem extends RawLocalFileSystem {
   override def getScheme: String = "racy"
   override def getUri: URI = URI.create("racy:///")
-  private def racy(f: Path, overwrite: Boolean): Boolean =
-    !overwrite && f.getName.endsWith(".claim")
-
-  // RawLocalFileSystem implements BOTH create overloads directly (the
-  // permission one does not funnel through the other) — inject into each
-  override def create(f: Path, permission: FsPermission, overwrite: Boolean,
-      bufferSize: Int, replication: Short, blockSize: Long,
-      progress: Progressable): FSDataOutputStream =
-    super.create(f, permission, overwrite || racy(f, overwrite), bufferSize,
-      replication, blockSize, progress) // lost-claim injection: clobbers
-  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
-      replication: Short, blockSize: Long,
-      progress: Progressable): FSDataOutputStream =
-    super.create(f, overwrite || racy(f, overwrite), bufferSize,
-      replication, blockSize, progress)
 }
 
 /** Contract test for [[KvStore]]'s compare-and-set commit protocol
-  * against BOTH filesystem contracts — the same deterministic
-  * interleaving (writer B acquires the claim and re-validates; writer A
-  * then runs to completion; B resumes), driven through the no-monitor
-  * seam so nothing leans on the same-JVM lock:
+  * against BOTH filesystem contracts. A version's claim is the version
+  * file itself, created without overwrite. Both cases run the same
+  * deterministic interleaving (writer B validates its snapshot; writer A
+  * then runs to completion; B resumes and writes), driven through the
+  * no-monitor seam so nothing leans on the same-JVM lock:
   *
-  *  - atomic exclusive create (HDFS semantics; the plain local FS is
-  *    atomic under this single-threaded schedule): A cannot even claim —
-  *    mutual exclusion holds at the claim;
-  *  - NON-atomic exclusive create ([[RacyFileSystem]]): both writers
-  *    "win" the claim, but the loser detects the winner's committed
-  *    target version and aborts with [[ConcurrentCommitException]] —
-  *    a lost CLAIM is never a lost UPDATE, and the caller's rebase loop
-  *    handles the rest.
+  *  - atomic exclusive create (the local FS through `FileContext`): the
+  *    version A committed excludes B;
+  *  - NON-atomic exclusive create ([[RacyFileSystem]]): B detects A's
+  *    committed version before its check-then-act rename and aborts with
+  *    [[ConcurrentCommitException]] — a lost claim is never a lost
+  *    update, and the caller's rebase loop handles the rest.
   */
 class ClaimContractSpec extends SparkSpec {
 
@@ -60,7 +41,7 @@ class ClaimContractSpec extends SparkSpec {
     val (_, v1) = kvA.getWithVersion("k")
     var aErr: Option[Throwable] = None
     kvB.beforeWrite = () => {
-      // B holds (or believes it holds) the claim; A races to completion
+      // B validated its snapshot; A races to completion before B writes
       try kvA.setAllNoMonitor(Map("k" -> "A"), Some(v1))
       catch { case t: Throwable => aErr = Some(t) }
     }
@@ -73,11 +54,11 @@ class ClaimContractSpec extends SparkSpec {
   test("atomic exclusive create: the claim alone mutually excludes") {
     val dir = tmpDir("claim")
     val (aErr, bErr, kv) = interleave(dir, dir)
-    // A lost at the CLAIM (B's claim file exists, create(false) throws)
-    assert(aErr.exists(_.isInstanceOf[ConcurrentCommitException]),
-      s"writer A should have lost the claim, got $aErr")
-    assert(bErr.isEmpty, s"writer B held the claim and must commit: $bErr")
-    assert(kv.get("k").contains("B"))
+    // A created the next version first; B's create of it must fail
+    assert(aErr.isEmpty, s"writer A committed first and must win: $aErr")
+    assert(bErr.exists(_.isInstanceOf[ConcurrentCommitException]),
+      s"writer B should have lost the version, got $bErr")
+    assert(kv.get("k").contains("A"), "the winner's update must survive")
   }
 
   test("non-atomic exclusive create: lost claim is detected at the target, never a lost update") {
@@ -85,9 +66,9 @@ class ClaimContractSpec extends SparkSpec {
     conf.set("fs.racy.impl", classOf[RacyFileSystem].getName)
     val dir = "racy://" + tmpDir("claim")
     val (aErr, bErr, kv) = interleave(dir, dir)
-    // BOTH writers won the racy claim; A committed first; B must detect
-    // A's committed target and abort — not overwrite it
-    assert(aErr.isEmpty, s"writer A clobbered the claim and must commit: $aErr")
+    // A committed first; B must detect A's committed target and abort —
+    // not rename over it
+    assert(aErr.isEmpty, s"writer A committed first and must win: $aErr")
     assert(bErr.exists(_.isInstanceOf[ConcurrentCommitException]),
       s"writer B must detect the conflict at the target, got $bErr")
     assert(bErr.get.getMessage.contains("already committed"),
