@@ -1,14 +1,20 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference, RowOrdering, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.LongType
 
 import graft.model.FilterConfig
 
 /** Parity operators from SURVEY.md §2, expressed as composable DataFrame
   * transformations. Each is a pure logical-plan builder — Catalyst handles
-  * pushdown/pruning; nothing here materializes data on the driver.
+  * pushdown/pruning; nothing here materializes data on the driver, except
+  * [[withAppendIndexes]] on a batch whose rows are already there.
   *
   * Scale notes (100 TB design intent) are on each op; the short version:
   * filters/projections are embarrassingly parallel, the only genuinely
@@ -84,9 +90,11 @@ object LogOps {
     * per-partition counts → cumulative offsets turn local positions into
     * the global consecutive sequence `base, base+1, …` — two narrow passes
     * (count job + assignment pass), NO single-partition window. This is
-    * the production append path: a 20,000-block backfill batch
-    * (README.md:58 scale) fans out over the cluster instead of funneling
-    * through one task.
+    * [[withAppendIndexes]]' path for every batch not already held on the
+    * driver (parquet scans, stream micro-batches): a 20,000-block backfill
+    * batch (README.md:58 scale) fans out over the cluster instead of
+    * funneling through one task. It costs a range-sampling job and a
+    * count job before the batch's own write.
     *
     * Rows equal on every `orderCols` key are interchangeable, so which of
     * them gets which index is immaterial (and range-boundary placement of
@@ -114,6 +122,79 @@ object LogOps {
       org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (base + i))
     }
     spark.createDataFrame(rdd, schema)
+  }
+
+  /** The order every store assigns append indices in. `tx_hash` makes the
+    * assignment deterministic when a tx emits several logs (same
+    * block_num + tx_index); rows equal on all three are interchangeable,
+    * so which of them gets which index is immaterial.
+    */
+  private val appendOrder: Seq[String] = Seq("block_num", "tx_index", "tx_hash")
+
+  /** A log batch after index assignment: `rows` is the batch plus
+    * `indx = base … base+n-1`; `minBlock`/`maxBlock` bound its
+    * `block_num` (both 0 when `n == 0`).
+    */
+  final case class IndexedBatch(
+      rows: DataFrame, n: Long, minBlock: Long, maxBlock: Long)
+
+  /** S8/W1 — how every store ([[graft.store.LogTable]],
+    * [[graft.store.TxLogTable]], [[graft.store.JdbcLogStore]]) gives an
+    * append batch its indices `base, base+1, …` in `(block_num, tx_index,
+    * tx_hash)` order; `write` persists the indexed rows and its result is
+    * returned.
+    *
+    * The path follows from the batch itself, not from an option:
+    *  - a batch whose optimized plan is a `LocalRelation` (the JSON-RPC
+    *    provider's parse, the sync tail's collected block) is already on
+    *    the driver. Its rows are sorted there with Spark's own ordering
+    *    (ascending, nulls first, strings by UTF-8 bytes), numbered, and
+    *    handed to `write` as one single-partition `LocalRelation`: no job
+    *    before the write, and the write is one task and one file;
+    *  - any other batch takes [[withAppendIndexRanged]]; the indexed frame
+    *    is persisted so the write does not re-evaluate the batch, `n` and
+    *    the block bounds come from one aggregate over it, and the cache is
+    *    released in a `finally` whether or not `write` succeeds.
+    */
+  def withAppendIndexes[A](batch: DataFrame, base: Long)(
+      write: IndexedBatch => A): A =
+    batch.queryExecution.optimizedPlan match {
+      case local: LocalRelation => write(indexLocal(batch, local, base))
+      case _ =>
+        val indexed =
+          withAppendIndexRanged(batch, base, appendOrder.map(col)).persist()
+        try {
+          val s = indexed.agg(count(lit(1)),
+            min(col("block_num").cast("long")),
+            max(col("block_num").cast("long"))).head()
+          val n = s.getLong(0)
+          write(if (n == 0L) IndexedBatch(indexed, 0L, 0L, 0L)
+            else IndexedBatch(indexed, n, s.getLong(1), s.getLong(2)))
+        } finally indexed.unpersist()
+    }
+
+  private def indexLocal(batch: DataFrame, local: LocalRelation,
+      base: Long): IndexedBatch = {
+    val out = local.output
+    def at(name: String): Int = {
+      val i = out.indexWhere(_.name.equalsIgnoreCase(name))
+      require(i >= 0, s"append batch has no $name column: ${batch.columns.mkString(",")}")
+      i
+    }
+    val ordering = RowOrdering.create(
+      appendOrder.map(k => SortOrder(out(at(k)), Ascending)), out)
+    val sorted = local.data.sorted(ordering)
+    val types = out.map(_.dataType)
+    val rows = sorted.zipWithIndex.map { case (r, i) =>
+      InternalRow.fromSeq(r.toSeq(types) :+ (base + i))
+    }
+    val b = at("block_num")
+    val blocks = sorted.filterNot(_.isNullAt(b))
+      .map(_.get(b, types(b)).asInstanceOf[Number].longValue())
+    val indexed = Bridge.ofRows(batch.sparkSession, LocalRelation(
+      out :+ AttributeReference("indx", LongType, nullable = false)(), rows))
+    IndexedBatch(indexed.coalesce(1), rows.length.toLong,
+      blocks.headOption.getOrElse(0L), blocks.lastOption.getOrElse(0L))
   }
 
   /** A2/W4 — next append index = max(indx)+1, empty → 0

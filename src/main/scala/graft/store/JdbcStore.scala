@@ -38,8 +38,8 @@ trait KeyValueStore {
   * is [[TxLogTable]]'s job). Reads still surface as DataFrames through
   * `spark.read.jdbc` with predicate pushdown and INDX-partitioned
   * parallel scans, so downstream operators are backend-agnostic; writes
-  * go through Spark's distributed JDBC sink after the same ranged
-  * two-pass index assignment every backend uses.
+  * go through Spark's JDBC sink after the same index assignment every
+  * backend uses.
   */
 object JdbcStore {
   private[store] def connect(url: String): Connection = {
@@ -257,10 +257,12 @@ final class JdbcLogStore(spark: SparkSession, url: String,
     } finally st.close()
   }
 
-  /** W1/S8 — same ranged two-pass index assignment as every backend,
-    * then Spark's distributed JDBC sink appends (each partition writes
-    * its own batch inserts; the INDX primary key makes a double-fire
-    * loudly violate a constraint instead of silently duplicating).
+  /** W1/S8 — the index assignment every backend uses
+    * ([[graft.ops.LogOps.withAppendIndexes]]), then Spark's distributed
+    * JDBC sink appends (each partition writes its own batch inserts — a
+    * driver-held batch is one partition; the INDX primary key makes a
+    * double-fire loudly violate a constraint instead of silently
+    * duplicating).
     *
     * The distributed sink commits per partition on separate connections,
     * so a mid-job failure (or a task retry dying on the PK violation
@@ -277,54 +279,51 @@ final class JdbcLogStore(spark: SparkSession, url: String,
     */
   override def storeLogs(batch: DataFrame): Long = {
     val base = lastIndex()
-    val indexed = graft.ops.LogOps.withAppendIndexRanged(batch, base,
-      Seq(col("block_num"), col("tx_index"), col("tx_hash")))
-    val n = indexed
-      .select(
-        col("indx").as("INDX"), col("tx_index").as("TX_INDEX"),
-        col("tx_hash").as("TX_HASH"), col("block_num").as("BLOCK_NUM"),
-        col("block_hash").as("BLOCK_HASH"), col("address").as("ADDRESS"),
-        concat_ws(",", col("topics")).as("TOPICS_CSV"),
-        col("data").as("LOG_DATA"))
-      .persist()
-    try {
-      val count = n.count()
-      if (count == 0L) return base
-      try n.write.mode("append").jdbc(url, table, jdbcProps)
-      catch {
-        case t: Throwable =>
-          // The repair runs as soon as the driver observes the failure,
-          // but a CANCELLED job's straggler task can still commit its
-          // partition batch AFTER the first DELETE lands — re-introducing
-          // the durable INDX gap the repair exists to prevent. Re-check
-          // MAX(INDX) after each DELETE and repeat until no row at or
-          // above the watermark survives (bounded: tasks are finite and
-          // each pass only re-fires while stragglers keep landing).
-          try withConn(url) { c =>
-            val del = c.prepareStatement(
-              s"DELETE FROM $table WHERE INDX >= ?")
-            val chk = c.prepareStatement(
-              s"SELECT MAX(INDX) FROM $table WHERE INDX >= ?")
-            try {
-              var pass = 0
-              var dirty = true
-              while (dirty && pass < 64) {
-                del.setLong(1, base); del.executeUpdate(): Unit
-                Thread.sleep(if (pass == 0) 0L else 50L)
-                chk.setLong(1, base)
-                val rs = chk.executeQuery()
-                rs.next()
-                rs.getLong(1)
-                dirty = !rs.wasNull()
-                rs.close()
-                pass += 1
-              }
-            } finally { del.close(); chk.close() }
-          } catch { case r: Throwable => t.addSuppressed(r) }
-          throw t
+    graft.ops.LogOps.withAppendIndexes(batch, base) { b =>
+      if (b.n == 0L) base
+      else {
+        val rows = b.rows.select(
+          col("indx").as("INDX"), col("tx_index").as("TX_INDEX"),
+          col("tx_hash").as("TX_HASH"), col("block_num").as("BLOCK_NUM"),
+          col("block_hash").as("BLOCK_HASH"), col("address").as("ADDRESS"),
+          concat_ws(",", col("topics")).as("TOPICS_CSV"),
+          col("data").as("LOG_DATA"))
+        try rows.write.mode("append").jdbc(url, table, jdbcProps)
+        catch {
+          case t: Throwable =>
+            // The repair runs as soon as the driver observes the failure,
+            // but a CANCELLED job's straggler task can still commit its
+            // partition batch AFTER the first DELETE lands — re-introducing
+            // the durable INDX gap the repair exists to prevent. Re-check
+            // MAX(INDX) after each DELETE and repeat until no row at or
+            // above the watermark survives (bounded: tasks are finite and
+            // each pass only re-fires while stragglers keep landing).
+            try withConn(url) { c =>
+              val del = c.prepareStatement(
+                s"DELETE FROM $table WHERE INDX >= ?")
+              val chk = c.prepareStatement(
+                s"SELECT MAX(INDX) FROM $table WHERE INDX >= ?")
+              try {
+                var pass = 0
+                var dirty = true
+                while (dirty && pass < 64) {
+                  del.setLong(1, base); del.executeUpdate(): Unit
+                  Thread.sleep(if (pass == 0) 0L else 50L)
+                  chk.setLong(1, base)
+                  val rs = chk.executeQuery()
+                  rs.next()
+                  rs.getLong(1)
+                  dirty = !rs.wasNull()
+                  rs.close()
+                  pass += 1
+                }
+              } finally { del.close(); chk.close() }
+            } catch { case r: Throwable => t.addSuppressed(r) }
+            throw t
+        }
+        base + b.n
       }
-      base + count
-    } finally n.unpersist()
+    }
   }
 
   /** S9 — transactional truncation (`DELETE WHERE indx >= $1`,

@@ -17,11 +17,14 @@ import org.apache.spark.sql.functions._
   *  - data lands partitioned by `block_range` (block_num div 10_000) so both
   *    range scans (S1) and reorg truncation (S9) touch only the tail
   *    partition directories, never the full history;
-  *  - appends assign indices as `base + position within the batch` via the
-  *    ranged two-pass scheme (repartitionByRange + per-partition counts →
-  *    offsets, [[graft.ops.LogOps.withAppendIndexRanged]]) — the global
-  *    sequence comes from the checkpointed LastIndex and NO single-partition
-  *    sort exists anywhere on the append path, however large the batch;
+  *  - appends assign indices as `base + position within the batch`
+  *    ([[graft.ops.LogOps.withAppendIndexes]]), `base` being the table's
+  *    LastIndex. A batch already on the driver (the JSON-RPC provider's
+  *    parse, a sync-tail block) is sorted and numbered there and written
+  *    by one job; any other batch takes the ranged two-pass scheme
+  *    (repartitionByRange + per-partition counts → offsets), so no
+  *    single-partition sort exists on the append path however large the
+  *    batch;
   *  - truncation rewrites only the partitions holding `indx >= n` — an
   *    engine with a transactional table format (Delta/Iceberg) would issue a
   *    metadata-only DELETE; plain parquet needs the rewrite, and reorgs only
@@ -119,31 +122,22 @@ final class LogTable(spark: SparkSession, root: String, filterHash: String,
     read.agg(coalesce(max(col("indx")) + 1L, lit(0L))).head().getLong(0)
 
   /** S8/W1 — append a batch of logs, assigning consecutive indices
-    * `base, base+1, …` in (block_num, tx_index) order
-    * (ref `postgresql_store.go:110-150`). One atomic parquet append per
+    * `base, base+1, …` in (block_num, tx_index, tx_hash) order
+    * (ref `postgresql_store.go:110-150`) through
+    * [[graft.ops.LogOps.withAppendIndexes]]. One atomic parquet append per
     * batch = the reference's per-batch transaction.
     */
   def storeLogs(batch: DataFrame): Long = {
     val base = lastIndex()
-    // tx_hash in the order makes the assignment deterministic when a tx
-    // emits several logs (same block_num+tx_index); rows identical in all
-    // three are interchangeable, so any tie-break there is immaterial.
-    // Ranged two-pass assignment (repartitionByRange + per-partition
-    // counts → offsets) — no single-partition global window, so a
-    // 20,000-block backfill batch fans out instead of funneling through
-    // one task (see LogOps.withAppendIndexRanged).
-    val indexed = graft.ops.LogOps.withAppendIndexRanged(batch, base,
-        Seq(col("block_num"), col("tx_index"), col("tx_hash")))
-      .withColumn("block_range", col("block_num") / lit(blocksPerRange))
-      .withColumn("block_range", floor(col("block_range")))
-      .persist()
-    val n = indexed.count() // single evaluation of the (possibly remote) batch
-    indexed.write
-      .mode(SaveMode.Append)
-      .partitionBy("block_range")
-      .parquet(dir)
-    indexed.unpersist()
-    base + n
+    graft.ops.LogOps.withAppendIndexes(batch, base) { b =>
+      b.rows
+        .withColumn("block_range", floor(col("block_num") / lit(blocksPerRange)))
+        .write
+        .mode(SaveMode.Append)
+        .partitionBy("block_range")
+        .parquet(dir)
+      base + b.n
+    }
   }
 
   /** S9 — RemoveLogs(n): delete every log with `indx >= n`

@@ -68,9 +68,11 @@ trait LogStore {
   * Scale: the manifest is O(live commits) driver-side metadata (bounded
   * by compaction), never row data; reads prune whole directories by the
   * manifest's [minIndx, effective-max] (and [minBlock, maxBlock]) before
-  * parquet footer stats prune within them; appends use the same ranged
-  * two-pass index assignment as [[LogTable.storeLogs]] — no
-  * single-partition stage anywhere.
+  * parquet footer stats prune within them; appends assign indices
+  * through the same [[graft.ops.LogOps.withAppendIndexes]] as
+  * [[LogTable.storeLogs]] — a driver-held batch is one write job plus the
+  * manifest commit, any other batch takes the ranged two-pass scheme with
+  * no single-partition stage.
   */
 final class TxLogTable(spark: SparkSession, root: String, filterHash: String,
     val blocksPerRange: Long = 10000L,
@@ -288,28 +290,28 @@ final class TxLogTable(spark: SparkSession, root: String, filterHash: String,
     while (true) {
       val (m, kv) = current()
       val base = m.lastIndex
-      val indexed = graft.ops.LogOps.withAppendIndexRanged(batch, base,
-          Seq(col("block_num"), col("tx_index"), col("tx_hash")))
-        .withColumn("block_range",
-          floor(col("block_num") / lit(blocksPerRange)))
-        .select(logSchema.fieldNames.map(col): _*)
-        .persist()
       try {
-        val n = indexed.count()
-        if (n == 0L) return base
-        val name = s"c${System.nanoTime()}"
-        indexed.write.parquet(s"$dataDir/$name")
-        if (crashAt == "after-data-write") throw new InjectedCrash(crashAt)
-        beforeCommit()
-        val stats = indexed.agg(min("block_num"), max("block_num")).head()
-        commit(Manifest(base + n, m.entries :+ Entry(name, base,
-          base + n - 1, stats.getLong(0), stats.getLong(1), Long.MaxValue),
-          m.version + 1, "append"), kv)
-        return base + n
+        return graft.ops.LogOps.withAppendIndexes(batch, base) { b =>
+          if (b.n == 0L) base
+          else {
+            val name = s"c${System.nanoTime()}"
+            b.rows
+              .withColumn("block_range",
+                floor(col("block_num") / lit(blocksPerRange)))
+              .select(logSchema.fieldNames.map(col): _*)
+              .write.parquet(s"$dataDir/$name")
+            if (crashAt == "after-data-write") throw new InjectedCrash(crashAt)
+            beforeCommit()
+            commit(Manifest(base + b.n, m.entries :+ Entry(name, base,
+              base + b.n - 1, b.minBlock, b.maxBlock, Long.MaxValue),
+              m.version + 1, "append"), kv)
+            base + b.n
+          }
+        }
       } catch {
         case _: ConcurrentCommitException if attempt < 16 => attempt += 1
         // the stale `name` dir is unreferenced garbage for vacuum
-      } finally indexed.unpersist()
+      }
     }
     sys.error("unreachable")
   }

@@ -129,10 +129,12 @@ final class JsonRpcClient(
   *
   * Scale shape: each `getLogs` answer is bounded by the node's own result
   * cap (the 10k refusal the AIMD loop adapts to), so materializing a batch
-  * on the driver before parallelizing is bounded-by-protocol — the same
-  * shape as the reference, where every batch crosses one RPC connection.
-  * The distributed work (filter residue, dedup, append-index, reorg
-  * retraction) happens downstream in [[LogTable]]/[[Syncer]] Spark jobs.
+  * on the driver is bounded-by-protocol — the same shape as the
+  * reference, where every batch crosses one RPC connection. Answers come
+  * back as `LocalRelation` frames, so the store sorts and numbers them on
+  * the driver and writes each with one job
+  * ([[graft.ops.LogOps.withAppendIndexes]]); reorg retraction and the
+  * queries downstream run as distributed Spark jobs.
   */
 final class HttpRpcProvider(
     spark: SparkSession,

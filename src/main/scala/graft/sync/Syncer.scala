@@ -72,10 +72,15 @@ final class ProviderScanLocator(provider: Provider, headHint: Long)
   * sizing, chain-identity guard, checkpoint/resume and reorg retraction —
   * the reference's `tracker.go` control plane re-expressed over Spark jobs.
   *
-  * Execution shape at scale: each AIMD batch is one distributed Spark job
-  * (scan → filter pushdown → append); the driver loop only carries the
-  * batch-size/checkpoint control state, exactly like the reference's sync
-  * goroutine — no data ever flows through the driver.
+  * Execution shape at scale: each AIMD batch is one append of whatever
+  * the provider returns, and the driver loop carries the
+  * batch-size/checkpoint control state, like the reference's sync
+  * goroutine. A distributed provider's batch (a parquet scan) stays
+  * distributed through the store's ranged index assignment. Rows reach
+  * the driver only where they are bounded by construction: a JSON-RPC
+  * answer (capped by the node) and a tail block's logs, which are
+  * collected once so the store appends them with one write job
+  * ([[graft.ops.LogOps.withAppendIndexes]]).
   */
 final class Syncer(
     spark: SparkSession,
@@ -324,15 +329,18 @@ final class Syncer(
         return SyncReport(batches + r.batches, added + r.added,
           r.removed, r.headNumber)
       }
-      // T8: tolerate a transiently-unsynced node on the hot tail. PIN the
-      // fetched rows inside the retry — storeLogs re-evaluates its input,
-      // and an unpinned provider DataFrame would hit the provider again
-      // OUTSIDE the retry (unprotected, and possibly returning different
-      // rows than were counted). The tail block's logs are small by
-      // construction (one block).
+      // T8: tolerate a transiently-unsynced node on the hot tail. Collect
+      // the fetched rows inside the retry — storeLogs evaluates its input,
+      // and a lazy provider DataFrame would hit the provider again OUTSIDE
+      // the retry (unprotected, and possibly returning different rows than
+      // were counted). The tail block's logs are small by construction
+      // (one block); rebuilt as a LocalRelation they append with no pin
+      // or count job.
       val (logs, c) = withRetry(s"logs of block ${b.hash}") {
-        val df = provider.getLogsByHash(b.hash, filter).localCheckpoint(true)
-        (df, df.count())
+        val df = provider.getLogsByHash(b.hash, filter)
+        val rows = df.collect()
+        (spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema),
+          rows.length.toLong)
       }
       added += c
       table.storeLogs(logs)
