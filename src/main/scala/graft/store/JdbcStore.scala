@@ -257,6 +257,21 @@ final class JdbcLogStore(spark: SparkSession, url: String,
     } finally st.close()
   }
 
+  /** The orphan/reorg cut point as one indexed aggregate on this store's
+    * own connection, like [[lastIndex]] — no Spark scan.
+    */
+  override def firstIndexAbove(block: Long): Option[Long] = withConn(url) { c =>
+    val ps = c.prepareStatement(
+      s"SELECT MIN(INDX) FROM $table WHERE BLOCK_NUM > ?")
+    try {
+      ps.setLong(1, block)
+      val rs = ps.executeQuery()
+      rs.next()
+      val m = rs.getLong(1)
+      if (rs.wasNull()) None else Some(m)
+    } finally ps.close()
+  }
+
   /** W1/S8 — the index assignment every backend uses
     * ([[graft.ops.LogOps.withAppendIndexes]]), then Spark's distributed
     * JDBC sink appends (each partition writes its own batch inserts — a

@@ -1,5 +1,11 @@
 package graft.store
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.BlockMetaData
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,6 +31,11 @@ import org.apache.spark.sql.functions._
   *    (repartitionByRange + per-partition counts → offsets), so no
   *    single-partition sort exists on the append path however large the
   *    batch;
+  *  - the watermark probes ([[lastIndex]], [[firstIndexAbove]]) read the
+  *    `indx`/`block_num` min/max every parquet footer already carries: a
+  *    listing plus one footer read per file not seen before, no Spark
+  *    job. Only a file without usable statistics sends a probe back to
+  *    the table scan;
   *  - truncation rewrites only the partitions holding `indx >= n` — an
   *    engine with a transactional table format (Delta/Iceberg) would issue a
   *    metadata-only DELETE; plain parquet needs the rewrite, and reorgs only
@@ -34,6 +45,7 @@ import org.apache.spark.sql.functions._
 final class LogTable(spark: SparkSession, root: String, filterHash: String,
     /** Blocks per at-rest partition directory. */
     val blocksPerRange: Long = 10000L) extends LogStore {
+  import LogTable.Bounds
 
   private val dir = s"$root/logs/filter_hash=$filterHash"
 
@@ -72,13 +84,15 @@ final class LogTable(spark: SparkSession, root: String, filterHash: String,
     recoverPendingTruncation(fs)
   }
 
-  private def readNoRecover: DataFrame =
-    if (!new java.io.File(dir).exists()) {
-      // recoverCompaction has already rolled any crashed swap forward or
-      // back, so a still-missing dir here is a genuinely fresh store —
-      // unless a trash sibling survived recovery (only possible if the
-      // heal itself failed), which must fail loudly, not read as empty
-      val self = new java.io.File(dir)
+  /** Whether the data dir exists. recoverCompaction has already rolled
+    * any crashed swap forward or back, so a still-missing dir is a
+    * genuinely fresh store — unless a trash sibling survived recovery
+    * (only possible if the heal itself failed), which must fail loudly,
+    * not read as empty.
+    */
+  private def dirExists: Boolean = {
+    val self = new java.io.File(dir)
+    self.exists() || {
       val siblings = Option(self.getParentFile)
         .flatMap(p => Option(p.listFiles()))
         .getOrElse(Array.empty[java.io.File])
@@ -88,8 +102,13 @@ final class LogTable(spark: SparkSession, root: String, filterHash: String,
         s"log table $dir missing but ${t.getPath} exists — a compaction " +
           "swap crashed mid-rename and self-heal failed; rename the trash " +
           "dir back to recover"))
-      emptyLogs
-    } else if (!hasParquetFiles(new java.io.File(dir))) {
+      false
+    }
+  }
+
+  private def readNoRecover: DataFrame =
+    if (!dirExists) emptyLogs
+    else if (!hasParquetFiles(new java.io.File(dir))) {
       // a reorg that truncates EVERY stored log leaves the dir with no
       // data files (only _SUCCESS markers); schema inference would throw,
       // bricking the store — that state is a legitimately empty table
@@ -117,9 +136,102 @@ final class LogTable(spark: SparkSession, root: String, filterHash: String,
 
   /** A2 — next append index (max+1, empty → 0); a driver-side Long because
     * it seeds the next batch's index range (ref `store/store.go:25-26`).
+    * Read from the data files' footers ([[fileBounds]]); the table scan
+    * runs only when some file lacks usable statistics.
     */
-  def lastIndex(): Long =
-    read.agg(coalesce(max(col("indx")) + 1L, lit(0L))).head().getLong(0)
+  def lastIndex(): Long = {
+    recoverPending()
+    fileBounds() match {
+      case Some(files) => files.map(_._2.maxIndx).maxOption.fold(0L)(_ + 1L)
+      case None =>
+        read.agg(coalesce(max(col("indx")) + 1L, lit(0L))).head().getLong(0)
+    }
+  }
+
+  /** From the data files' footer bounds; only a file whose block range
+    * straddles `block` is scanned. Without usable statistics this is the
+    * [[LogStore]] default scan.
+    */
+  override def firstIndexAbove(block: Long): Option[Long] = {
+    recoverPending()
+    fileBounds() match {
+      case Some(files) =>
+        LogStore.firstIndexAbove(block, files)(f =>
+          LogStore.Span(f._2.minIndx, f._2.minBlock, f._2.maxBlock)) { fs =>
+          spark.read.schema("indx LONG, block_num LONG")
+            .parquet(fs.map(_._1.toString): _*)
+        }
+      case None => super.firstIndexAbove(block)
+    }
+  }
+
+  /** Footer bounds by path, stamped with the file's (length, mtime); the
+    * bounds are None for a file without rows. Data files are immutable
+    * (an append adds files; truncation and compaction swap in newly
+    * written ones), so an entry stays valid while its stamp matches.
+    */
+  private val footers = new java.util.concurrent.ConcurrentHashMap[
+    String, ((Long, Long), Option[Bounds])]()
+
+  /** The bounds of every live data file that holds rows; None when some
+    * row group lacks either statistic or counts nulls in it, and the
+    * caller must scan. The listing skips `_`/`.`-prefixed names as
+    * Spark's file index does (`_SUCCESS`, `_temporary`, checksums).
+    */
+  private def fileBounds(): Option[Seq[(Path, Bounds)]] =
+    if (!dirExists) Some(Nil)
+    else {
+      val fs = new Path(dir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def live(p: Path): Seq[FileStatus] =
+        fs.listStatus(p).toSeq.flatMap { st =>
+          val name = st.getPath.getName
+          if (name.startsWith("_") || name.startsWith(".")) Nil
+          else if (st.isDirectory) live(st.getPath)
+          else Seq(st)
+        }
+      val files = live(new Path(dir))
+      footers.keySet.retainAll(files.map(_.getPath.toString).asJava)
+      val bounds =
+        files.map(st => footerBounds(st).map(_.map(st.getPath -> _)))
+      if (bounds.exists(_.isEmpty)) None else Some(bounds.flatMap(_.get))
+    }
+
+  /** One file's bounds, cached: Some(None) for a file without rows, None
+    * when a row-bearing row group lacks a usable statistic.
+    */
+  private def footerBounds(st: FileStatus): Option[Option[Bounds]] = {
+    val key = st.getPath.toString
+    val stamp = (st.getLen, st.getModificationTime)
+    Option(footers.get(key)).filter(_._1 == stamp).map(h => Some(h._2))
+      .getOrElse {
+        val b = readFooter(st)
+        b.foreach(x => footers.put(key, (stamp, x)))
+        b
+      }
+  }
+
+  private def readFooter(st: FileStatus): Option[Option[Bounds]] = {
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromStatus(st, spark.sparkContext.hadoopConfiguration))
+    val groups =
+      try reader.getFooter.getBlocks.asScala.toSeq.filter(_.getRowCount > 0)
+      finally reader.close()
+    def range(g: BlockMetaData, column: String): Option[(Long, Long)] =
+      g.getColumns.asScala.find(_.getPath.toDotString == column)
+        .flatMap(c => Option(c.getStatistics))
+        .filter(s =>
+          s.hasNonNullValue && s.isNumNullsSet && s.getNumNulls == 0)
+        .map(s => (s.genericGetMin, s.genericGetMax))
+        .collect { case (lo: java.lang.Long, hi: java.lang.Long) =>
+          (lo.longValue, hi.longValue) }
+    val perGroup = groups.map(g => for {
+      (i0, i1) <- range(g, "indx")
+      (b0, b1) <- range(g, "block_num")
+    } yield Bounds(i0, i1, b0, b1))
+    if (perGroup.exists(_.isEmpty)) None
+    else Some(perGroup.flatten.reduceOption(_ merge _))
+  }
 
   /** S8/W1 — append a batch of logs, assigning consecutive indices
     * `base, base+1, …` in (block_num, tx_index, tx_hash) order
@@ -437,5 +549,15 @@ final class LogTable(spark: SparkSession, root: String, filterHash: String,
       // hash the address so the second dimension is dense + numeric;
       // pruning still works on the raw address column's file stats
       xxhash64(col("address")).bitwiseAND((1L << bits) - 1), bits)))
+  }
+}
+
+private object LogTable {
+  /** `indx` and `block_num` bounds over a data file's rows. */
+  final case class Bounds(minIndx: Long, maxIndx: Long,
+      minBlock: Long, maxBlock: Long) {
+    def merge(o: Bounds): Bounds = Bounds(math.min(minIndx, o.minIndx),
+      math.max(maxIndx, o.maxIndx), math.min(minBlock, o.minBlock),
+      math.max(maxBlock, o.maxBlock))
   }
 }

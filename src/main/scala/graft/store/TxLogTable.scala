@@ -13,14 +13,60 @@ import org.apache.spark.sql.types._
   *  - [[TxLogTable]] — a manifest-committed table where truncation and
   *    append are METADATA-ONLY commits (the Delta/Iceberg shape, built
   *    natively: this build deliberately adds no table-format dependency).
+  *
+  * The two watermark probes the sync loop runs on every pass,
+  * [[lastIndex]] and [[firstIndexAbove]], are answered from metadata the
+  * store already keeps (the manifest, parquet footers, a primary-key
+  * index) with no Spark job; only the trait default scans.
   */
 trait LogStore {
   def read: DataFrame
   def lastIndex(): Long
+
+  /** Smallest `indx` whose `block_num > block`; None when no stored log
+    * lies above `block`. The sync loop's orphan and reorg cut point: the
+    * store is truncated from here. This default scans [[read]].
+    */
+  def firstIndexAbove(block: Long): Option[Long] =
+    LogStore.minIndex(read.where(col("block_num") > block))
+
   def storeLogs(batch: DataFrame): Long
   def removeLogsFrom(n: Long): DataFrame
   def getLog(n: Long): DataFrame
   def compact(): Unit
+}
+
+private[store] object LogStore {
+  /** `min(indx)` of `rows`; None when it is empty. */
+  def minIndex(rows: DataFrame): Option[Long] = {
+    val r = rows.agg(min("indx")).head()
+    if (r.isNullAt(0)) None else Some(r.getLong(0))
+  }
+
+  /** A stored part's bounds (a data file, a manifest entry): its first
+    * visible index and a block range that contains every visible row's
+    * `block_num` (it may be wider).
+    */
+  final case class Span(minIndx: Long, minBlock: Long, maxBlock: Long)
+
+  /** [[LogStore.firstIndexAbove]] from per-part bounds: a part with
+    * `maxBlock <= block` holds nothing above `block`, and one with
+    * `minBlock > block` holds only rows above it, so its first index is
+    * `minIndx`. Only the straddling parts that could still lower that
+    * answer are scanned, through `scan`, so the common probe (nothing
+    * stored above the checkpoint) runs no Spark job.
+    */
+  def firstIndexAbove[A](block: Long, parts: Seq[A])(span: A => Span)(
+      scan: Seq[A] => DataFrame): Option[Long] = {
+    val (clear, straddling) = parts.filter(span(_).maxBlock > block)
+      .partition(span(_).minBlock > block)
+    val best = clear.map(span(_).minIndx).minOption
+    val todo = straddling.filter(p => best.forall(span(p).minIndx < _))
+    val scanned =
+      if (todo.isEmpty) None
+      else minIndex(scan(todo).where(col("block_num") > block))
+    (best.toSeq ++ scanned).minOption
+  }
 }
 
 /** Transactional log table: immutable per-commit parquet directories plus
@@ -262,9 +308,21 @@ final class TxLogTable(spark: SparkSession, root: String, filterHash: String,
   }
 
   /** O(1): the manifest carries the watermark — no scan, no max() job
-    * (contrast [[LogTable.lastIndex]], which aggregates the table).
+    * (contrast [[LogTable.lastIndex]], which lists the data files and
+    * reads each new file's footer once).
     */
   def lastIndex(): Long = manifest().lastIndex
+
+  /** From the manifest entries' bounds: every live entry's `minIndx` is
+    * visible (`minIndx < cap`), and its block bounds cover its visible
+    * rows. Only a straddling entry is scanned, with its cap applied.
+    */
+  override def firstIndexAbove(block: Long): Option[Long] =
+    LogStore.firstIndexAbove(block, manifest().entries)(e =>
+      LogStore.Span(e.minIndx, e.minBlock, e.maxBlock)) {
+      _.map(e => spark.read.schema(logSchema).parquet(path(e))
+        .where(col("indx") < e.cap)).reduce(_ unionByName _)
+    }
 
   def storeLogs(batch: DataFrame): Long = storeLogs(batch, crashAt = "")
 

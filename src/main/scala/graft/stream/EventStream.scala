@@ -393,9 +393,7 @@ object EventStream {
     val dels = rows.filter(_.action == "del")
     if (dels.nonEmpty) {
       val minNum = dels.map(_.number).min
-      val firstBad = table.read
-        .where(col("block_num") >= minNum).agg(min("indx")).head()
-      if (!firstBad.isNullAt(0)) table.removeLogsFrom(firstBad.getLong(0))
+      table.firstIndexAbove(minNum - 1).foreach(table.removeLogsFrom)
     }
     val adds = last.values.filter(_.action == "add").toSeq
     if (adds.nonEmpty) {

@@ -235,7 +235,7 @@ final class Syncer(
     var batches = 0L
     var appended = 0L
     // storeLogs returns the post-append lastIndex; successive differences
-    // count this pass's appends with ONE extra job up front, none per batch
+    // count this pass's appends from ONE watermark read up front
     var lastEnd = table.lastIndex()
     val startNs = System.nanoTime()
     while (current <= to) {
@@ -287,11 +287,10 @@ final class Syncer(
           sys.error("store is more advanced than the chain") // T9
         // crash recovery: a torn batch may have appended logs whose
         // checkpoint write never landed — drop everything beyond the
-        // checkpoint so the resume is idempotent (pushed-down probe,
-        // touches only the tail partitions)
-        val orphan = table.read.where(col("block_num") > last.number)
-          .agg(min("indx")).head()
-        if (!orphan.isNullAt(0)) table.removeLogsFrom(orphan.getLong(0))
+        // checkpoint so the resume is idempotent. The store answers the
+        // probe from its metadata (manifest, footer stats, index), so a
+        // clean restart runs no Spark job here
+        table.firstIndexAbove(last.number).foreach(table.removeLogsFrom)
         // re-check the checkpointed block's hash — reorg while offline?
         provider.getBlock(last.number) match {
           case Some(liveAtLast) if liveAtLast.hash != last.hash =>
@@ -381,12 +380,8 @@ final class Syncer(
       .flatMap(n => provider.getBlock(n))
     val res = Reconciler.reconcile(stored, liveAtStored, maxBlockBacklog)
     // truncate stored logs above the ancestor (S9) — retractions
-    val firstBad = table.read
-      .where(col("block_num") > res.ancestor)
-      .agg(min("indx")).head()
-    val removed =
-      if (firstBad.isNullAt(0)) 0L
-      else table.removeLogsFrom(firstBad.getLong(0)).count()
+    val removed = table.firstIndexAbove(res.ancestor)
+      .fold(0L)(table.removeLogsFrom(_).count())
     // reset the checkpoint to the common ancestor (prunes forked backlog
     // entries) and resync forward through the normal bulk+tail path —
     // this handles an arbitrarily long gap between ancestor and head.

@@ -8,9 +8,9 @@ import graft.store.{LogStore, LogTable, TxLogTable}
 /** Store-scale soak: measures the operations the transactional backend
   * exists for, against table size — evidence for the headline claim that
   * a [[TxLogTable]] reorg truncation is O(1) metadata while the journaled
-  * [[LogTable]] must rewrite the affected tail, and that the manifest
-  * watermark makes `lastIndex()` constant-time while the plain table
-  * aggregates a scan.
+  * [[LogTable]] must rewrite the affected tail. Neither backend scans
+  * for `lastIndex()`: tx reads its manifest, plain lists its data files
+  * and reads the footers it has not cached, so both stay flat.
   *
   * Protocol: for each table size N (rows), build BOTH backends by the
   * same chunked appends, then time (min of `reps`):
@@ -21,9 +21,9 @@ import graft.store.{LogStore, LogTable, TxLogTable}
   *   - `append`: one `batch`-row append (both backends use the same
   *     ranged two-pass index assignment — expected flat).
   *
-  * Healthy = tx truncate/last_index stay FLAT as N grows while the plain
-  * backend's truncate/last_index grow with the data; append stays flat
-  * for both. One JSON line on stdout; recorded in SOAK.md.
+  * Healthy = tx truncate stays FLAT as N grows while the plain backend's
+  * truncate grows with the data; last_index and append stay flat for
+  * both. One JSON line on stdout; recorded in SOAK.md.
   */
 object StoreSoak {
 
@@ -90,7 +90,7 @@ object StoreSoak {
         }.min
         val lastS = timeMin(reps)(t.lastIndex(): Unit)
         val appendS = (0 until reps).map { _ =>
-          val start = t.lastIndex() // outside the window (scan for plain)
+          val start = t.lastIndex() // outside the window
           val t0 = System.nanoTime()
           t.storeLogs(mkBatch(spark, start, batch)): Unit
           (System.nanoTime() - t0) / 1e9

@@ -363,4 +363,57 @@ class SyncerSpec extends SparkSpec {
       .filter(n => n % 3 == 1 && n % 2 == 1).map(_ => 5).sum
     assert(sync.table.read.count() == expected)
   }
+
+  test("a restart truncates logs whose checkpoint never landed, on all three backends") {
+    import graft.store._
+    // the checkpoint write after the 4th tail block's append throws: that
+    // block's logs are stored, the checkpoint still names the block before
+    final class CrashingKv(in: KeyValueStore, crashAt: Int) extends KeyValueStore {
+      private var checkpoints = 0
+      override def get(key: String) = in.get(key)
+      override def set(key: String, value: String) = in.set(key, value)
+      override def setAll(kvs: Map[String, String], drop: String => Boolean,
+          expectedVersion: Option[Long], claimStaleMs: Long): Unit = {
+        if (kvs.keys.exists(_.startsWith("lastBlock_"))) {
+          checkpoints += 1
+          if (checkpoints == crashAt)
+            throw new IllegalStateException("injected crash before checkpoint")
+        }
+        in.setAll(kvs, drop, expectedVersion, claimStaleMs)
+      }
+      override def listPrefix(prefix: String) = in.listPrefix(prefix)
+    }
+    val chain = MockChain.linear(30, n => 1 + (n % 3).toInt)
+    val provider = new MockProvider(spark, chain)
+    val hash = FilterConfig().hash
+    Seq("plain", "tx", "jdbc").foreach { kind =>
+      val root = tmpDir(s"torn-$kind")
+      val url = s"jdbc:derby:$root/db;create=true"
+      def store(): LogStore = kind match {
+        case "plain" => new LogTable(spark, root, hash)
+        case "tx" => new TxLogTable(spark, root, hash)
+        case _ => new JdbcLogStore(spark, url, hash)
+      }
+      def kv(): KeyValueStore =
+        if (kind == "jdbc") new JdbcKvStore(spark, url) else new KvStore(spark, root)
+      // checkpoint writes: 1 after the bulk batch (blocks 0-19), then one
+      // per tail block; the 4th is block 22's
+      val crashing = new Syncer(spark, provider, root, FilterConfig(),
+        storeOverride = Some(store()), kvOverride = Some(new CrashingKv(kv(), 4)))
+      intercept[IllegalStateException](crashing.sync())
+      assert(crashing.checkpoint().map(_.number).contains(21L), kind)
+      val orphan = crashing.table.firstIndexAbove(21L)
+      assert(orphan.nonEmpty, s"$kind: block 22's logs should be stored")
+      val restarted = new Syncer(spark, provider, root, FilterConfig(),
+        storeOverride = Some(store()), kvOverride = Some(kv()))
+      restarted.sync()
+      val stored = restarted.table.read.select("tx_hash").as[String]
+        .collect().sorted
+      val canonical = provider.allLogs.select("tx_hash").as[String]
+        .collect().sorted
+      assert(stored.sameElements(canonical), s"$kind: orphans survived the restart")
+      assert(restarted.table.read.select("indx").as[Long].collect().sorted
+        .sameElements(0L until canonical.length.toLong), s"$kind: indices")
+    }
+  }
 }

@@ -1,9 +1,5 @@
 package graft.store
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 
@@ -16,40 +12,8 @@ import graft.sync.Syncer
   * driver and written by one job; every other batch takes the ranged
   * path. Both must assign the same indices.
   */
-class AppendJobsSpec extends SparkSpec {
+class AppendJobsSpec extends SparkSpec with JobCount {
   import spark.implicits._
-
-  /** Runs `f` and counts the Spark jobs this thread starts meanwhile.
-    * Suites share the session and run in parallel, so jobs are tagged
-    * through a thread-local property; a sentinel job flushes the
-    * listener bus (it delivers in order) before the count is read.
-    */
-  private def jobsOf[A](f: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val tag = "graft.test.appendjobs"
-    val jobs = new AtomicInteger()
-    val sentinel = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).map(_.getProperty(tag)) match {
-          case Some("measured") => jobs.incrementAndGet(): Unit
-          case Some("sentinel") => sentinel.countDown()
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(tag, "measured")
-      val a = f
-      sc.setLocalProperty(tag, "sentinel")
-      sc.parallelize(Seq(1), 1).count(): Unit
-      assert(sentinel.await(60, TimeUnit.SECONDS))
-      (a, jobs.get())
-    } finally {
-      sc.setLocalProperty(tag, null)
-      sc.removeSparkListener(listener)
-    }
-  }
 
   private def isLocal(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
@@ -82,19 +46,16 @@ class AppendJobsSpec extends SparkSpec {
     assert((e.minIndx, e.maxIndx, e.minBlock, e.maxBlock) == (0L, 4L, 7L, 9L))
   }
 
-  test("a driver-held LogTable append is its lastIndex() jobs plus one write") {
+  test("a driver-held LogTable append is one write; lastIndex() runs no job") {
     val t = new LogTable(spark, tmpDir("appendjobs-lt"), "f1")
     t.storeLogs(logs((0L, "tx-a", 1L), (1L, "tx-b", 2L)))
     val batch = logs((0L, "tx-c", 3L), (1L, "tx-d", 3L))
-    val (_, indexJobs) = jobsOf(t.lastIndex())
+    // the watermark comes from the parquet footers, not a table scan
+    val (last, indexJobs) = jobsOf(t.lastIndex())
     val (end, jobs) = jobsOf(t.storeLogs(batch))
-    assert(end == 4L)
-    // lastIndex() scans the table: a parquet schema-inference job, then
-    // the max() aggregate's map and result stages (adaptive execution
-    // runs each as its own job)
-    assert(indexJobs == 3, s"lastIndex() ran $indexJobs jobs")
-    assert(jobs == indexJobs + 1,
-      s"$jobs jobs in a LogTable append; lastIndex() alone runs $indexJobs")
+    assert(last == 2L && end == 4L)
+    assert(indexJobs == 0, s"lastIndex() ran $indexJobs jobs")
+    assert(jobs == 1, s"$jobs jobs in a driver-held LogTable append")
     assert(t.read.select("indx").as[Long].collect().sorted.toSeq ==
       (0L until 4L))
   }
@@ -112,6 +73,25 @@ class AppendJobsSpec extends SparkSpec {
     assert(sync.table.lastIndex() == 6L)
     assert(sync.table.read.select("block_num").as[Long].collect().sorted
       .toSeq == Seq(0L, 0L, 2L, 2L, 2L, 3L))
+  }
+
+  test("a resumed sync() with one new block runs only its write, on both file stores") {
+    // the checkpoint exists, so sync() probes for orphans above it; the
+    // store answers from its manifest or footers, and the one new tail
+    // block is the only job
+    val logsAt = (n: Long) => Seq(2, 0, 3, 1, 2)(n.toInt)
+    Seq(true, false).foreach { tx =>
+      val root = tmpDir("appendjobs-resume")
+      new Syncer(spark, new MockProvider(spark, MockChain.linear(4, logsAt)),
+        root, FilterConfig(), transactionalStore = tx).sync()
+      val sync = new Syncer(spark,
+        new MockProvider(spark, MockChain.linear(5, logsAt)), root,
+        FilterConfig(), transactionalStore = tx)
+      val (report, jobs) = jobsOf(sync.sync())
+      assert(report.added == 2L && report.removed == 0L)
+      assert(jobs == 1, s"$jobs Spark jobs resuming onto one block (tx=$tx)")
+      assert(sync.table.lastIndex() == 8L)
+    }
   }
 
   // unsorted rows; (block 5, tx 1) is a tie broken only by tx_hash, with

@@ -1,15 +1,11 @@
 package graft.store
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 import graft.SparkSpec
 
 /** Every KV call and every manifest-only table call is driver-side file
   * I/O: none of them may start a Spark job.
   */
-class KvNoJobsSpec extends SparkSpec {
+class KvNoJobsSpec extends SparkSpec with JobCount {
   import spark.implicits._
 
   test("KvStore calls and TxLogTable lastIndex/version run zero Spark jobs") {
@@ -20,23 +16,7 @@ class KvNoJobsSpec extends SparkSpec {
         "topics", "data"))
     val kv = new KvStore(spark, root)
 
-    // suites share the session and run in parallel: count only the jobs
-    // this thread starts, tagged through a local property
-    val sc = spark.sparkContext
-    val tag = "graft.test.kvjobs"
-    val jobs = new AtomicInteger()
-    val sentinel = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).map(_.getProperty(tag)) match {
-          case Some("measured") => jobs.incrementAndGet(): Unit
-          case Some("sentinel") => sentinel.countDown()
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(tag, "measured")
+    val (_, jobs) = jobsOf {
       kv.set("a", "1")
       kv.setAll(Map("b" -> "2", "c" -> "3"), drop = _ == "a")
       assert(kv.get("b").contains("2") && kv.get("a").isEmpty)
@@ -45,15 +25,7 @@ class KvNoJobsSpec extends SparkSpec {
       kv.setAll(Map("c" -> "4"), expectedVersion = Some(v))
       assert(kv.getPrefix("") == Seq("b" -> "2", "c" -> "4"))
       assert(t.lastIndex() == 1L && t.version() == 1L)
-      // the listener bus delivers in order: once a later job's start
-      // arrives, every earlier one has been counted
-      sc.setLocalProperty(tag, "sentinel")
-      sc.parallelize(Seq(1), 1).count(): Unit
-      assert(sentinel.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      assert(jobs.get() == 0, s"${jobs.get()} Spark jobs in KV/manifest calls")
-    } finally {
-      sc.setLocalProperty(tag, null)
-      sc.removeSparkListener(listener)
     }
+    assert(jobs == 0, s"$jobs Spark jobs in KV/manifest calls")
   }
 }
