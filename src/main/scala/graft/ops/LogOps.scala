@@ -133,10 +133,13 @@ object LogOps {
 
   /** A log batch after index assignment: `rows` is the batch plus
     * `indx = base … base+n-1`; `minBlock`/`maxBlock` bound its
-    * `block_num` (both 0 when `n == 0`).
+    * `block_num` (both 0 when `n == 0`). `driverHeld` marks a batch
+    * indexed on the driver: `rows` is then a `LocalRelation` whose rows
+    * are in index order, so a projection of it is still driver-held and
+    * a store can write it without a job.
     */
-  final case class IndexedBatch(
-      rows: DataFrame, n: Long, minBlock: Long, maxBlock: Long)
+  final case class IndexedBatch(rows: DataFrame, n: Long, minBlock: Long,
+      maxBlock: Long, driverHeld: Boolean)
 
   /** S8/W1 — how every store ([[graft.store.LogTable]],
     * [[graft.store.TxLogTable]], [[graft.store.JdbcLogStore]]) gives an
@@ -149,8 +152,10 @@ object LogOps {
     *    provider's parse, the sync tail's collected block) is already on
     *    the driver. Its rows are sorted there with Spark's own ordering
     *    (ascending, nulls first, strings by UTF-8 bytes), numbered, and
-    *    handed to `write` as one single-partition `LocalRelation`: no job
-    *    before the write, and the write is one task and one file;
+    *    handed to `write` as a `LocalRelation` in index order: no job
+    *    before the write. The two file stores then write the parquet on
+    *    the driver too (zero jobs per append); the JDBC store writes it
+    *    as one partition;
     *  - any other batch takes [[withAppendIndexRanged]]; the indexed frame
     *    is persisted so the write does not re-evaluate the batch, `n` and
     *    the block bounds come from one aggregate over it, and the cache is
@@ -168,8 +173,8 @@ object LogOps {
             min(col("block_num").cast("long")),
             max(col("block_num").cast("long"))).head()
           val n = s.getLong(0)
-          write(if (n == 0L) IndexedBatch(indexed, 0L, 0L, 0L)
-            else IndexedBatch(indexed, n, s.getLong(1), s.getLong(2)))
+          write(if (n == 0L) IndexedBatch(indexed, 0L, 0L, 0L, false)
+            else IndexedBatch(indexed, n, s.getLong(1), s.getLong(2), false))
         } finally indexed.unpersist()
     }
 
@@ -193,8 +198,9 @@ object LogOps {
       .map(_.get(b, types(b)).asInstanceOf[Number].longValue())
     val indexed = Bridge.ofRows(batch.sparkSession, LocalRelation(
       out :+ AttributeReference("indx", LongType, nullable = false)(), rows))
-    IndexedBatch(indexed.coalesce(1), rows.length.toLong,
-      blocks.headOption.getOrElse(0L), blocks.lastOption.getOrElse(0L))
+    IndexedBatch(indexed, rows.length.toLong,
+      blocks.headOption.getOrElse(0L), blocks.lastOption.getOrElse(0L),
+      driverHeld = true)
   }
 
   /** A2/W4 — next append index = max(indx)+1, empty → 0

@@ -297,7 +297,10 @@ final class JdbcLogStore(spark: SparkSession, url: String,
     graft.ops.LogOps.withAppendIndexes(batch, base) { b =>
       if (b.n == 0L) base
       else {
-        val rows = b.rows.select(
+        // a driver-held batch stays one partition: one task, one
+        // connection
+        val src = if (b.driverHeld) b.rows.coalesce(1) else b.rows
+        val rows = src.select(
           col("indx").as("INDX"), col("tx_index").as("TX_INDEX"),
           col("tx_hash").as("TX_HASH"), col("block_num").as("BLOCK_NUM"),
           col("block_hash").as("BLOCK_HASH"), col("address").as("ADDRESS"),

@@ -7,7 +7,11 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.BlockMetaData
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.StructType
 
 /** The store layer (SURVEY.md §1.1e): per-filter append-only indexed log
   * over parquet directories, plus a tiny KV metadata log ([[KvStore]]).
@@ -26,9 +30,10 @@ import org.apache.spark.sql.functions._
   *  - appends assign indices as `base + position within the batch`
   *    ([[graft.ops.LogOps.withAppendIndexes]]), `base` being the table's
   *    LastIndex. A batch already on the driver (the JSON-RPC provider's
-  *    parse, a sync-tail block) is sorted and numbered there and written
-  *    by one job; any other batch takes the ranged two-pass scheme
-  *    (repartitionByRange + per-partition counts → offsets), so no
+  *    parse, a sync-tail block) is sorted, numbered and written there,
+  *    through Spark's own parquet writer, with no job ([[publish]]); any
+  *    other batch takes the ranged two-pass scheme (repartitionByRange +
+  *    per-partition counts → offsets) and one Spark write, so no
   *    single-partition sort exists on the append path however large the
   *    batch;
   *  - the watermark probes ([[lastIndex]], [[firstIndexAbove]]) read the
@@ -82,6 +87,34 @@ final class LogTable(spark: SparkSession, root: String, filterHash: String,
       spark.sparkContext.hadoopConfiguration)
     recoverCompaction(fs)
     recoverPendingTruncation(fs)
+    sweepStagedAppends(fs)
+  }
+
+  /** Orphans and temp files of a crashed protocol are swept only once
+    * this old: the store allows concurrent readers, and a fresh reader
+    * must not delete a live writer's in-flight files.
+    */
+  private val staleMs = 60L * 60 * 1000
+
+  /** Name prefix of a driver-held append's files before [[publish]]
+    * renames them in.
+    */
+  private val stagedPrefix = ".append-"
+
+  /** Stale `.append-` files a crashed [[publish]] left in the
+    * `block_range` dirs: invisible to readers, swept so they cannot
+    * accumulate.
+    */
+  private def sweepStagedAppends(fs: org.apache.hadoop.fs.FileSystem): Unit = {
+    val root = new Path(dir)
+    if (fs.exists(root)) {
+      val now = System.currentTimeMillis()
+      fs.listStatus(root).filter(_.isDirectory)
+        .flatMap(d => fs.listStatus(d.getPath))
+        .filter(st => st.isFile && st.getPath.getName.startsWith(stagedPrefix))
+        .filter(st => now - st.getModificationTime > staleMs)
+        .foreach(st => fs.delete(st.getPath, false))
+    }
   }
 
   /** Whether the data dir exists. recoverCompaction has already rolled
@@ -115,8 +148,12 @@ final class LogTable(spark: SparkSession, root: String, filterHash: String,
       emptyLogs
     } else spark.read.parquet(dir)
 
+  /** Whether `f` holds a data file Spark's file index would list: hidden
+    * (`_`/`.`-prefixed) names, such as a staged append, do not count.
+    */
   private def hasParquetFiles(f: java.io.File): Boolean =
-    if (f.isFile) f.getName.endsWith(".parquet")
+    if (f.getName.startsWith("_") || f.getName.startsWith(".")) false
+    else if (f.isFile) f.getName.endsWith(".parquet")
     else Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
       .exists(hasParquetFiles)
 
@@ -236,20 +273,69 @@ final class LogTable(spark: SparkSession, root: String, filterHash: String,
   /** S8/W1 — append a batch of logs, assigning consecutive indices
     * `base, base+1, …` in (block_num, tx_index, tx_hash) order
     * (ref `postgresql_store.go:110-150`) through
-    * [[graft.ops.LogOps.withAppendIndexes]]. One atomic parquet append per
-    * batch = the reference's per-batch transaction.
+    * [[graft.ops.LogOps.withAppendIndexes]]. A driver-held batch is
+    * written on the driver and published by renames ([[publish]]); any
+    * other batch is one Spark parquet append.
     */
-  def storeLogs(batch: DataFrame): Long = {
+  def storeLogs(batch: DataFrame): Long = storeLogs(batch, crashAt = "")
+
+  /** Crash-injection twin of [[storeLogs]]: "mid-publish" throws between
+    * the first and second `block_range` renames of a driver-held batch.
+    */
+  private[graft] def storeLogs(batch: DataFrame, crashAt: String): Long = {
     val base = lastIndex()
     graft.ops.LogOps.withAppendIndexes(batch, base) { b =>
-      b.rows
+      val out = b.rows
         .withColumn("block_range", floor(col("block_num") / lit(blocksPerRange)))
-        .write
-        .mode(SaveMode.Append)
-        .partitionBy("block_range")
-        .parquet(dir)
+      LogStore.driverRows(out) match {
+        case Some(rows) => publish(out.schema, rows, crashAt)
+        case None =>
+          out.write.mode(SaveMode.Append).partitionBy("block_range").parquet(dir)
+      }
       base + b.n
     }
+  }
+
+  /** The driver-held append, laid out as Spark's partitioned writer lays
+    * it out: one file per `block_range=<r>` dir (the null range in
+    * Spark's default-partition dir), `block_range` itself only in the
+    * path. Each file is first written under a `.append-` name, which
+    * readers and the watermark probes skip; the files are then renamed
+    * in ascending `block_range` order, which is index order, so a crash
+    * leaves a prefix of the batch (the sync loop's orphan probe truncates
+    * it) and at worst stale temp files ([[sweepStagedAppends]]). Cached
+    * plans over the table are refreshed as Spark's insert command does.
+    */
+  private def publish(schema: StructType, rows: Seq[InternalRow],
+      crashAt: String): Unit = if (rows.nonEmpty) {
+    val r = schema.fieldIndex("block_range")
+    val types = schema.map(_.dataType)
+    val files = new Bridge.ParquetFiles(spark,
+      StructType(schema.patch(r, Nil, 1)))
+    // groupBy keeps each range's rows in index order; nulls sort first
+    val ranges = rows
+      .groupBy(row => if (row.isNullAt(r)) None else Some(row.getLong(r)))
+      .toSeq.sortBy(_._1)
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staged = scala.collection.mutable.ArrayBuffer.empty[Path]
+    try ranges.foreach { case (range, rs) =>
+      val part = new Path(dir, ExternalCatalogUtils.getPartitionPathString(
+        "block_range", range.map(_.toString).orNull))
+      staged += files.write(part, rs.iterator.map(row =>
+        InternalRow.fromSeq(row.toSeq(types).patch(r, Nil, 1))),
+        prefix = stagedPrefix)
+    } catch {
+      case t: Throwable =>
+        staged.foreach(fs.delete(_, false))
+        throw t
+    }
+    staged.zipWithIndex.foreach { case (tmp, i) =>
+      if (i == 1) crash("mid-publish", crashAt)
+      val dst = new Path(tmp.getParent, tmp.getName.stripPrefix(stagedPrefix))
+      if (!fs.rename(tmp, dst))
+        throw new java.io.IOException(s"rename $tmp -> $dst failed")
+    }
+    spark.catalog.refreshByPath(dir)
   }
 
   /** S9 — RemoveLogs(n): delete every log with `indx >= n`
@@ -405,7 +491,6 @@ final class LogTable(spark: SparkSession, root: String, filterHash: String,
     // so tmps are swept only when stale. Trash sweeping is always safe:
     // with a live dir it is post-swap garbage, and the owner's own
     // cleanup delete no-ops if we get there first.
-    val staleMs = 60L * 60 * 1000
     if (new java.io.File(dir).exists()) {
       siblings(".trash-").foreach(f => fs.delete(hp(f), true))
       siblings(".compact-")
@@ -432,7 +517,6 @@ final class LogTable(spark: SparkSession, root: String, filterHash: String,
       // its intent commit) must not delete the in-flight tmp — the writer
       // would then journal a delete-only intent and drop partitions
       // without replacing survivors.
-      val staleMs = 60L * 60 * 1000
       val self = new java.io.File(dir)
       Option(self.getParentFile).flatMap(p => Option(p.listFiles()))
         .getOrElse(Array.empty[java.io.File])

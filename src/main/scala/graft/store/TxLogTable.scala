@@ -1,6 +1,10 @@
 package graft.store
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -37,6 +41,18 @@ trait LogStore {
 }
 
 private[store] object LogStore {
+  /** The rows of `out`, a projection of a driver-held batch
+    * ([[graft.ops.LogOps.IndexedBatch]]`.driverHeld`), when its optimized
+    * plan is still a `LocalRelation`: Catalyst evaluates the projection on
+    * the driver, in row order, with no job. None sends the caller to
+    * Spark's write.
+    */
+  def driverRows(out: DataFrame): Option[Seq[InternalRow]] =
+    out.queryExecution.optimizedPlan match {
+      case l: LocalRelation => Some(l.data)
+      case _ => None
+    }
+
   /** `min(indx)` of `rows`; None when it is empty. */
   def minIndex(rows: DataFrame): Option[Long] = {
     val r = rows.agg(min("indx")).head()
@@ -116,9 +132,9 @@ private[store] object LogStore {
   * manifest's [minIndx, effective-max] (and [minBlock, maxBlock]) before
   * parquet footer stats prune within them; appends assign indices
   * through the same [[graft.ops.LogOps.withAppendIndexes]] as
-  * [[LogTable.storeLogs]] — a driver-held batch is one write job plus the
-  * manifest commit, any other batch takes the ranged two-pass scheme with
-  * no single-partition stage.
+  * [[LogTable.storeLogs]] — a driver-held batch is written on the driver
+  * with no Spark job, then the manifest commit; any other batch takes the
+  * ranged two-pass scheme with no single-partition stage.
   */
 final class TxLogTable(spark: SparkSession, root: String, filterHash: String,
     val blocksPerRange: Long = 10000L,
@@ -335,7 +351,10 @@ final class TxLogTable(spark: SparkSession, root: String, filterHash: String,
     */
   private[graft] var beforeCommit: () => Unit = () => ()
 
-  /** Append = one invisible data write + one manifest commit. The commit
+  /** Append = one invisible data write + one manifest commit. The data
+    * write of a driver-held batch runs on the driver through Spark's own
+    * parquet writer ([[Bridge.ParquetFiles]]): one file in the new commit
+    * dir, no job. Any other batch is one Spark write. The commit
     * is a compare-and-set against the manifest read at entry; losing the
     * race REBASES — the batch's indices derive from the stale lastIndex,
     * so the data is rewritten from the fresh base and the stale directory
@@ -353,11 +372,17 @@ final class TxLogTable(spark: SparkSession, root: String, filterHash: String,
           if (b.n == 0L) base
           else {
             val name = s"c${System.nanoTime()}"
-            b.rows
+            val out = b.rows
               .withColumn("block_range",
                 floor(col("block_num") / lit(blocksPerRange)))
               .select(logSchema.fieldNames.map(col): _*)
-              .write.parquet(s"$dataDir/$name")
+            // the commit dir is invisible until the manifest names it, so
+            // a driver-held batch is written straight to its final name
+            LogStore.driverRows(out) match {
+              case Some(rows) => new Bridge.ParquetFiles(spark, out.schema)
+                .write(new Path(s"$dataDir/$name"), rows.iterator)
+              case None => out.write.parquet(s"$dataDir/$name")
+            }
             if (crashAt == "after-data-write") throw new InjectedCrash(crashAt)
             beforeCommit()
             commit(Manifest(base + b.n, m.entries :+ Entry(name, base,

@@ -132,7 +132,7 @@ final class JsonRpcClient(
   * on the driver is bounded-by-protocol — the same shape as the
   * reference, where every batch crosses one RPC connection. Answers come
   * back as `LocalRelation` frames, so the store sorts and numbers them on
-  * the driver and writes each with one job
+  * the driver, and the file stores write them there with no job
   * ([[graft.ops.LogOps.withAppendIndexes]]); reorg retraction and the
   * queries downstream run as distributed Spark jobs.
   */

@@ -79,8 +79,8 @@ final class ProviderScanLocator(provider: Provider, headHint: Long)
   * distributed through the store's ranged index assignment. Rows reach
   * the driver only where they are bounded by construction: a JSON-RPC
   * answer (capped by the node) and a tail block's logs, which are
-  * collected once so the store appends them with one write job
-  * ([[graft.ops.LogOps.withAppendIndexes]]).
+  * collected once so the file stores write them on the driver with no
+  * Spark job ([[graft.ops.LogOps.withAppendIndexes]]).
   */
 final class Syncer(
     spark: SparkSession,
@@ -333,8 +333,8 @@ final class Syncer(
       // and a lazy provider DataFrame would hit the provider again OUTSIDE
       // the retry (unprotected, and possibly returning different rows than
       // were counted). The tail block's logs are small by construction
-      // (one block); rebuilt as a LocalRelation they append with no pin
-      // or count job.
+      // (one block); rebuilt as a LocalRelation they append with no pin,
+      // count or write job on either file store.
       val (logs, c) = withRetry(s"logs of block ${b.hash}") {
         val df = provider.getLogsByHash(b.hash, filter)
         val rows = df.collect()

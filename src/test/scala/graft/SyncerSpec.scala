@@ -416,4 +416,46 @@ class SyncerSpec extends SparkSpec {
         .sameElements(0L until canonical.length.toLong), s"$kind: indices")
     }
   }
+
+  test("a restart truncates a LogTable batch torn between its range renames") {
+    import graft.store._
+    // fails the `crashOn`-th append between its first and second
+    // block_range renames: the batch's first range is published, the
+    // checkpoint still names the batch before
+    final class TornAppend(t: LogTable, crashOn: Int) extends LogStore {
+      private var appends = 0
+      override def read = t.read
+      override def lastIndex() = t.lastIndex()
+      override def firstIndexAbove(block: Long) = t.firstIndexAbove(block)
+      override def storeLogs(batch: org.apache.spark.sql.DataFrame) = {
+        appends += 1
+        t.storeLogs(batch, if (appends == crashOn) "mid-publish" else "")
+      }
+      override def removeLogsFrom(n: Long) = t.removeLogsFrom(n)
+      override def getLog(n: Long) = t.getLog(n)
+      override def compact() = t.compact()
+    }
+    val provider = new MockProvider(spark,
+      MockChain.linear(40, n => 1 + (n % 3).toInt))
+    val root = tmpDir("torn-publish")
+    // 5 blocks per range: each 10-block bulk batch spans two ranges
+    def table() = new LogTable(spark, root, FilterConfig().hash,
+      blocksPerRange = 5L)
+    val crashing = new Syncer(spark, provider, root, FilterConfig(),
+      batchSize = 10L, storeOverride = Some(new TornAppend(table(), 2)))
+    intercept[RuntimeException](crashing.sync())
+    assert(crashing.checkpoint().map(_.number).contains(9L))
+    assert(table().read.agg(org.apache.spark.sql.functions.max("block_num"))
+      .head().getLong(0) == 14L, "blocks 10-14 should be published")
+    val restarted = new Syncer(spark, provider, root, FilterConfig(),
+      batchSize = 10L, storeOverride = Some(table()))
+    restarted.sync()
+    val stored = restarted.table.read.select("tx_hash").as[String]
+      .collect().sorted
+    val canonical = provider.allLogs.select("tx_hash").as[String]
+      .collect().sorted
+    assert(stored.sameElements(canonical), "the torn batch survived the restart")
+    assert(restarted.table.read.select("indx").as[Long].collect().sorted
+      .sameElements(0L until canonical.length.toLong), "indices")
+  }
 }

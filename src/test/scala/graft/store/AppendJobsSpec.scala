@@ -8,9 +8,9 @@ import graft.model.FilterConfig
 import graft.sync.Syncer
 
 /** Appends of driver-held batches (a `LocalRelation`: the JSON-RPC
-  * provider's parse, a collected sync-tail block) are indexed on the
-  * driver and written by one job; every other batch takes the ranged
-  * path. Both must assign the same indices.
+  * provider's parse, a collected sync-tail block) are indexed and, on
+  * both file stores, written on the driver with no Spark job; every other
+  * batch takes the ranged path. Both must assign the same indices.
   */
 class AppendJobsSpec extends SparkSpec with JobCount {
   import spark.implicits._
@@ -31,7 +31,7 @@ class AppendJobsSpec extends SparkSpec with JobCount {
       else Nil
     }
 
-  test("a driver-held TxLogTable append is one job writing one parquet file") {
+  test("a driver-held TxLogTable append runs no job and writes one file") {
     val root = tmpDir("appendjobs-tx")
     val t = new TxLogTable(spark, root, "f1")
     val batch = logs((0L, "tx-a", 7L), (1L, "tx-b", 7L), (0L, "tx-c", 8L),
@@ -39,7 +39,7 @@ class AppendJobsSpec extends SparkSpec with JobCount {
     assert(isLocal(batch))
     val (end, jobs) = jobsOf(t.storeLogs(batch))
     assert(end == 5L)
-    assert(jobs == 1, s"$jobs Spark jobs in a driver-held TxLogTable append")
+    assert(jobs == 0, s"$jobs Spark jobs in a driver-held TxLogTable append")
     val files = parquetFiles(new java.io.File(TxLogTable.dataDir(root, "f1")))
     assert(files.size == 1, files.mkString(", "))
     val Seq(e) = t.manifest().entries
@@ -55,21 +55,21 @@ class AppendJobsSpec extends SparkSpec with JobCount {
     val (end, jobs) = jobsOf(t.storeLogs(batch))
     assert(last == 2L && end == 4L)
     assert(indexJobs == 0, s"lastIndex() ran $indexJobs jobs")
-    assert(jobs == 1, s"$jobs jobs in a driver-held LogTable append")
+    assert(jobs == 0, s"$jobs jobs in a driver-held LogTable append")
     assert(t.read.select("indx").as[Long].collect().sorted.toSeq ==
       (0L until 4L))
   }
 
   test("a Syncer tail block over MockProvider starts no pin or count job") {
     // every block is in the tail (head 3 < maxBlockBacklog) and the store
-    // is fresh, so sync() runs no bulk batch and no orphan probe: the
-    // only jobs left are the stores' writes, one per non-empty block
+    // is fresh, so sync() runs no bulk batch and no orphan probe, and each
+    // non-empty block's write runs on the driver
     val chain = MockChain.linear(4, n => Seq(2, 0, 3, 1)(n.toInt))
     val sync = new Syncer(spark, new MockProvider(spark, chain),
       tmpDir("appendjobs-sync"), FilterConfig(), transactionalStore = true)
     val (report, jobs) = jobsOf(sync.sync())
     assert(report.added == 6L && report.batches == 0L)
-    assert(jobs == 3, s"$jobs Spark jobs for 3 non-empty tail blocks")
+    assert(jobs == 0, s"$jobs Spark jobs for 3 non-empty tail blocks")
     assert(sync.table.lastIndex() == 6L)
     assert(sync.table.read.select("block_num").as[Long].collect().sorted
       .toSeq == Seq(0L, 0L, 2L, 2L, 2L, 3L))
@@ -78,7 +78,7 @@ class AppendJobsSpec extends SparkSpec with JobCount {
   test("a resumed sync() with one new block runs only its write, on both file stores") {
     // the checkpoint exists, so sync() probes for orphans above it; the
     // store answers from its manifest or footers, and the one new tail
-    // block is the only job
+    // block is written on the driver
     val logsAt = (n: Long) => Seq(2, 0, 3, 1, 2)(n.toInt)
     Seq(true, false).foreach { tx =>
       val root = tmpDir("appendjobs-resume")
@@ -89,9 +89,24 @@ class AppendJobsSpec extends SparkSpec with JobCount {
         FilterConfig(), transactionalStore = tx)
       val (report, jobs) = jobsOf(sync.sync())
       assert(report.added == 2L && report.removed == 0L)
-      assert(jobs == 1, s"$jobs Spark jobs resuming onto one block (tx=$tx)")
+      assert(jobs == 0, s"$jobs Spark jobs resuming onto one block (tx=$tx)")
       assert(sync.table.lastIndex() == 8L)
     }
+  }
+
+  test("a cached LogTable read sees a driver-held append's rows") {
+    // Spark's insert command recaches plans over the path it wrote; the
+    // driver-side publish refreshes them the same way
+    val t = new LogTable(spark, tmpDir("appendjobs-cache"), "f1")
+    t.storeLogs(logs((0L, "tx-a", 1L), (1L, "tx-b", 2L)))
+    val cached = t.read.cache()
+    try {
+      assert(cached.count() == 2L)
+      t.storeLogs(logs((0L, "tx-c", 3L), (0L, "tx-d", 20000L)))
+      assert(cached.count() == 4L)
+      assert(cached.select("tx_hash").as[String].collect().sorted.toSeq ==
+        Seq("tx-a", "tx-b", "tx-c", "tx-d"))
+    } finally cached.unpersist()
   }
 
   // unsorted rows; (block 5, tx 1) is a tie broken only by tx_hash, with
