@@ -43,7 +43,9 @@ final class Tracker private (
   /** The tracked log as a queryable DataFrame. */
   def logs: DataFrame = syncer.table.read
 
-  /** T2 — chain guard + resume + bulk backfill + reorg-safe tail. */
+  /** T2 — chain guard (first call only) + resume + bulk backfill +
+    * reorg-safe tail.
+    */
   def sync(): SyncReport = syncer.sync()
 
   /** T7 — watch a running sync: per-batch [[graft.sync.SyncProgress]]

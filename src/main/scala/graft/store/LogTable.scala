@@ -3,6 +3,7 @@ package graft.store
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.BlockMetaData
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -248,9 +249,17 @@ final class LogTable(spark: SparkSession, root: String, filterHash: String,
       }
   }
 
+  /** Read options for [[readFooter]], built once: `ParquetFileReader.open`
+    * without them builds fresh ones, and a fresh Hadoop `Configuration`
+    * with them, on every call, which costs far more than the footer read.
+    */
+  private lazy val footerReadOptions =
+    HadoopReadOptions.builder(spark.sparkContext.hadoopConfiguration).build()
+
   private def readFooter(st: FileStatus): Option[Option[Bounds]] = {
     val reader = ParquetFileReader.open(
-      HadoopInputFile.fromStatus(st, spark.sparkContext.hadoopConfiguration))
+      HadoopInputFile.fromStatus(st, spark.sparkContext.hadoopConfiguration),
+      footerReadOptions)
     val groups =
       try reader.getFooter.getBlocks.asScala.toSeq.filter(_.getRowCount > 0)
       finally reader.close()

@@ -81,6 +81,18 @@ final class ProviderScanLocator(provider: Provider, headHint: Long)
   * answer (capped by the node) and a tail block's logs, which are
   * collected once so the file stores write them on the driver with no
   * Spark job ([[graft.ops.LogOps.withAppendIndexes]]).
+  *
+  * Provider round trips follow the reference: the chain-identity guard
+  * runs on an instance's first [[sync]] only, the tail reuses headers the
+  * sync already holds, and a reorg walks back only to its ancestor. Over
+  * JSON-RPC a one-block sync is 3 requests and a depth-d fork at most
+  * 2d + 6 (the table in ARCHITECTURE.md).
+  *
+  * The root's checkpoint is the KV `lastBlock_<filter>` key this class
+  * writes: rows in a store with no checkpoint are the orphans of a crashed
+  * first sync, and [[sync]] truncates them. A root filled only by
+  * [[graft.stream.LiveSync]], whose progress lives in Spark's streaming
+  * checkpoint, is therefore not a `Syncer` root.
   */
 final class Syncer(
     spark: SparkSession,
@@ -164,6 +176,16 @@ final class Syncer(
   private val filterKey = s"filter_$filterHash"       // ref tracker.go:195
 
   // ── chain guard (P4, ref tracker.go:402-444) ──────────────────────────
+  /** Set once [[preSyncCheck]] has passed on this instance. */
+  @volatile private var guarded = false
+
+  /** Chain-identity guard: every recorded `genesis`/`chainID` must match
+    * the provider, a fresh store records both, and the filter is
+    * registered. [[sync]] runs it on this instance's first call only, as
+    * the reference runs it once when its `Sync` starts: a fresh instance
+    * over the same root validates again, a provider that switches chains
+    * under a running instance is not re-checked.
+    */
   def preSyncCheck(): Unit = {
     // validate every PRESENT key (a crash between first-run writes must
     // not let a wrong-chain provider slip past the guard on restart), and
@@ -179,6 +201,7 @@ final class Syncer(
     if (kv.get(filterKey).isEmpty)
       kv.set(filterKey, filter.addresses.mkString(",") + "|" +
         filter.topics.map(_.getOrElse("empty")).mkString(","))
+    guarded = true
   }
 
   // ── checkpoint (T3/S11, ref tracker.go:218-247) ───────────────────────
@@ -274,12 +297,17 @@ final class Syncer(
       .map(b => math.max(filter.start, math.max(0L, b - 1)))
       .getOrElse(filter.start)
 
-  /** T2 — full sync: guard, resume from checkpoint (or fastTrack start),
-    * bulk-sync up to `head − maxBlockBacklog`, then tail-sync the hot
-    * window block-by-block under reorg protection (ref `tracker.go:582-715`).
+  /** T2 — full sync: guard (first call only), resume from the checkpoint
+    * (or the fastTrack start), bulk-sync up to `head − maxBlockBacklog`,
+    * then tail-sync the hot window block-by-block under reorg protection
+    * (ref `tracker.go:582-715`).
+    *
+    * With no checkpoint nothing in the store is committed: its rows were
+    * appended by a sync that crashed before its first checkpoint, and they
+    * are truncated from index 0 before the sync starts.
     */
   def sync(): SyncReport = {
-    preSyncCheck()
+    if (!guarded) preSyncCheck()
     val head = provider.latestBlock()
     val origin = checkpoint() match {
       case Some(last) =>
@@ -291,14 +319,33 @@ final class Syncer(
         // probe from its metadata (manifest, footer stats, index), so a
         // clean restart runs no Spark job here
         table.firstIndexAbove(last.number).foreach(table.removeLogsFrom)
-        // re-check the checkpointed block's hash — reorg while offline?
-        provider.getBlock(last.number) match {
-          case Some(liveAtLast) if liveAtLast.hash != last.hash =>
-            return reorgResync(head)
-          case _ => last.number + 1
-        }
-      case None => fastTrackOrigin()
+        if (replacedOffline(last, head)) return reorgResync()
+        last.number + 1
+      case None =>
+        if (table.lastIndex() > 0L) table.removeLogsFrom(0L)
+        fastTrackOrigin()
     }
+    syncRange(origin, head, Map.empty)
+  }
+
+  /** Did the chain replace the checkpointed block while the tracker was
+    * down? At the head's height the head's hash answers. When the resume
+    * starts in the tail window, the first tail block's parent link answers
+    * in [[syncRange]]. Only a resume that starts in the bulk range, whose
+    * batches check no links, fetches the checkpointed block again.
+    */
+  private def replacedOffline(last: BlockHeader, head: BlockHeader): Boolean =
+    if (last.number == head.number) last.hash != head.hash
+    else if (last.number >= head.number - maxBlockBacklog) false
+    else provider.getBlock(last.number).exists(_.hash != last.hash)
+
+  /** Bulk-sync `[origin, head − maxBlockBacklog]`, then tail-sync up to
+    * `head`. The tail takes a block's header from `held` (live headers this
+    * sync already fetched, by height) or from `head` before asking the
+    * provider, and checks every block's parent link either way.
+    */
+  private def syncRange(origin: Long, head: BlockHeader,
+      held: Map[Long, BlockHeader]): SyncReport = {
     if (origin > head.number)
       return SyncReport(0, 0, 0, head.number)
     val bulkEnd = head.number - maxBlockBacklog
@@ -306,11 +353,12 @@ final class Syncer(
     if (bulkEnd >= origin) batches = batchSync(origin, bulkEnd)
     // tail: per-block by hash, reorg-safe (S2, ref tracker.go:699-714)
     val tailStart = math.max(origin, bulkEnd + 1)
+    val known = held + (head.number -> head)
     var added = 0L
     // linkage guard: each tail head must extend the previously stored
     // block (ref blocktracker reconcile, tracker.go:571-609) — a
-    // parentHash mismatch means the chain forked mid-tail; appending
-    // would mix lineages the checkpoint hash re-check can never catch
+    // parentHash mismatch means the chain forked, offline or mid-tail;
+    // appending would mix lineages
     var prev: Option[BlockHeader] = checkpoint()
     var n = tailStart
     val tailStartNs = System.nanoTime()
@@ -318,13 +366,13 @@ final class Syncer(
       // T8 covers the HEADER fetch too: a None from a transiently-unsynced
       // node must not silently skip the block (its logs would be lost
       // forever and the parent-linkage guard would go blind across the gap)
-      val b = withRetry(s"header of block $n") {
+      val b = known.getOrElse(n, withRetry(s"header of block $n") {
         provider.getBlock(n).getOrElse(
           throw new IllegalStateException(s"block $n not served yet"))
-      }
+      })
       if (prev.exists(p =>
           p.number == b.number - 1 && p.hash != b.parentHash)) {
-        val r = reorgResync(head)
+        val r = reorgResync()
         return SyncReport(batches + r.batches, added + r.added,
           r.removed, r.headNumber)
       }
@@ -351,10 +399,19 @@ final class Syncer(
     SyncReport(batches, added, 0, head.number)
   }
 
-  /** T4 — checkpoint hash no longer canonical: find the ancestor within the
-    * backlog, truncate + retract above it, resync forward.
+  /** T4 — the chain replaced stored blocks. Walk live headers down from
+    * the top stored height and stop at the first whose hash agrees (the
+    * reference's `findAncestor`, `tracker.go:291-314`): d+1 `getBlock`
+    * calls for a depth-d fork. [[Reconciler.reconcile]] checks the walk
+    * against the stored backlog; a walk with no agreeing height has
+    * fetched every stored height and throws "reorg deeper than backlog"
+    * (ref `tracker.go:313`). Then truncate (retract) the logs above the
+    * ancestor, checkpoint the ancestor's walked header, and sync forward to
+    * a fresh head with the walked headers held — no second guard or
+    * checkpoint re-check. The head is fetched again because the one that
+    * led here may be the stale header.
     */
-  private def reorgResync(head: BlockHeader): SyncReport = {
+  private def reorgResync(): SyncReport = {
     val last = checkpoint().get
     // prefer the persisted header backlog (covers log-less blocks); fall
     // back to reconstructing hashes from the log table for stores written
@@ -372,13 +429,21 @@ final class Syncer(
           .sortBy(_.number).toSeq
       }
     }
-    // anchor the live view at the STORED heights — the fork point must be
-    // provable inside the stored window; anchoring at the current head
-    // would make a shallow offline reorg look "deeper than backlog" once
-    // the chain has advanced past the window
-    val liveAtStored = stored.map(_.number).sorted
-      .flatMap(n => provider.getBlock(n))
-    val res = Reconciler.reconcile(stored, liveAtStored, maxBlockBacklog)
+    // walk at the STORED heights — the fork point must be provable inside
+    // the stored window; anchoring at the current head would make a
+    // shallow offline reorg look "deeper than backlog" once the chain has
+    // advanced past the window. The walk comes back oldest-first.
+    @annotation.tailrec
+    def walk(down: List[BlockHeader], acc: List[BlockHeader]): List[BlockHeader] =
+      down match {
+        case s :: rest => provider.getBlock(s.number) match {
+          case Some(live) if live.hash == s.hash => live :: acc
+          case live => walk(rest, live.toList ::: acc)
+        }
+        case Nil => acc
+      }
+    val walked = walk(stored.sortBy(-_.number).toList, Nil)
+    val res = Reconciler.reconcile(stored, walked, maxBlockBacklog)
     // truncate stored logs above the ancestor (S9) — retractions
     val removed = table.firstIndexAbove(res.ancestor)
       .fold(0L)(table.removeLogsFrom(_).count())
@@ -386,13 +451,20 @@ final class Syncer(
     // entries) and resync forward through the normal bulk+tail path —
     // this handles an arbitrarily long gap between ancestor and head.
     // No common block at all (full divergence within tolerance) ⇒ clear
-    // the checkpoint entirely so the recursive sync restarts fresh instead
+    // the checkpoint entirely so the forward sync restarts fresh instead
     // of re-detecting the same mismatch forever
-    provider.getBlock(res.ancestor) match {
-      case Some(anchor) => writeCheckpoint(anchor)
+    val anchor = walked.find(_.number == res.ancestor)
+    anchor match {
+      case Some(a) => writeCheckpoint(a)
       case None => kv.setAll(Map(lastBlockKey -> "", backlogKey -> ""))
     }
-    val fwd = sync()
+    val head = provider.latestBlock()
+    val origin = anchor.fold(fastTrackOrigin()) { a =>
+      if (a.number > head.number)
+        sys.error("store is more advanced than the chain") // T9
+      a.number + 1
+    }
+    val fwd = syncRange(origin, head, walked.map(h => h.number -> h).toMap)
     // a second fork during the forward resync contributes its own
     // retractions and a fresher head — aggregate, don't drop them
     SyncReport(fwd.batches, fwd.added, removed + fwd.removed, fwd.headNumber)

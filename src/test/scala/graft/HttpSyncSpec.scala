@@ -297,7 +297,8 @@ class HttpSyncSpec extends SparkSpec {
 
   test("offline reorg over HTTP: checkpoint re-check triggers retraction + resync") {
     // the chain reorganizes while the tracker is down; on restart the
-    // checkpointed hash no longer matches the live block at that height —
+    // checkpoint is re-checked by the first tail block's parent link, whose
+    // parentHash no longer names the checkpointed block —
     // the whole reconcile (ancestor within backlog, truncate, retract,
     // resync forward) runs through real wire calls
     val chain1 = MockChain.linear(30, _ => 1)
@@ -318,6 +319,58 @@ class HttpSyncSpec extends SparkSpec {
       val canonical = new MockProvider(spark, srv.chain).allLogs
         .select("tx_hash").collect().map(_.getString(0)).sorted
       assert(stored.sameElements(canonical))
+    }
+  }
+
+  /** A Syncer (batch 10, backlog 5) over 30 one-log blocks, synced once. */
+  private def withSyncedChain[A](f: (StubEthServer, Syncer) => A): A =
+    withServer(MockChain.linear(30, _ => 1)) { srv =>
+      val s = new Syncer(spark, new HttpRpcProvider(spark, srv.endpoint),
+        tmpDir("httpbudget"), FilterConfig(), batchSize = 10L,
+        maxBlockBacklog = 5)
+      s.sync()
+      f(srv, s)
+    }
+
+  private def assertCanonical(srv: StubEthServer, s: Syncer): Unit = {
+    val stored = s.table.read.select("tx_hash").collect()
+      .map(_.getString(0)).sorted
+    val canonical = new MockProvider(spark, srv.chain).allLogs
+      .select("tx_hash").collect().map(_.getString(0)).sorted
+    assert(stored.sameElements(canonical))
+    assert(s.checkpoint().map(_.hash).contains(srv.chain.last.hash))
+  }
+
+  test("a reused Syncer syncs one new block in exactly 3 requests") {
+    withSyncedChain { (srv, s) =>
+      srv.chain = MockChain.linear(31, _ => 1)
+      val before = srv.requests.get()
+      s.sync()
+      // eth_blockNumber, the head's header, the head's logs by hash
+      assert(srv.requests.get() - before == 3)
+      assertCanonical(srv, s)
+    }
+  }
+
+  test("a depth-2 fork sync on a reused Syncer takes at most 10 requests") {
+    withSyncedChain { (srv, s) =>
+      srv.chain = MockChain.fork(srv.chain, depth = 2, extend = 1)
+      val before = srv.requests.get()
+      val r = s.sync()
+      // head (2), walk to the ancestor (3), fresh head (2), logs (3)
+      val n = srv.requests.get() - before
+      assert(n <= 10, s"$n requests")
+      assert(r.removed == 2L)
+      assertCanonical(srv, s)
+    }
+  }
+
+  test("a same-height fork (head at the checkpoint's height, new hash) is retracted") {
+    withSyncedChain { (srv, s) =>
+      srv.chain = MockChain.fork(srv.chain, depth = 2, extend = 0)
+      assert(srv.chain.last.num == 29L)
+      assert(s.sync().removed == 2L)
+      assertCanonical(srv, s)
     }
   }
 

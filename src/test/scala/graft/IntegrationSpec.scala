@@ -187,10 +187,12 @@ class IntegrationSpec extends SparkSpec {
     // height; this fuzz randomizes WHEN the fork lands relative to the
     // per-block tail fetches — the race the linkage guard
     // (Syncer.sync tail loop) exists for. Each round grows the chain,
-    // schedules a fork to appear exactly when a scheduled tail header is
-    // fetched, syncs, then checks full convergence to the (new) canonical
-    // chain — the reference's fuzz oracle (tracker_test.go:369-482)
-    // applied to the batch tail instead of the streaming tail.
+    // schedules a fork to appear exactly when a scheduled tail block is
+    // fetched (its header; for the head, whose header the tail takes from
+    // latestBlock, its logs), syncs, then checks full convergence to the
+    // (new) canonical chain — the reference's fuzz oracle
+    // (tracker_test.go:369-482) applied to the batch tail instead of the
+    // streaming tail.
     import graft.model.BlockHeader
     for (trial <- 0 until 3) {
       val rnd = new scala.util.Random(7100 + trial)
@@ -204,17 +206,21 @@ class IntegrationSpec extends SparkSpec {
           val num = acc.last.num + 1
           acc :+ MBlock(num, s"$num$suffix", acc.last.tag, rnd.nextInt(3) + 1)
         }
+      // the fork lands mid-tail, between fetches
+      def flipIfDue(n: Long): Unit = if (flipAt.contains(n)) {
+        chain = pending.get; flipAt = None; pending = None
+        forksFired += 1
+      }
       val provider = new graft.sync.Provider {
         private def p = new MockProvider(spark, chain)
         override def getLogs(f: Long, t: Long, fl: FilterConfig) =
           p.getLogs(f, t, fl)
-        override def getLogsByHash(h: String, fl: FilterConfig) =
+        override def getLogsByHash(h: String, fl: FilterConfig) = {
+          chain.find(_.hash == h).foreach(b => flipIfDue(b.num))
           p.getLogsByHash(h, fl)
+        }
         override def getBlock(n: Long): Option[BlockHeader] = {
-          if (flipAt.contains(n)) { // the fork lands mid-tail, between fetches
-            chain = pending.get; flipAt = None; pending = None
-            forksFired += 1
-          }
+          flipIfDue(n)
           p.getBlock(n)
         }
         override def latestBlock() = p.latestBlock()

@@ -364,6 +364,28 @@ class SyncerSpec extends SparkSpec {
     assert(sync.table.read.count() == expected)
   }
 
+  /** Runs `f(kind, root, store, kv)` once per backend (parquet, tx, JDBC),
+    * each on a fresh root; `store()` and `kv()` open new instances over it,
+    * as a restarted process would.
+    */
+  private def onEachBackend(tag: String)(f: (String, String,
+      () => graft.store.LogStore, () => graft.store.KeyValueStore) => Unit): Unit = {
+    import graft.store._
+    val hash = FilterConfig().hash
+    Seq("plain", "tx", "jdbc").foreach { kind =>
+      val root = tmpDir(s"$tag-$kind")
+      val url = s"jdbc:derby:$root/db;create=true"
+      def store(): LogStore = kind match {
+        case "plain" => new LogTable(spark, root, hash)
+        case "tx" => new TxLogTable(spark, root, hash)
+        case _ => new JdbcLogStore(spark, url, hash)
+      }
+      def kv(): KeyValueStore =
+        if (kind == "jdbc") new JdbcKvStore(spark, url) else new KvStore(spark, root)
+      f(kind, root, () => store(), () => kv())
+    }
+  }
+
   test("a restart truncates logs whose checkpoint never landed, on all three backends") {
     import graft.store._
     // the checkpoint write after the 4th tail block's append throws: that
@@ -385,17 +407,7 @@ class SyncerSpec extends SparkSpec {
     }
     val chain = MockChain.linear(30, n => 1 + (n % 3).toInt)
     val provider = new MockProvider(spark, chain)
-    val hash = FilterConfig().hash
-    Seq("plain", "tx", "jdbc").foreach { kind =>
-      val root = tmpDir(s"torn-$kind")
-      val url = s"jdbc:derby:$root/db;create=true"
-      def store(): LogStore = kind match {
-        case "plain" => new LogTable(spark, root, hash)
-        case "tx" => new TxLogTable(spark, root, hash)
-        case _ => new JdbcLogStore(spark, url, hash)
-      }
-      def kv(): KeyValueStore =
-        if (kind == "jdbc") new JdbcKvStore(spark, url) else new KvStore(spark, root)
+    onEachBackend("torn") { (kind, root, store, kv) =>
       // checkpoint writes: 1 after the bulk batch (blocks 0-19), then one
       // per tail block; the 4th is block 22's
       val crashing = new Syncer(spark, provider, root, FilterConfig(),
@@ -415,6 +427,104 @@ class SyncerSpec extends SparkSpec {
       assert(restarted.table.read.select("indx").as[Long].collect().sorted
         .sameElements(0L until canonical.length.toLong), s"$kind: indices")
     }
+  }
+
+  test("a restart before the first checkpoint truncates what the crashed sync stored, on all three backends") {
+    import graft.store._
+    // throws right after the first bulk append: its logs are stored and no
+    // checkpoint exists yet
+    final class CrashAfterFirstAppend(in: LogStore) extends LogStore {
+      private var appends = 0
+      override def read = in.read
+      override def lastIndex() = in.lastIndex()
+      override def firstIndexAbove(block: Long) = in.firstIndexAbove(block)
+      override def storeLogs(batch: org.apache.spark.sql.DataFrame) = {
+        val end = in.storeLogs(batch)
+        appends += 1
+        if (appends == 1)
+          throw new IllegalStateException("injected crash after the first append")
+        end
+      }
+      override def removeLogsFrom(n: Long) = in.removeLogsFrom(n)
+      override def getLog(n: Long) = in.getLog(n)
+      override def compact() = in.compact()
+    }
+    // 79 logs; the first 10-block batch holds 19 of them
+    val provider = new MockProvider(spark,
+      MockChain.linear(40, n => 1 + (n % 3).toInt))
+    onEachBackend("precheckpoint") { (kind, root, store, kv) =>
+      val crashing = new Syncer(spark, provider, root, FilterConfig(),
+        batchSize = 10L, storeOverride = Some(new CrashAfterFirstAppend(store())),
+        kvOverride = Some(kv()))
+      intercept[IllegalStateException](crashing.sync())
+      assert(crashing.checkpoint().isEmpty, kind)
+      assert(crashing.table.lastIndex() == 19L, s"$kind: the first batch is stored")
+      val restarted = new Syncer(spark, provider, root, FilterConfig(),
+        batchSize = 10L, storeOverride = Some(store()), kvOverride = Some(kv()))
+      restarted.sync()
+      val stored = restarted.table.read.select("tx_hash").as[String]
+        .collect().sorted
+      val canonical = provider.allLogs.select("tx_hash").as[String]
+        .collect().sorted
+      val rows = stored.length
+      assert(rows == 79, s"$kind: $rows rows stored")
+      assert(stored.sameElements(canonical), s"$kind: duplicates survived the restart")
+      assert(restarted.table.read.select("indx").as[Long].collect().sorted
+        .sameElements(0L until 79L), s"$kind: indices")
+    }
+  }
+
+  test("a fork walks back only to its ancestor: depth d fetches d+1 stored heights") {
+    Seq(1, 4).foreach { d =>
+      val root = tmpDir(s"walk$d")
+      new Syncer(spark, new MockProvider(spark, chain100), root,
+        FilterConfig()).sync()
+      // the stored backlog is full (blocks 90-99); the fork replaces the top
+      // d blocks and adds one
+      val forked = MockChain.fork(chain100, depth = d, extend = 1)
+      val p = new CountingProvider(new MockProvider(spark, forked))
+      val s = new Syncer(spark, p, root, FilterConfig())
+      val r = s.sync()
+      assert(p.blockHeights == (99L to (99L - d) by -1L), s"depth $d")
+      assert(r.removed == (100L - d until 100L)
+        .map(n => if (n % 2 == 0) 2 else 5).sum, s"depth $d")
+      val stored = s.table.read.select("tx_hash").as[String].collect().sorted
+      val canonical = new MockProvider(spark, forked).allLogs
+        .select("tx_hash").as[String].collect().sorted
+      assert(stored.sameElements(canonical), s"depth $d")
+      assert(s.checkpoint().map(_.hash).contains(forked.last.hash))
+    }
+  }
+
+  test("a reused Syncer runs the chain guard only on its first sync()") {
+    val root = tmpDir("guard-once")
+    val p = new CountingProvider(new MockProvider(spark, chain100.take(50)))
+    val s = new Syncer(spark, p, root, FilterConfig())
+    s.sync()
+    // a fresh store: the guard records the identity, one call each
+    assert(p.calls("genesisHash") == 1 && p.calls("chainId") == 1)
+    p.inner = new MockProvider(spark, chain100.take(60))
+    p.reset()
+    s.sync()
+    assert(p.calls("genesisHash") == 0 && p.calls("chainId") == 0)
+    assert(s.checkpoint().map(_.number).contains(59L))
+    // a fresh instance validates the recorded identity again
+    p.reset()
+    new Syncer(spark, p, root, FilterConfig()).sync()
+    assert(p.calls("genesisHash") == 1 && p.calls("chainId") == 1)
+  }
+
+  test("a fork deeper than the backlog walks every stored height, then throws") {
+    val root = tmpDir("too-deep")
+    new Syncer(spark, new MockProvider(spark, chain100), root,
+      FilterConfig()).sync()
+    val forked = MockChain.fork(chain100, depth = 12, extend = 1)
+    val p = new CountingProvider(new MockProvider(spark, forked))
+    val e = intercept[IllegalStateException] {
+      new Syncer(spark, p, root, FilterConfig()).sync()
+    }
+    assert(e.getMessage.contains("reorg deeper than backlog"))
+    assert(p.blockHeights == (99L to 90L by -1L))
   }
 
   test("a restart truncates a LogTable batch torn between its range renames") {
