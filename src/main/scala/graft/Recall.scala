@@ -56,8 +56,7 @@ object Recall {
     // LSH: the declared sim_search_lsh configuration — the OR-amplified
     // MULTI-TABLE persisted index ((nbits, tables) from the joint corpus
     // dial — T=12 at this corpus's nbits=4, growing to 24 past nbits=11;
-    // query-directed probe), plus the demoted single-table multiprobe
-    // forms for context
+    // query-directed probe)
     val (mtNbits, mtTables) = graft.queries.Serving.lshMtDial(nVec)
     val mtBudget = 12
     // temp index trees are several corpus multiples on disk (MT-LSH is
@@ -82,21 +81,10 @@ object Recall {
         probeHamming = 0, probeBudget = mtBudget)
         .collect().map(_.getLong(0)).toSet
     }
-    // demoted single-table context rows (nbits=4 multiprobe — the
-    // round-10 declared config and its shallower probes)
-    def lshAt(probe: Int): Double = meanRecall { q =>
-      Similarity.annTopK(e, e.where(col("vec_id") === q).select("embedding"),
-        "vec_id", "embedding", dim = 64, nbits = 4, k = k,
-        probeHamming = probe)
-        .collect().map(_.getLong(0)).toSet
-    }
-    val lshRecall1 = lshAt(2)
-    val lshRecall0 = lshAt(0)
 
     // IVF: the round-11 declared sim_search_ivf configuration — the
     // MULTI-ASSIGNMENT persisted index (nassign=3, nlist from the √N
-    // dial, nprobe = nlist/16); the round-10 single-assignment
-    // nlist=16/nprobe=8 kept for context
+    // dial, nprobe = nlist/16)
     val maNlist = graft.queries.Serving.ivfNlist(nVec)
     val maNprobe = graft.queries.Serving.ivfNprobe(maNlist, 16)
     val maPath = tempIndexDir("graft-recall-ivfma")
@@ -108,17 +96,10 @@ object Recall {
         "embedding", nprobe = maNprobe, k = k, nassign = 3)
         .collect().map(_.getLong(0)).toSet
     }
-    val (indexed, centroids) =
-      Similarity.ivfIndex(e, "vec_id", "embedding", nlist = 16)
-    val indexedC = indexed.cache()
-    val ivfRecallSa = meanRecall { q =>
-      Similarity.ivfTopK(indexedC, centroids, qv(q), "vec_id", "embedding",
-        nprobe = 8, k = k).collect().map(_.getLong(0)).toSet
-    }
 
     // PQ: the round-11 declared sim_search_pq configuration — the IVF-PQ
     // COMPOSITE (multi-assign cells, ADC over code columns in nprobe
-    // cells, IN-filter rerank); flat PQ16x8 kept for context
+    // cells, IN-filter rerank)
     val pqNprobe = graft.queries.Serving.pqNprobe(maNlist)
     val pqPath = tempIndexDir("graft-recall-ivfpq")
     val (pqCentroids, pqBooks) = Similarity.writeIvfPqIndex(e, "vec_id",
@@ -130,14 +111,6 @@ object Recall {
         "vec_id", "embedding", nprobe = pqNprobe, k = k, rerank = 800,
         nassign = 2)
         .collect().map(_.getLong(0)).toSet
-    }
-    val (encoded, codebooks) =
-      Similarity.pqIndex(e, "vec_id", "embedding", m = 16, k = 256,
-        samplePerCode = 16)
-    val encodedC = encoded.cache()
-    val pqRecallFlat = meanRecall { q =>
-      Similarity.pqTopK(encodedC, codebooks, qv(q), "vec_id", "embedding",
-        k = k, rerank = 400).collect().map(_.getLong(0)).toSet
     }
 
     // ── knn_join: per-id neighbour recall vs exact global top-k, in the
@@ -367,12 +340,8 @@ object Recall {
          || tier | declared query | config | metric | recall | speedup vs exact |
          ||---|---|---|---|---|---|
          || multi-table LSH top-k | `sim_search_lsh` | T=$mtTables tables × nbits=$mtNbits (dial), query-directed ${mtBudget} buckets/table (${mtTables * mtBudget} of ${mtTables.toLong * (1L << mtNbits)} partitions) | mean recall@$k over $nQueries queries vs `sim_search` | ${f"$lshRecall%.3f"} | ${speed(tExactTopK, tLsh)} (${f"$tExactTopK%.1f"}s → ${f"$tLsh%.1f"}s) |
-         || — single-table Hamming-2 |  | nbits=4, 11/16 buckets | (context: the round-10 declared config — 69% of the corpus per probe) | ${f"$lshRecall1%.3f"} | — |
-         || — single-bucket probe |  | nbits=4, 1/16 buckets | (context: what amplification buys) | ${f"$lshRecall0%.3f"} | — |
          || multi-assignment IVF top-k | `sim_search_ivf` | nlist=$maNlist (√N dial), nassign=3, nprobe=$maNprobe (${f"${100.0 * maNprobe * 3 / maNlist}%.0f"}% of corpus bytes) | mean recall@$k over $nQueries queries vs `sim_search` | ${f"$ivfRecall%.3f"} | ${speed(tExactTopK, tIvf)} (→ ${f"$tIvf%.1f"}s) |
-         || — single-assign nlist=16 |  | nlist=16, nprobe=8 | (context: the round-10 declared config — 50% of the corpus per probe) | ${f"$ivfRecallSa%.3f"} | — |
          || IVF-PQ composite top-k | `sim_search_pq` | nlist=$maNlist, nassign=2, nprobe=$pqNprobe; PQ16x8, rerank=800 | mean recall@$k over $nQueries queries vs `sim_search` | ${f"$pqRecall%.3f"} | ${speed(tExactTopK, tPq)} (→ ${f"$tPq%.1f"}s) |
-         || — flat PQ16x8 |  | m=16, 256-code books, rerank=400, full ADC scan | (context: the round-10 declared config) | ${f"$pqRecallFlat%.3f"} | — |
          || LSH knn self-join | `knn_join` | nbits=4, 6 tables × 1 query-directed probe, maxBucket=1000 | neighbour recall vs exact global top-$knnK (${exactKnn.size} edges) | ${f"$knnRecall%.3f"} | ${speed(tKnnExact, tKnnJoin)} (${f"$tKnnExact%.1f"}s → ${f"$tKnnJoin%.1f"}s) |
          || — 8 tables, 1 probe |  | nbits=4, 8 tables, probes=1 | (context: the recall-leaning dial) | ${f"$knnRecall8p%.3f"} | — |
          || — 8 tables, no probe |  | nbits=4, 8 tables | (context: the round-10 declared config) | ${f"$knnRecall80%.3f"} | — |

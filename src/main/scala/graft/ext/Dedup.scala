@@ -869,21 +869,7 @@ object Dedup {
 
   /** Connected components over near-dup pairs: the step that turns pairwise
     * duplicate evidence into dedup groups ("keep one doc per cluster").
-    * Min-label propagation to fixpoint: every node starts labeled with its
-    * own id; each round, labels flow across edges and each node keeps the
-    * minimum seen. Deterministic — the final label of a component is its
-    * smallest member id, independent of iteration order.
-    *
-    * Scale notes: each round is one join + one aggregate, both shuffling on
-    * node id; rounds needed = component diameter, which for near-dup
-    * clusters is tiny (dups of a doc are dups of each other). For graphs
-    * with long chains use the large-star/small-star variant (Kiveris et al.,
-    * "Connected Components in MapReduce"), which converges in O(log n)
-    * rounds — same per-round plan shape. `localCheckpoint` truncates
-    * lineage each round (an iterative DataFrame loop otherwise re-executes
-    * the whole prefix every round and the plan grows unboundedly); edges
-    * are checkpointed once so the (expensive) candidate-pair computation
-    * never reruns.
+    * Deterministic — the label of a component is its smallest member id.
     *
     * @param pairs undirected edges (id_a, id_b); ids must be integral
     *              (castable to long — both paths cast, so output schema is
@@ -897,8 +883,8 @@ object Dedup {
     *              the corpus, so this is the common case even at 100 TB —
     *              the same "small model on the driver, big data on the
     *              executors" split as the ANN index fits. Larger graphs
-    *              take the distributed propagation loop (or
-    *              [[connectedComponentsStar]] for long chains).
+    *              take [[connectedComponentsStar]], whose O(log n) rounds
+    *              shuffle only the pair graph.
     * @return (node, label)
     */
   def connectedComponents(
@@ -915,7 +901,7 @@ object Dedup {
     val cap = math.min(maxDriverEdges, Int.MaxValue.toLong - 2)
     val probe = p.limit((cap + 1).toInt)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
-    if (probe.length <= cap) {
+    val labels = if (probe.length <= cap) {
       // union-find with path compression; union-by-min ⇒ every component's
       // root (= label) is its minimum id
       val parent = scala.collection.mutable.Map.empty[Long, Long]
@@ -931,48 +917,11 @@ object Dedup {
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
       val withEdge = probe.flatMap(e => Seq(e._1, e._2)).distinct
-      val labels = withEdge.map(n => (n, find(n))).toSeq.toDF("node", "label")
-      return nodes.select(col(idCol).cast("long").as("node"))
-        .join(broadcast(labels), Seq("node"), "left")
-        .select(col("node"), coalesce(col("label"), col("node")).as("label"))
-    }
-    // Distributed path. Checkpoint the pair list BEFORE mirroring it: the
-    // union's two branches would otherwise each recompute the (expensive)
-    // candidate generation. Iterate ONLY over nodes that have an edge:
-    // isolated nodes can never change label, so they stay out of the loop
-    // and rejoin at the end — the loop shuffles the pair graph, never the
-    // corpus.
-    val p0 = p.localCheckpoint(true)
-    val edges = p0.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(p0.select(col("id_b").as("src"), col("id_a").as("dst")))
-    var labels = edges.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node"))
-      .localCheckpoint(true)
-    // labels only ever decrease ⇒ sum(label) strictly decreases until the
-    // fixpoint; compare in unbounded decimal (no overflow at any scale)
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("label").cast("decimal(38,0)"))).head().getDecimal(0)
-    var prev = labelSum(labels)
-    var done = false
-    var rounds = 0
-    val maxRounds = 64 // propagation needs diameter rounds; see throw below
-    while (!done && rounds < maxRounds) {
-      val prop = edges.join(labels, edges("src") === labels("node"))
-        .select(edges("dst").as("node"), col("label"))
-      labels = labels.union(prop)
-        .groupBy("node").agg(min("label").as("label"))
-        .localCheckpoint(true)
-      val cur = labelSum(labels)
-      if (cur.compareTo(prev) == 0) done = true
-      prev = cur
-      rounds += 1
-    }
-    // returning non-converged labels would silently split real duplicate
-    // clusters — fail loudly; components deeper than maxRounds want the
-    // O(log n) star variant
-    if (!done) throw new IllegalStateException(
-      s"connectedComponents did not converge in $maxRounds rounds " +
-        "(component diameter too large) — use connectedComponentsStar")
+      broadcast(withEdge.map(n => (n, find(n))).toSeq.toDF("node", "label"))
+    } else connectedComponentsStar(p)
+    // isolated nodes can never change label, so they stay out of both
+    // solvers and rejoin here — the star rounds shuffle the pair graph,
+    // never the corpus
     nodes.select(col(idCol).cast("long").as("node"))
       .join(labels, Seq("node"), "left")
       .select(col("node"), coalesce(col("label"), col("node")).as("label"))
@@ -980,14 +929,15 @@ object Dedup {
 
   /** Connected components by alternating large-star / small-star rounds
     * (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    * the O(log n)-round variant for graphs with long chains, where plain
-    * min-label propagation ([[connectedComponents]]) needs diameter rounds.
-    * Each round is one groupBy + one join over the edge set; the edge set
-    * only shrinks toward a star per component, so rounds cost less as they
-    * go. Returns (node, label) for nodes that appear in `pairs`; the label
-    * is the component's minimum id (same contract as
-    * [[connectedComponents]], asserted equivalent on random graphs in
-    * DedupSpec).
+    * the distributed path of [[connectedComponents]]. It converges in
+    * O(log n) rounds, where min-label propagation would need diameter
+    * rounds. Each round is one groupBy + one join over the edge set; the
+    * edge set only shrinks toward a star per component, so rounds cost
+    * less as they go, and `localCheckpoint` truncates lineage each round
+    * (the candidate-pair input is computed once, by the first pin).
+    * Returns (node, label) for nodes that appear in `pairs`; the label is
+    * the component's minimum id (asserted equal to the driver union-find
+    * path on random graphs in DedupSpec).
     *
     *  - large-star: every directed pair (u,v), v > u, re-links v to
     *    m(u) = min(Γ(u) ∪ u) — tall trees flatten geometrically.
@@ -1028,8 +978,8 @@ object Dedup {
       e = ss
       rounds += 1
     }
-    // same fail-loudly contract as connectedComponents: labels from a
-    // still-evolving edge set would silently split real clusters
+    // fail loudly: labels from a still-evolving edge set would silently
+    // split real duplicate clusters
     if (!done && !e.isEmpty) throw new IllegalStateException(
       "connectedComponentsStar did not converge in 30 rounds")
     // converged edges form stars rooted at component minima

@@ -5,18 +5,26 @@ import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (`ArrayType(FloatType)`).
   *
-  * Two paths:
+  * Paths:
   *  - [[cosineTopK]]: brute-force exact top-k — the correctness baseline.
   *    One broadcast of the query vector, one narrow map stage, one
   *    TakeOrderedAndProject; at 100 TB this scans everything but never
   *    shuffles the corpus, so it scales linearly with executors.
-  *  - [[lshBucketed]]: random-hyperplane LSH (SimHash for vectors) — the
-  *    scale path. Embeddings are bucketed once by an nbits-bit signature
-  *    (deterministic pseudo-random planes, so bucketing is reproducible
-  *    across runs/executors with no stored model); a query probes only its
-  *    bucket (and optionally neighboring buckets at Hamming distance 1).
-  *    Bucket assignment is a narrow transformation — ideal as a partition /
-  *    Z-order key at rest.
+  *  - ANN top-k, one persisted serving index per tier, each probed by
+  *    partition pruning to the cells/buckets the query hashes to:
+  *    multi-table LSH ([[writeLshMultiTableIndex]] /
+  *    [[annTopKMultiTable]]), multi-assignment IVF
+  *    ([[writeIvfIndexMulti]] / [[ivfTopKMulti]]) and the IVF-PQ
+  *    composite ([[writeIvfPqIndex]] / [[ivfPqTopKIndexed]]), each with
+  *    an append path and a one-job batch probe. [[ivfTopK]] probes an
+  *    [[ivfIndex]] or an [[ivfStreamWriter]] table; [[pqTopK]] is the
+  *    ADC kernel of [[ivfPqTopK]] over an [[ivfPqStreamWriter]] table.
+  *  - Random-hyperplane LSH bucketing (SimHash for vectors) for pair
+  *    mining: [[lshBucketedCapped]] / [[lshBandedCapped]] feed
+  *    [[knnJoin]] and [[Dedup.embeddingNearDup]]. Planes are
+  *    deterministic pseudo-random, so bucketing is reproducible across
+  *    runs/executors with no stored model, and bucket assignment is a
+  *    narrow transformation.
   *
   * All arithmetic is done in double precision with a fixed left-to-right
   * fold ([[foldSum]]) so results are bit-deterministic — this is what lets
@@ -147,11 +155,10 @@ object Similarity {
   /** Driver-side twin of the codegen'd table-0 signature — bit-identical
     * to [[graft.functions.LshSigsF]] on the same vector by construction
     * (same [[planeSign]] matrix, same left-to-right double fold, same
-    * NaN-compares-greater sign test; SimilaritySpec pins the parity over
-    * a fuzz corpus). This is what lets a SERVING query compute its probe
-    * buckets on the driver: the corpus-side probe becomes a
-    * partition-pruned read of the persisted bucket index with zero
-    * corpus-side signature work at query time.
+    * NaN-compares-greater sign test; SimilaritySpec pins the parity
+    * against [[lshSignature]] over a fuzz corpus). Its planes are table 0
+    * of [[lshSignatureLocalFrom]], the form the multi-table serving probe
+    * uses to compute its probe keys on the driver.
     */
   def lshSignatureLocal(vec: Array[Float], dim: Int, nbits: Int): Long =
     lshSignatureLocalFrom(vec, dim, fromPlane = 0, nbits)
@@ -177,88 +184,6 @@ object Similarity {
       p += 1
     }
     sig
-  }
-
-  /** The multiprobe bucket set for one query: its own bucket first, then
-    * every bucket within Hamming `probeHamming` in the same flip order as
-    * [[annTopK]] — the two forms probe IDENTICAL bucket sets, so their
-    * outputs match bit-for-bit.
-    */
-  def probeBuckets(queryVec: Array[Float], dim: Int, nbits: Int,
-      probeHamming: Int): Seq[Long] = {
-    val qb = lshSignatureLocal(queryVec, dim, nbits)
-    val flips =
-      (if (probeHamming >= 1) (0 until nbits).map(j => 1L << j)
-      else Seq.empty) ++
-        (if (probeHamming >= 2)
-          for { i <- 0 until nbits; j <- i + 1 until nbits }
-            yield (1L << i) | (1L << j)
-        else Seq.empty)
-    qb +: flips.map(qb ^ _)
-  }
-
-  /** Persist the single-table LSH bucket index of a corpus, PARTITIONED
-    * by bucket, with each vector's norm precomputed — the ANN top-k
-    * serving index ([[annTopKIndexed]] probes it). This is the deployment
-    * shape AnnCrossover measures beating the brute-force scan at ≥1M
-    * vectors: the on-the-fly [[annTopK]] recomputes every corpus
-    * signature per query (itself a full scan), while a probe against
-    * this index reads only the `(1 + nbits + C(nbits,2))/2^nbits`
-    * partition slice the query hashes to.
-    */
-  def writeLshBucketIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      path: String, dim: Int, nbits: Int): Unit =
-    lshBucketed(corpus, vecCol, dim, nbits)
-      .select(col(idCol), col(vecCol),
-        sqrt(norm2(col(vecCol))).as("__norm"), col("lsh_bucket"))
-      // range-layout on (bucket, id) BEFORE the partitioned write: each
-      // task then holds a contiguous bucket slice, so every bucket
-      // directory gets O(partitions/buckets) files instead of one file
-      // per (task × bucket) — 512 tiny files per index was measurable
-      // pure listing/footer overhead on every probe
-      .repartitionByRange(col("lsh_bucket"), col(idCol))
-      .sortWithinPartitions("lsh_bucket", idCol)
-      .write.mode("overwrite").partitionBy("lsh_bucket").parquet(path)
-
-  /** ANN top-k SERVED from the persisted bucket index: the probe set is
-    * computed on the driver ([[probeBuckets]]), the scan partition-prunes
-    * to those buckets (`PartitionFilters: lsh_bucket IN (...)` — no other
-    * partition directory is listed or read), and the exact cosine runs
-    * only inside them against the stored norms. Output is bit-identical
-    * to [[annTopK]] at the same (nbits, probeHamming): same bucket set,
-    * same fold arithmetic (the stored `__norm` is the same
-    * `sqrt(norm2(v))` double, the driver-side query norm replays the
-    * identical left-to-right square fold).
-    */
-  def annTopKIndexed(
-      spark: org.apache.spark.sql.SparkSession,
-      indexPath: String,
-      queryVec: Array[Float],
-      idCol: String,
-      vecCol: String,
-      dim: Int,
-      nbits: Int,
-      k: Int,
-      probeHamming: Int = 0
-  ): DataFrame = {
-    val buckets = probeBuckets(queryVec, dim, nbits, probeHamming)
-    val qn = {
-      var acc = 0.0
-      var i = 0
-      while (i < queryVec.length) {
-        acc += queryVec(i).toDouble * queryVec(i).toDouble; i += 1
-      }
-      math.sqrt(acc)
-    }
-    val q = spark.createDataFrame(Seq(Tuple1(queryVec.toSeq))).toDF("__q")
-    spark.read.parquet(indexPath)
-      .where(col("lsh_bucket").isin(buckets.map(java.lang.Long.valueOf): _*))
-      .crossJoin(broadcast(q))
-      .select(col(idCol),
-        (dot(col(vecCol), col("__q")) / (col("__norm") * lit(qn)))
-          .as("cosine"))
-      .orderBy(col("cosine").desc, col(idCol))
-      .limit(k)
   }
 
   /** The OR-amplified multi-table probe key set for one query: per table
@@ -374,15 +299,13 @@ object Similarity {
     * (the classic multi-table LSH storage trade: T× space buys
     * single-bucket probes at amplified recall).
     *
-    * This is the 100×-true serving config the single-table
-    * [[writeLshBucketIndex]] is not: a Hamming-2 multiprobe at nbits=4
-    * reads 11/16 of the corpus per query (the round-10 ceiling), while
-    * T tables at higher nbits probed at Hamming ≤ 1 read
-    * `T*(1+nbits)/2^nbits` — a few percent — at recall
-    * `1−(1−q)^T` (q = per-table probe hit rate), measured ≥ the
-    * single-table multiprobe's on this corpus (AnnCrossover / RECALL.md).
-    * Range-layout before the partitioned write for the same
-    * tiny-file reason as [[writeLshBucketIndex]].
+    * T tables at nbits probed at Hamming ≤ 1 read `T*(1+nbits)/2^nbits`
+    * of the corpus — a few percent — at recall `1−(1−q)^T` (q =
+    * per-table probe hit rate; AnnCrossover / RECALL.md). Each table is
+    * range-laid-out on (key, id) before its partitioned write, so every
+    * key directory gets O(partitions/keys) files instead of one file per
+    * (task × key) — tiny files are pure listing/footer overhead on every
+    * probe.
     */
   def writeLshMultiTableIndex(corpus: DataFrame, idCol: String,
       vecCol: String, path: String, dim: Int, nbits: Int,
@@ -662,21 +585,6 @@ object Similarity {
       .where(col("rnk") <= k)
   }
 
-  /** Persist the IVF index cell-partitioned (the batch twin of
-    * [[ivfStreamWriter]], fitting the coarse quantizer first) and return
-    * the centroids a probe needs. [[ivfTopK]] over the re-read table
-    * partition-prunes to the `nprobe` probed cells.
-    */
-  def writeIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      path: String, nlist: Int): Array[Array[Double]] = {
-    val (indexed, centroids) = ivfIndex(corpus, idCol, vecCol, nlist)
-    indexed
-      .repartitionByRange(col("ivf_cell"), col(idCol)) // see writeLshBucketIndex
-      .sortWithinPartitions("ivf_cell", idCol)
-      .write.mode("overwrite").partitionBy("ivf_cell").parquet(path)
-    centroids
-  }
-
   /** MULTI-ASSIGNMENT IVF index (the recall-preserving scaled form):
     * every vector joins its `nassign` nearest cells (one exploded row
     * per assignment — [[graft.functions.NearestCentroidsKF]], one narrow
@@ -709,8 +617,8 @@ object Similarity {
   }
 
   /** Persist the multi-assignment IVF index cell-partitioned, with the
-    * norm precomputed per row — the serving twin of [[writeIvfIndex]]
-    * for the scaled configuration. Probe with [[ivfTopKMulti]].
+    * norm precomputed per row — the `sim_search_ivf` serving index.
+    * Probe with [[ivfTopKMulti]].
     */
   def writeIvfIndexMulti(corpus: DataFrame, idCol: String, vecCol: String,
       path: String, nlist: Int, nassign: Int): Array[Array[Double]] = {
@@ -986,8 +894,8 @@ object Similarity {
     // one id (identical codes per copy ⇒ identical ADC score ⇒ max is
     // pure dedup). Driver-collected shortlist: `rerank` ids is a few
     // hundred longs — the same driver-side probe-set shape as
-    // probeBuckets/nearestCells, and what lets the vector fetch be an
-    // IN-filter on the pruned scan instead of a corpus-wide semi-join.
+    // probeKeysMultiTable/nearestCells, and what lets the vector fetch be
+    // an IN-filter on the pruned scan instead of a corpus-wide semi-join.
     val shortlistIds = pruned
       .where(col("pq_norm") > 0.0)
       .select(col(idCol), score.as("__adc"))
@@ -1196,10 +1104,9 @@ object Similarity {
       .where(col("rnk") <= k)
   }
 
-  /** Bucket the corpus by LSH signature; ANN search = probe the query's
-    * bucket only, then exact-cosine rank within it. Returns the corpus with
-    * a `lsh_bucket` column — write partitioned/bucketed by it at rest so a
-    * probe is a partition-pruned scan, not a full pass.
+  /** Bucket the corpus by its nbits-bit LSH signature: the corpus plus a
+    * `lsh_bucket` column. The uncapped reference [[lshBucketedCapped]]
+    * must reproduce when no bucket exceeds its cap (SimilaritySpec).
     */
   def lshBucketed(corpus: DataFrame, vecCol: String, dim: Int, nbits: Int): DataFrame =
     corpus.withColumn("lsh_bucket", lshSignature(col(vecCol), dim, nbits))
@@ -1401,8 +1308,9 @@ object Similarity {
 
   /** Approximate k-nearest-neighbour SELF-join: for every vector, its `k`
     * most cosine-similar neighbours among vectors sharing its LSH bucket —
-    * the all-pairs companion of [[annTopK]] (one query) used for diversity
-    * sampling, curriculum ordering and cluster seeding over a whole corpus.
+    * the all-pairs companion of [[annTopKMultiTable]] (one query) used for
+    * diversity sampling, curriculum ordering and cluster seeding over a
+    * whole corpus.
     *
     * Scale shape: candidate pairs exist only within buckets (the only
     * quadratic step is per-bucket, same cost envelope as
@@ -1982,22 +1890,6 @@ object Similarity {
     }
   }
 
-  /** Persist the PQ index (id, vector, code columns, norm) and return the
-    * fitted codebooks — [[pqTopK]] over the re-read table then
-    * column-prunes its ADC pass to the code columns alone; the vector
-    * column is touched only by the rerank shortlist's semi-join.
-    */
-  def writePqIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      path: String, m: Int, k: Int = 16,
-      samplePerCode: Int = 64): Array[Array[Array[Double]]] = {
-    val (encoded, codebooks) = pqIndex(corpus, idCol, vecCol, m, k,
-      samplePerCode)
-    encoded
-      .repartitionByRange(col(idCol)).sortWithinPartitions(idCol)
-      .write.mode("overwrite").parquet(path)
-    codebooks
-  }
-
   /** Streaming IVF index maintenance: each micro-batch of vectors gets its
     * cell from the broadcast centroids (one narrow codegen'd pass — the
     * model is plan-constant, nothing shuffles) and appends to a
@@ -2193,51 +2085,6 @@ object Similarity {
         xxhash64(col("ivf_cell"), lit(salt)), col("ivf_cell"), col(idCol))
       .limit(k)
       .drop("__rk")
-  }
-
-  /** ANN top-k: exact cosine restricted to the query's LSH bucket.
-    * Recall < 1 by construction; ScalaTest measures it against
-    * [[cosineTopK]] (SimilaritySpec) and `graft.Recall` records it at
-    * bench scale.
-    *
-    * `probeHamming ≥ 1` multiprobes: the query also scans every bucket
-    * within that Hamming distance of its own (a near neighbour that
-    * disagrees on one — or, at distance 2, two — planes lands there; the
-    * most likely misses in probability order). Distance 1 scans
-    * (1+nbits)/2^nbits of the corpus, distance 2 adds C(nbits,2) more
-    * buckets (11/16 at nbits=4); at rest the probes are partition-pruned
-    * reads, never a full pass.
-    */
-  def annTopK(
-      corpus: DataFrame,
-      query: DataFrame,
-      idCol: String,
-      vecCol: String,
-      dim: Int,
-      nbits: Int,
-      k: Int,
-      probeHamming: Int = 0
-  ): DataFrame = {
-    val bucketed = lshBucketed(corpus, vecCol, dim, nbits)
-    val q = lshBucketed(query.select(col(vecCol).as(vecCol)), vecCol, dim, nbits)
-      .select(col(vecCol).as("__q"), col("lsh_bucket").as("__qb"))
-    val flips =
-      (if (probeHamming >= 1) (0 until nbits).map(j => 1L << j) else Seq.empty) ++
-        (if (probeHamming >= 2)
-          for { i <- 0 until nbits; j <- i + 1 until nbits }
-            yield (1L << i) | (1L << j)
-        else Seq.empty)
-    val probeSet =
-      array((col("__qb") +: flips.map(m =>
-        col("__qb").bitwiseXOR(lit(m)))): _*)
-    val probes = q.select(col("__q"), explode(probeSet).as("__qb"))
-    // buckets are disjoint, so a corpus row matches at most one probe —
-    // no dedup needed before the ranking
-    bucketed
-      .join(broadcast(probes), col("lsh_bucket") === col("__qb"))
-      .select(col(idCol), cosine(col(vecCol), col("__q")).as("cosine"))
-      .orderBy(col("cosine").desc, col(idCol))
-      .limit(k)
   }
 
   /** PCA fit over the embedding corpus — the dimensionality-reduction /

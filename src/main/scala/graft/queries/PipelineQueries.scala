@@ -844,8 +844,7 @@ object PipelineQueries {
     // partition-prunes to the key set, duplicates collapse map-side,
     // and the index RELATION is memoized (per-query re-reads pay
     // partition discovery over every bucket directory). nbits scales
-    // with the corpus (lshMtNbits); the single-table indexed form stays
-    // library surface + teaching row. Rows-only; twin asserts
+    // with the corpus (lshMtNbits). Rows-only; twin asserts
     // self-retrieval + bit-exact cosines.
     "sim_search_lsh" -> { (s, d) =>
       val e = Tables.embeddings(s, d)
@@ -1172,9 +1171,8 @@ object PipelineQueries {
     // CODE COLUMNS ONLY (the 32×-compressed slice), and re-ranks the
     // driver-collected shortlist exactly via an id IN-filter on the same
     // pruned cells. m=16 four-dim subspaces × 256-code books (PQ16x8 —
-    // smaller books measured collapsing at ≥1M, RECALL.md). Flat pqTopK
-    // stays library surface + teaching row. Rows-only; twin asserts
-    // self-retrieval + bit-exact cosines.
+    // smaller books measured collapsing at ≥1M, RECALL.md). Rows-only;
+    // twin asserts self-retrieval + bit-exact cosines.
     "sim_search_pq" -> { (s, d) =>
       val e = Tables.embeddings(s, d)
       val (idx, centroids, books, nlist) = ivfPqIndexOf(e,

@@ -11,20 +11,17 @@ import graft.ext.Similarity
   * body is unchanged).
   *
   * Artifact-memo contract for the PERSISTED serving indexes
-  * (bucket-partitioned LSH, cell-partitioned IVF, encoded PQ): the
-  * index is an input ARTIFACT built once per (session, corpus plan,
-  * config) by the offline ingest path
-  * ([[graft.ext.Similarity.writeLshBucketIndex]] /
-  * [[graft.ext.Similarity.writeIvfIndex]] /
-  * [[graft.ext.Similarity.writePqIndex]] — the batch twins of the
+  * (multi-table LSH, multi-assignment IVF, IVF-PQ composite): the index
+  * is an input ARTIFACT built once per (session, corpus plan, config) by
+  * the offline ingest path
+  * ([[graft.ext.Similarity.writeLshMultiTableIndex]] /
+  * [[graft.ext.Similarity.writeIvfIndexMulti]] /
+  * [[graft.ext.Similarity.writeIvfPqIndex]] — the batch twins of the
   * streaming index writers), so the declared `sim_search_*` queries
   * measure the SERVING shape: a driver-computed probe set against a
   * partition-pruned read. That is the form whose crossover
-  * AnnCrossover measures BEATING the brute-force scan at 1M vectors
-  * (RECALL.md) — the on-the-fly forms recompute every corpus signature
-  * or cell per query (itself a full scan) and never cross; they remain
-  * library surface ([[graft.ext.Similarity.annTopK]]) and the
-  * crossover harness's teaching rows.
+  * AnnCrossover measures BEATING the brute-force scan at 1M–5M vectors
+  * (RECALL.md).
   */
 object Serving {
 
@@ -126,10 +123,6 @@ object Serving {
   // cfg strings carry EVERY parameter that affects the written artifact
   // (ADVICE r10: a call differing only in dim/samplePerCode must not
   // silently reuse an index built with the old configuration).
-  // The round-10 single-table LSH / single-assignment IVF / flat PQ memo
-  // builders are gone with their demoted queries — those forms remain
-  // library surface (Similarity.writeLshBucketIndex/writeIvfIndex/
-  // writePqIndex) and AnnCrossover teaching rows.
 
   /** Memoized MULTI-TABLE LSH serving index (round 11 — the 100×-true
     * config): nbits comes from the corpus-size dial. The memo carries

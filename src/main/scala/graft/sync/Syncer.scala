@@ -444,9 +444,14 @@ final class Syncer(
       }
     val walked = walk(stored.sortBy(-_.number).toList, Nil)
     val res = Reconciler.reconcile(stored, walked, maxBlockBacklog)
-    // truncate stored logs above the ancestor (S9) — retractions
-    val removed = table.firstIndexAbove(res.ancestor)
-      .fold(0L)(table.removeLogsFrom(_).count())
+    // truncate stored logs above the ancestor (S9) — retractions.
+    // Indices are dense from 0, so the retracted count is the next index
+    // read before the cut minus the cut: metadata only, no Spark job
+    val removed = table.firstIndexAbove(res.ancestor).fold(0L) { cut =>
+      val next = table.lastIndex()
+      table.removeLogsFrom(cut)
+      next - cut
+    }
     // reset the checkpoint to the common ancestor (prunes forked backlog
     // entries) and resync forward through the normal bulk+tail path —
     // this handles an arbitrarily long gap between ancestor and head.

@@ -23,12 +23,10 @@ import graft.ext.Similarity
   *  - `index_s`  — one-time index/persist cost (exact pays its cache
   *    materialization here too).
   *
-  * Tier configs are the DECLARED query configs at every scale, plus a
-  * `*_scaled` variant where the knob the design documents as the scale
-  * dial is re-sized to the corpus (LSH: nbits so buckets stay ~4k docs;
-  * IVF: nlist ≈ √N with the same nprobe/nlist probe fraction) — the
-  * honest statement is "the declared config crosses over HERE; the
-  * re-dialed config crosses over EARLIER/at recall X".
+  * Tiers are the serving forms of the declared queries (multi-table
+  * LSH, multi-assignment IVF, IVF-PQ), each at several dial settings
+  * (tables × nbits, nlist × nassign × nprobe, rerank), per-query and
+  * batched; `SPARK_GRAFT_ANN_TIERS` selects a subset by cell name.
   *
   * One JSON line on stdout; recorded in SOAK.md / RECALL.md.
   */
@@ -108,70 +106,8 @@ object AnnCrossover {
           run: Array[Float] => DataFrame): (String, Double, Double, Double) =
         (name, time(run), recallOf(run), indexS)
 
-      // LSH declared (nbits=4, probe 11/16 buckets) + scaled (buckets ~4k)
-      def lsh(nbits: Int): Array[Float] => DataFrame = qv =>
-        Similarity.annTopK(embs, qDf(qv), "vec_id", "embedding",
-          dim = 64, nbits = nbits, k = k, probeHamming = 2)
-      val nbitsScaled = math.min(12, math.max(4,
-        (math.log(n.toDouble / 4096.0) / math.log(2.0)).ceil.toInt))
-
       val idxRoot = java.nio.file.Files
         .createTempDirectory(s"graft-annx-x$factor").toString
-
-      // LSH served from the PERSISTED bucket index — the DECLARED
-      // sim_search_lsh shape since round 10 (partition-pruned parquet
-      // probe via Similarity.annTopKIndexed; the on-the-fly form above
-      // recomputes every corpus signature per query, which is what kept
-      // it below crossover through round 9)
-      def lshIndexedCell(name: String,
-          nbits: Int): (String, Double, Double, Double) = {
-        val path = s"$idxRoot/lsh$nbits"
-        val t0 = System.nanoTime()
-        Similarity.writeLshBucketIndex(embs, "vec_id", "embedding", path,
-          dim = 64, nbits = nbits)
-        val build = (System.nanoTime() - t0) / 1e9
-        cell(name, build, qv => Similarity.annTopKIndexed(spark, path, qv,
-          "vec_id", "embedding", dim = 64, nbits = nbits, k = k,
-          probeHamming = 2))
-      }
-
-      // IVF served from the persisted cell-partitioned index — the
-      // DECLARED sim_search_ivf shape (nlist=16, nprobe=8) + scaled
-      // (nlist ≈ √N, same probe fraction)
-      def ivfCell(name: String, nlist: Int,
-          nprobe: Int): (String, Double, Double, Double) = {
-        val path = s"$idxRoot/ivf$nlist"
-        val t0 = System.nanoTime()
-        val centroids = Similarity.writeIvfIndex(embs, "vec_id",
-          "embedding", path, nlist)
-        val build = (System.nanoTime() - t0) / 1e9
-        val idx = spark.read.parquet(path)
-        cell(name, build, qv => Similarity.ivfTopK(idx, centroids,
-          qv, "vec_id", "embedding", nprobe = nprobe, k = k))
-      }
-      // √N capped at 256: ivfIndex's driver-local Lloyd's fit is
-      // O(sample·nlist·dim) and the sample is nlist·64 — beyond ~256
-      // cells the FIT would dominate the harness (a cluster deployment
-      // distributes the fit; the crossover question is about QUERY cost)
-      val nlistScaled = math.min(256,
-        math.max(16, math.sqrt(n.toDouble).round.toInt))
-
-      // PQ served from the persisted encoded index. `codes` is the
-      // codebook size: 16 was the round-9 declared config (measured
-      // collapsing to recall 0.17–0.21 at ≥1M); 256 (8-bit) with m=16
-      // 4-dim subspaces is the round-10 declared config
-      def pqCell(name: String, m: Int, codes: Int, samplePerCode: Int,
-          rerank: Int): (String, Double, Double, Double) = {
-        val path = s"$idxRoot/pq$m-$codes-$rerank"
-        val t0 = System.nanoTime()
-        val codebooks = Similarity.writePqIndex(embs, "vec_id",
-          "embedding", path, m = m, k = codes,
-          samplePerCode = samplePerCode)
-        val build = (System.nanoTime() - t0) / 1e9
-        val enc = spark.read.parquet(path)
-        cell(name, build, qv => Similarity.pqTopK(enc, codebooks,
-          qv, "vec_id", "embedding", k = k, rerank = rerank))
-      }
 
       // MULTI-TABLE LSH serving index (round 11 — the OR-amplified
       // small-fraction config): T tables at nbits, Hamming-1 probe per
@@ -327,12 +263,6 @@ object AnnCrossover {
       def want(name: String): Boolean = extraTiers.forall(_.contains(name))
 
       val tiers = Seq(
-        ("lsh_onthefly", () => cell("lsh_onthefly", 0.0, lsh(4))),
-        (s"lsh_onthefly_b$nbitsScaled",
-          () => cell(s"lsh_onthefly_b$nbitsScaled", 0.0, lsh(nbitsScaled))),
-        ("lsh_declared_idx_b4", () => lshIndexedCell("lsh_declared_idx_b4", 4)),
-        (s"lsh_indexed_b$nbitsScaled",
-          () => lshIndexedCell(s"lsh_indexed_b$nbitsScaled", nbitsScaled)),
         ("lsh_mt_t8_b8_h1", () => lshMtCell("lsh_mt_t8_b8_h1", 8, 8, 1)),
         ("lsh_mt_t8_b10_h1", () => lshMtCell("lsh_mt_t8_b10_h1", 10, 8, 1)),
         ("lsh_mt_t12_b10_h1", () => lshMtCell("lsh_mt_t12_b10_h1", 10, 12, 1)),
@@ -347,10 +277,6 @@ object AnnCrossover {
           () => lshMtQdCell("lsh_mt_t8_b10_qd8", 10, 8, 8)),
         ("lsh_mt_t16_b10_qd8",
           () => lshMtQdCell("lsh_mt_t16_b10_qd8", 10, 16, 8)),
-        ("ivf_declared_idx", () => ivfCell("ivf_declared_idx", 16, 8)),
-        (s"ivf_scaled_l$nlistScaled", () => ivfCell(
-          s"ivf_scaled_l$nlistScaled", nlistScaled,
-          math.max(8, nlistScaled / 8))),
         ("ivf_ma_l256_a3_p8", () => ivfMaCell("ivf_ma_l256_a3_p8", 256, 3, 8)),
         ("ivf_ma_l256_a3_p16",
           () => ivfMaCell("ivf_ma_l256_a3_p16", 256, 3, 16)),
@@ -426,12 +352,7 @@ object AnnCrossover {
         ("ivfpq_l256_a3_p32_m16",
           () => ivfPqCell("ivfpq_l256_a3_p32_m16", 256, 3, 32, 16, 400)),
         ("ivfpq_l256_a3_p48_rr800",
-          () => ivfPqCell("ivfpq_l256_a3_p48_rr800", 256, 3, 48, 16, 800)),
-        ("pq_declared_m16c256",
-          () => pqCell("pq_declared_m16c256", 16, 256, 16, 400)),
-        ("pq_m8c256", () => pqCell("pq_m8c256", 8, 256, 16, 400)),
-        ("pq_m16c256_rr2k", () => pqCell("pq_m16c256_rr2k", 16, 256, 16, 2000)),
-        ("pq_m8c16", () => pqCell("pq_m8c16", 8, 16, 64, 400))
+          () => ivfPqCell("ivfpq_l256_a3_p48_rr800", 256, 3, 48, 16, 800))
       ).filter(t => want(t._1)).map(_._2.apply())
 
       // the at-rest exact baseline — what the DECLARED sim_search runs

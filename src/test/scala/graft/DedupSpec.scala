@@ -203,7 +203,7 @@ class DedupSpec extends SparkSpec {
       .collect().map(r => r.getAs[Long]("node") -> r.getAs[Long]("label"))
       .toMap
     assert(fast == expected)
-    // distributed propagation path (threshold forced to 0)
+    // distributed star path (threshold forced to 0)
     val dist = Dedup.connectedComponents(pairs, nodes, "doc_id",
         maxDriverEdges = 0L)
       .collect().map(r => r.getAs[Long]("node") -> r.getAs[Long]("label"))
@@ -211,7 +211,20 @@ class DedupSpec extends SparkSpec {
     assert(dist == expected)
   }
 
-  test("large-star/small-star CC matches label propagation on random graphs") {
+  test("connected components: the distributed path labels a 70-node chain") {
+    // diameter 69: more rounds than any diameter-bound propagation loop
+    // should be allowed to run; the star path needs O(log n)
+    val pairs = (0L until 69L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val nodes = (0L until 70L).toDF("doc_id")
+    val got = Dedup.connectedComponents(pairs, nodes, "doc_id",
+        maxDriverEdges = 0L)
+      .collect().map(r => r.getAs[Long]("node") -> r.getAs[Long]("label"))
+      .toMap
+    assert(got == (0L until 70L).map(_ -> 0L).toMap)
+  }
+
+  test("large-star/small-star CC matches the driver union-find path on " +
+    "random graphs") {
     val rnd = new scala.util.Random(42)
     (0 until 3).foreach { trial =>
       val n = 30
@@ -221,6 +234,7 @@ class DedupSpec extends SparkSpec {
           .filter(p => p._1 != p._2)
       val pairs = edges.toDF("id_a", "id_b")
       val nodes = (0L until n.toLong).toDF("doc_id")
+      // default threshold: the driver union-find path
       val simple = Dedup.connectedComponents(pairs, nodes, "doc_id")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val star = Dedup.connectedComponentsStar(pairs)

@@ -120,10 +120,9 @@ class PlanLintSpec extends SparkSpec {
   test("declared ANN serving probes: bounded corpus fraction at the 1M+ " +
     "dial point, and the executed plan partition-prunes to exactly the " +
     "driver-computed key set") {
-    // the round-10 weak was a 69%/50% probe; the round-11 dials froze
-    // the fraction at 14–19%; the round-12 DE-CLAMPED dials must SHRINK
-    // it with N — pinned as arithmetic so a config drift fails here
-    // before AnnCrossover re-measures it
+    // the DE-CLAMPED dials must SHRINK the probed fraction with N —
+    // pinned as arithmetic so a config drift fails here before
+    // AnnCrossover re-measures it
     val (nbits1m, tables1m) = graft.queries.Serving.lshMtDial(1000000L)
     assert(nbits1m == 12 && tables1m == 24,
       s"LSH joint dial at 1M moved: ($nbits1m, $tables1m)")
@@ -170,7 +169,8 @@ class PlanLintSpec extends SparkSpec {
     // and the plan itself: the probe scan's partition filter carries
     // EXACTLY tables*budget keys (12×12 — the query-directed probe set;
     // nothing else is listed or read — the same property the
-    // files-touched check in SimilaritySpec pins at the file level)
+    // files-touched check in SimilaritySpec's annTopKMultiTable case
+    // pins at the file level)
     val df = SparkEntry.queries("sim_search_lsh")(spark, sf)
     val scans = allNodes(df.queryExecution.executedPlan).collect {
       case f: FileSourceScanExec if f.partitionFilters.nonEmpty => f

@@ -35,30 +35,9 @@ class SimilaritySpec extends SparkSpec {
       top.map(_.getDouble(1)).toSeq) // descending
   }
 
-  test("LSH ANN: recall vs brute force on clustered vectors") {
-    // 5 clusters of 40 vectors each: center + small deterministic noise
-    val rnd = new scala.util.Random(7)
-    val centers = (0 until 5).map(_ =>
-      Array.fill(16)(rnd.nextGaussian()))
-    val vecs = (0 until 200).map { i =>
-      val c = centers(i % 5)
-      val v = c.map(x => (x + 0.15 * rnd.nextGaussian()).toFloat).toSeq
-      (i.toLong, v)
-    }
-    val df = vecs.toDF("vec_id", "embedding").cache()
-    val query = df.where(col("vec_id") === 0).select("embedding")
-    val exact = Similarity.cosineTopK(df, df.where(col("vec_id") === 0),
-      "vec_id", "embedding", k = 10).collect().map(_.getLong(0)).toSet
-    val ann = Similarity.annTopK(df, query, "vec_id", "embedding",
-      dim = 16, nbits = 4, k = 10).collect().map(_.getLong(0)).toSet
-    val recall = exact.intersect(ann).size.toDouble / exact.size
-    // same-cluster vectors share buckets with high probability
-    assert(recall >= 0.5, s"recall $recall too low")
-  }
-
   test("knnJoin: per-vector neighbours rank correctly with usable recall") {
-    // same clustered fixture as the ANN test — neighbours should be
-    // overwhelmingly same-cluster
+    // clustered fixture — neighbours should be overwhelmingly
+    // same-cluster
     val rnd = new scala.util.Random(11)
     val centers = (0 until 5).map(_ => Array.fill(16)(rnd.nextGaussian()))
     val vecs = (0 until 100).map { i =>
@@ -366,96 +345,6 @@ class SimilaritySpec extends SparkSpec {
           sparkSide(id), s"signature mismatch at id=$id nbits=$nbits")
       }
     }
-  }
-
-  test("annTopKIndexed over the persisted bucket index is bit-identical " +
-    "to the on-the-fly probe, through a partition-pruned scan") {
-    val rnd = new scala.util.Random(19)
-    val centers = (0 until 5).map(_ => Array.fill(16)(rnd.nextGaussian()))
-    val vecs = (0 until 200).map { i =>
-      val c = centers(i % 5)
-      (i.toLong, c.map(x => (x + 0.15 * rnd.nextGaussian()).toFloat).toSeq)
-    }
-    val df = vecs.toDF("vec_id", "embedding").cache()
-    val path = tmpDir("lshidx")
-    Similarity.writeLshBucketIndex(df, "vec_id", "embedding", path,
-      dim = 16, nbits = 4)
-    val qv = vecs(3)._2.toArray
-    for (probe <- Seq(0, 1, 2)) {
-      def bits(r: org.apache.spark.sql.Row) =
-        (r.getLong(0), java.lang.Double.doubleToLongBits(r.getDouble(1)))
-      val onTheFly = Similarity.annTopK(df,
-        Seq(Tuple1(qv.toSeq)).toDF("embedding"), "vec_id", "embedding",
-        dim = 16, nbits = 4, k = 10, probeHamming = probe)
-        .collect().map(bits).toSeq
-      val served = Similarity.annTopKIndexed(spark, path, qv,
-        "vec_id", "embedding", dim = 16, nbits = 4, k = 10,
-        probeHamming = probe).collect().map(bits).toSeq
-      assert(served == onTheFly, s"probeHamming=$probe diverged")
-    }
-    // the serving plan partition-prunes on the bucket key (the scan's
-    // PartitionFilters carry the IN list — no full directory listing)
-    val planStr = Similarity.annTopKIndexed(spark, path, qv,
-      "vec_id", "embedding", dim = 16, nbits = 4, k = 10, probeHamming = 2)
-      .queryExecution.executedPlan.toString
-    assert(planStr.contains("PartitionFilters") &&
-      planStr.contains("lsh_bucket"),
-      s"expected a partition-pruned scan, got:\n$planStr")
-    // and the files actually read sit only in probed bucket directories
-    val probed = Similarity.probeBuckets(qv, 16, 4, probeHamming = 1).toSet
-    val touched = spark.read.parquet(path)
-      .where(col("lsh_bucket").isin(probed.toSeq.map(Long.box): _*))
-      .select(input_file_name()).distinct().as[String].collect()
-    touched.foreach { f =>
-      val b = f.split("lsh_bucket=")(1).split("/")(0).toLong
-      assert(probed.contains(b), s"read outside the probe set: $f")
-    }
-  }
-
-  test("persisted IVF and PQ indexes serve identically to their in-memory " +
-    "forms") {
-    val rnd = new scala.util.Random(23)
-    val centers = (0 until 4).map(_ => Array.fill(16)(rnd.nextGaussian()))
-    val vecs = (0 until 200).map { i =>
-      val c = centers(i % 4)
-      (i.toLong, c.map(x => (x + 0.1 * rnd.nextGaussian()).toFloat).toSeq)
-    }
-    val df = vecs.toDF("vec_id", "embedding").cache()
-    val qv = vecs(5)._2.toArray
-    def rows(d: org.apache.spark.sql.DataFrame) = d.collect()
-      .map(r => (r.getLong(0),
-        java.lang.Double.doubleToLongBits(r.getDouble(1)))).toSeq
-    // IVF: same deterministic fit ⇒ same centroids; parquet floats are
-    // exact ⇒ same probe output
-    val ivfPath = tmpDir("ivfidx")
-    val cPersisted = Similarity.writeIvfIndex(df, "vec_id", "embedding",
-      ivfPath, nlist = 4)
-    val (indexedMem, cMem) = Similarity.ivfIndex(df, "vec_id", "embedding",
-      nlist = 4)
-    assert(cPersisted.map(_.toSeq).toSeq == cMem.map(_.toSeq).toSeq)
-    assert(rows(Similarity.ivfTopK(spark.read.parquet(ivfPath), cPersisted,
-      qv, "vec_id", "embedding", nprobe = 2, k = 10)) ==
-      rows(Similarity.ivfTopK(indexedMem, cMem, qv, "vec_id", "embedding",
-        nprobe = 2, k = 10)))
-    // the probe partition-prunes on the cell key
-    val ivfPlan = Similarity.ivfTopK(spark.read.parquet(ivfPath),
-      cPersisted, qv, "vec_id", "embedding", nprobe = 2, k = 10)
-      .queryExecution.executedPlan.toString
-    assert(ivfPlan.contains("PartitionFilters") &&
-      ivfPlan.contains("ivf_cell"))
-    // PQ: persisted codes round-trip; the ADC+rerank probe matches the
-    // in-memory one
-    val pqPath = tmpDir("pqidx")
-    val books = Similarity.writePqIndex(df, "vec_id", "embedding", pqPath,
-      m = 4, k = 16)
-    val (encodedMem, booksMem) = Similarity.pqIndex(df, "vec_id",
-      "embedding", m = 4, k = 16)
-    assert(books.map(_.map(_.toSeq).toSeq).toSeq ==
-      booksMem.map(_.map(_.toSeq).toSeq).toSeq)
-    assert(rows(Similarity.pqTopK(spark.read.parquet(pqPath), books, qv,
-      "vec_id", "embedding", k = 10, rerank = 50)) ==
-      rows(Similarity.pqTopK(encodedMem, booksMem, qv, "vec_id",
-        "embedding", k = 10, rerank = 50)))
   }
 
   test("codegen dot product is bit-identical to the interpreted HOF fold") {
@@ -1223,8 +1112,7 @@ class SimilaritySpec extends SparkSpec {
     assert(full == exact, "full multi-assign probe diverged from exact")
     // partial probe: multi-assignment sees boundary vectors the
     // single-assignment index loses (deterministic corpus+fit ⇒ stable)
-    val saPath = tmpDir("ivfsa")
-    val cSa = Similarity.writeIvfIndex(df, "vec_id", "embedding", saPath,
+    val (saIdx, cSa) = Similarity.ivfIndex(df, "vec_id", "embedding",
       nlist = 8)
     val exactIds = exact.map(_._1).toSet
     def recallOf(d: org.apache.spark.sql.DataFrame): Double =
@@ -1232,8 +1120,8 @@ class SimilaritySpec extends SparkSpec {
         .size.toDouble / exactIds.size
     val rMa = recallOf(Similarity.ivfTopKMulti(maIdx, cMa, qv, "vec_id",
       "embedding", nprobe = 2, k = 10, nassign = 2))
-    val rSa = recallOf(Similarity.ivfTopK(spark.read.parquet(saPath), cSa,
-      qv, "vec_id", "embedding", nprobe = 2, k = 10))
+    val rSa = recallOf(Similarity.ivfTopK(saIdx, cSa, qv, "vec_id",
+      "embedding", nprobe = 2, k = 10))
     assert(rMa >= rSa,
       s"multi-assign recall $rMa below single-assign $rSa")
     assert(rMa >= 0.5, s"multi-assign recall $rMa too low")

@@ -94,6 +94,27 @@ class AppendJobsSpec extends SparkSpec with JobCount {
     }
   }
 
+  test("a depth-2 fork sync() on TxLogTable retracts and counts with no job") {
+    // all six blocks sit in the tail, one commit each, so the reorg cut
+    // is answered from the manifest; the retracted rows are counted from
+    // the next-index watermark, and the forked blocks are written on the
+    // driver
+    val chain = MockChain.linear(6, n => Seq(2, 0, 3, 1, 2, 3)(n.toInt))
+    val root = tmpDir("appendjobs-fork")
+    new Syncer(spark, new MockProvider(spark, chain), root, FilterConfig(),
+      transactionalStore = true).sync()
+    val sync = new Syncer(spark,
+      new MockProvider(spark, MockChain.fork(chain, depth = 2, extend = 1)),
+      root, FilterConfig(), transactionalStore = true)
+    val aboveAncestor = sync.table.read.where($"block_num" > 3L).count()
+    val (report, jobs) = jobsOf(sync.sync())
+    assert(aboveAncestor == 5L)
+    assert(report.removed == aboveAncestor && report.added == 3L)
+    assert(jobs == 0, s"$jobs Spark jobs for a depth-2 fork sync()")
+    assert(sync.table.read.select("indx").as[Long].collect().sorted.toSeq ==
+      (0L until 9L))
+  }
+
   test("a cached LogTable read sees a driver-held append's rows") {
     // Spark's insert command recaches plans over the path it wrote; the
     // driver-side publish refreshes them the same way
