@@ -188,8 +188,11 @@ object Bench {
     // full per-query line mid-stream (r5/r6: every a–k number lost). So the
     // COMPLETE map goes to a file, and stdout gets exactly ONE compact line
     // (driver contract shape) whose `queries` carries only the top-20
-    // slowest — under ~1,800 chars however large the inventory grows.
-    val fullPath = "bench_full.json"
+    // slowest — under ~1,800 chars however large the inventory grows. The
+    // file is named by config, so runs at other core counts or scale
+    // factors do not overwrite it.
+    val fullPath =
+      s"bench_full_c${cpus}_${new java.io.File(sfDir).getName}.json"
     val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$fail,"reps":$reps,"steal_pct":${p2(stealPct)},"busy_pct":${p2(busyPct)},"steal_gate_pct":$stealGate,"sweeps":$sweepsJson,"picked_sweep":$picked,"sf":"$sfDir"}"""
     try {
       val w = new java.io.PrintWriter(fullPath, "UTF-8")

@@ -4,10 +4,11 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference, RowOrdering, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 import graft.model.FilterConfig
 
@@ -133,13 +134,34 @@ object LogOps {
 
   /** A log batch after index assignment: `rows` is the batch plus
     * `indx = base … base+n-1`; `minBlock`/`maxBlock` bound its
-    * `block_num` (both 0 when `n == 0`). `driverHeld` marks a batch
-    * indexed on the driver: `rows` is then a `LocalRelation` whose rows
-    * are in index order, so a projection of it is still driver-held and
-    * a store can write it without a job.
+    * `block_num` (both 0 when `n == 0`). `held` carries the rows of a
+    * batch indexed on the driver, in index order, so a store can write
+    * them with no job and no query plan; `rows` is then a `LocalRelation`
+    * over them, built only if a store asks for it.
     */
-  final case class IndexedBatch(rows: DataFrame, n: Long, minBlock: Long,
-      maxBlock: Long, driverHeld: Boolean)
+  final class IndexedBatch(frame: => DataFrame, val n: Long,
+      val minBlock: Long, val maxBlock: Long, val held: Option[HeldRows]) {
+    lazy val rows: DataFrame = frame
+  }
+
+  /** Driver-held indexed rows under their schema (the batch's columns,
+    * then `indx`).
+    */
+  final case class HeldRows(schema: StructType, rows: Seq[InternalRow]) {
+    def at(name: String): Int = HeldRows.at(schema, name)
+  }
+
+  object HeldRows {
+    /** Position of column `name` in `schema`, matched case-insensitively
+      * as Spark's default resolution matches it.
+      */
+    def at(schema: StructType, name: String): Int = {
+      val i = schema.fieldNames.indexWhere(_.equalsIgnoreCase(name))
+      require(i >= 0,
+        s"append batch has no $name column: ${schema.fieldNames.mkString(",")}")
+      i
+    }
+  }
 
   /** S8/W1 — how every store ([[graft.store.LogTable]],
     * [[graft.store.TxLogTable]], [[graft.store.JdbcLogStore]]) gives an
@@ -148,44 +170,47 @@ object LogOps {
     * returned.
     *
     * The path follows from the batch itself, not from an option:
-    *  - a batch whose optimized plan is a `LocalRelation` (the JSON-RPC
-    *    provider's parse, the sync tail's collected block) is already on
-    *    the driver. Its rows are sorted there with Spark's own ordering
+    *  - a batch that is a `LocalRelation` (the JSON-RPC provider's parse,
+    *    a sync-tail block), as built or once optimized, is already on the
+    *    driver. Its rows are sorted there with Spark's own ordering
     *    (ascending, nulls first, strings by UTF-8 bytes), numbered, and
-    *    handed to `write` as a `LocalRelation` in index order: no job
-    *    before the write. The two file stores then write the parquet on
-    *    the driver too (zero jobs per append); the JDBC store writes it
-    *    as one partition;
+    *    handed to `write` as [[IndexedBatch.held]] rows in index order:
+    *    no job before the write, and no Catalyst pass when the plan as
+    *    built is already the `LocalRelation`. The two file stores then
+    *    write the parquet on the driver too (zero jobs per append); the
+    *    JDBC store writes it as one partition;
     *  - any other batch takes [[withAppendIndexRanged]]; the indexed frame
     *    is persisted so the write does not re-evaluate the batch, `n` and
     *    the block bounds come from one aggregate over it, and the cache is
     *    released in a `finally` whether or not `write` succeeds.
     */
   def withAppendIndexes[A](batch: DataFrame, base: Long)(
-      write: IndexedBatch => A): A =
-    batch.queryExecution.optimizedPlan match {
+      write: IndexedBatch => A): A = {
+    val qe = batch.queryExecution
+    qe.logical match {
       case local: LocalRelation => write(indexLocal(batch, local, base))
-      case _ =>
-        val indexed =
-          withAppendIndexRanged(batch, base, appendOrder.map(col)).persist()
-        try {
-          val s = indexed.agg(count(lit(1)),
-            min(col("block_num").cast("long")),
-            max(col("block_num").cast("long"))).head()
-          val n = s.getLong(0)
-          write(if (n == 0L) IndexedBatch(indexed, 0L, 0L, 0L, false)
-            else IndexedBatch(indexed, n, s.getLong(1), s.getLong(2), false))
-        } finally indexed.unpersist()
+      case _ => qe.optimizedPlan match {
+        case local: LocalRelation => write(indexLocal(batch, local, base))
+        case _ =>
+          val indexed =
+            withAppendIndexRanged(batch, base, appendOrder.map(col)).persist()
+          try {
+            val s = indexed.agg(count(lit(1)),
+              min(col("block_num").cast("long")),
+              max(col("block_num").cast("long"))).head()
+            val n = s.getLong(0)
+            write(if (n == 0L) new IndexedBatch(indexed, 0L, 0L, 0L, None)
+              else new IndexedBatch(indexed, n, s.getLong(1), s.getLong(2), None))
+          } finally indexed.unpersist()
+      }
     }
+  }
 
   private def indexLocal(batch: DataFrame, local: LocalRelation,
       base: Long): IndexedBatch = {
     val out = local.output
-    def at(name: String): Int = {
-      val i = out.indexWhere(_.name.equalsIgnoreCase(name))
-      require(i >= 0, s"append batch has no $name column: ${batch.columns.mkString(",")}")
-      i
-    }
+    val schema = DataTypeUtils.fromAttributes(out)
+    def at(name: String): Int = HeldRows.at(schema, name)
     val ordering = RowOrdering.create(
       appendOrder.map(k => SortOrder(out(at(k)), Ascending)), out)
     val sorted = local.data.sorted(ordering)
@@ -196,11 +221,12 @@ object LogOps {
     val b = at("block_num")
     val blocks = sorted.filterNot(_.isNullAt(b))
       .map(_.get(b, types(b)).asInstanceOf[Number].longValue())
-    val indexed = Bridge.ofRows(batch.sparkSession, LocalRelation(
-      out :+ AttributeReference("indx", LongType, nullable = false)(), rows))
-    IndexedBatch(indexed, rows.length.toLong,
+    val indx = AttributeReference("indx", LongType, nullable = false)()
+    new IndexedBatch(
+      Bridge.ofRows(batch.sparkSession, LocalRelation(out :+ indx, rows)),
+      rows.length.toLong,
       blocks.headOption.getOrElse(0L), blocks.lastOption.getOrElse(0L),
-      driverHeld = true)
+      Some(HeldRows(schema.add(indx.name, indx.dataType, indx.nullable), rows)))
   }
 
   /** A2/W4 — next append index = max(indx)+1, empty → 0

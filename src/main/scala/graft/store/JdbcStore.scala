@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
 
 /** The key-value surface the sync engine consumes (ref `store/store.go:
   * 6-17` — Get/Set plus the prefix scan). Three conformant backends:
-  * [[KvStore]] (a versioned JSON log on the Hadoop FileSystem), the tx
-  * manifest's embedded use of the same, and [[JdbcKvStore]] (an external
+  * [[KvStore]] (a versioned JSON log: java.nio on local roots, Spark's
+  * `HDFSMetadataLog` on any other filesystem), the tx manifest's
+  * embedded use of the same, and [[JdbcKvStore]] (an external
   * RDBMS, the `postgresql_store.go` shape). No backend reads
   * `claimStaleMs`.
   */
@@ -299,7 +300,7 @@ final class JdbcLogStore(spark: SparkSession, url: String,
       else {
         // a driver-held batch stays one partition: one task, one
         // connection
-        val src = if (b.driverHeld) b.rows.coalesce(1) else b.rows
+        val src = if (b.held.isDefined) b.rows.coalesce(1) else b.rows
         val rows = src.select(
           col("indx").as("INDX"), col("tx_index").as("TX_INDEX"),
           col("tx_hash").as("TX_HASH"), col("block_num").as("BLOCK_NUM"),

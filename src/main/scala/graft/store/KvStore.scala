@@ -1,10 +1,17 @@
 package graft.store
 
 import java.io.{InputStream, InputStreamReader}
+import java.nio.ByteBuffer
+import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets
+import java.nio.file.{FileAlreadyExistsException, Files, NoSuchFileException, Path => JPath, StandardOpenOption}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.checkpointing.HDFSMetadataLog
+import org.apache.spark.sql.graftbridge.Bridge
 import org.json4s.{Formats, NoTypeHints}
 import org.json4s.jackson.Serialization
 
@@ -32,11 +39,13 @@ object KvStore {
   private[store] val retainKvVersions = 4
 
   /** A pruned version can surface as something other than a top-level
-    * FileNotFoundException on object stores or through wrapping layers:
-    * walk the cause chain and match the message variants.
+    * FileNotFoundException (java.nio's NoSuchFileException, object
+    * stores, wrapping layers): walk the cause chain and match the message
+    * variants.
     */
   private def isMissingPath(e: Throwable): Boolean =
     e != null && (e.isInstanceOf[java.io.FileNotFoundException] ||
+      e.isInstanceOf[NoSuchFileException] ||
       (e.getMessage != null && (e.getMessage.contains("Path does not exist") ||
         e.getMessage.contains("PATH_NOT_FOUND") ||
         e.getMessage.contains("No such file"))) ||
@@ -46,30 +55,107 @@ object KvStore {
     e != null && (e.isInstanceOf[org.apache.hadoop.fs.FileAlreadyExistsException] ||
       isLostRename(e.getCause))
 
-  /** Version N is the file `<dir>/N`: one JSON object holding the whole map,
-    * written to a temp file and renamed into place without overwrite
-    * (`CheckpointFileManager.createAtomic`), the Structured Streaming
-    * offset-log commit. json4s's default codec erases the map's type
-    * parameters on read, so reading names the type explicitly.
+  /** The parquet layout this log replaced kept one `v<N>/` directory per
+    * version. Read as a log it would look empty, which drops the sync
+    * checkpoint and re-backfills into a non-empty log table.
     */
-  private final class Log(spark: SparkSession, dir: String)
-      extends HDFSMetadataLog[Map[String, String]](spark, dir) {
+  private def refuseParquetLayout(dir: String, dirNames: Seq[String]): Unit =
+    dirNames.find(_.matches("v\\d+")).foreach(name =>
+      throw new java.io.IOException(
+        s"KV store $dir holds $name/, a version directory of the old " +
+          "parquet layout; the store is now a JSON log with one file per " +
+          "version and cannot read it. Re-create the store or move the " +
+          "old directory aside"))
+
+  /** Version N is the file `<dir>/N`: one JSON object holding the whole
+    * map. `add` creates a version only if it is absent (false when it is
+    * already there), `purge(n)` deletes every version below `n`.
+    */
+  private trait Log {
+    def getLatestBatchId(): Option[Long]
+    def get(batchId: Long): Option[Map[String, String]]
+    def add(batchId: Long, metadata: Map[String, String]): Boolean
+    def purge(thresholdBatchId: Long): Unit
+  }
+
+  private def log(spark: SparkSession, dir: String): Log =
+    Bridge.localPath(new Path(dir), spark.sparkContext.hadoopConfiguration)
+      .fold[Log](new HadoopLog(spark, dir))(new LocalLog(dir, _))
+
+  /** Any filesystem but the local one: Spark's `HDFSMetadataLog`, the
+    * Structured Streaming offset-log commit (a temp file renamed into
+    * place without overwrite through the session's
+    * `CheckpointFileManager`). json4s's default codec erases the map's
+    * type parameters on read, so reading names the type explicitly.
+    */
+  private final class HadoopLog(spark: SparkSession, dir: String)
+      extends HDFSMetadataLog[Map[String, String]](spark, dir) with Log {
     private implicit val formats: Formats = Serialization.formats(NoTypeHints)
 
-    // The parquet layout this log replaced kept one `v<N>/` directory per
-    // version. Read as a log it would look empty, which drops the sync
-    // checkpoint and re-backfills into a non-empty log table.
-    fileManager.list(metadataPath)
-      .find(st => st.isDirectory && st.getPath.getName.matches("v\\d+"))
-      .foreach(st => throw new java.io.IOException(
-        s"KV store $dir holds ${st.getPath.getName}/, a version directory " +
-          "of the old parquet layout; the store is now a JSON log with one " +
-          "file per version and cannot read it. Re-create the store or " +
-          "move the old directory aside"))
+    refuseParquetLayout(dir, fileManager.list(metadataPath)
+      .filter(_.isDirectory).map(_.getPath.getName).toSeq)
 
     override def deserialize(in: InputStream): Map[String, String] =
       Serialization.read[Map[String, String]](
         new InputStreamReader(in, StandardCharsets.UTF_8))
+  }
+
+  /** The local filesystem, through java.nio: the same files as
+    * [[HadoopLog]] writes, with no Hadoop filesystem call (without the
+    * native Hadoop library, its local creates and renames start a
+    * `chmod`/`readlink` process each). A version is written to
+    * `.<N>.<uuid>.tmp` and fsynced, then hard-linked to `N`: the link
+    * fails if `N` exists, so it is the create-if-absent claim. Listing
+    * takes numeric names only, so Hadoop's `.N.crc` checksums and the
+    * temp files of a crashed commit are invisible; purging deletes a
+    * version's checksum with it.
+    */
+  private final class LocalLog(dir: String, path: JPath) extends Log {
+    private implicit val formats: Formats = Serialization.formats(NoTypeHints)
+
+    Files.createDirectories(path)
+    refuseParquetLayout(dir, names().filter(n =>
+      Files.isDirectory(path.resolve(n))))
+
+    private def names(): Seq[String] = {
+      val s = Files.newDirectoryStream(path)
+      try s.asScala.map(_.getFileName.toString).toSeq finally s.close()
+    }
+
+    private def versions(): Seq[Long] =
+      names().filter(_.forall(Character.isDigit))
+        .flatMap(_.toLongOption)
+
+    def getLatestBatchId(): Option[Long] = versions().maxOption
+
+    def get(batchId: Long): Option[Map[String, String]] =
+      try Some(Serialization.read[Map[String, String]](new String(
+        Files.readAllBytes(path.resolve(batchId.toString)),
+        StandardCharsets.UTF_8)))
+      catch { case _: NoSuchFileException => None }
+
+    def add(batchId: Long, metadata: Map[String, String]): Boolean = {
+      val tmp = path.resolve(s".$batchId.${java.util.UUID.randomUUID()}.tmp")
+      val ch = FileChannel.open(tmp,
+        StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
+      try {
+        val bytes = ByteBuffer.wrap(
+          Serialization.write(metadata).getBytes(StandardCharsets.UTF_8))
+        while (bytes.hasRemaining) ch.write(bytes)
+        ch.force(true)
+      } finally ch.close()
+      try {
+        Files.createLink(path.resolve(batchId.toString), tmp)
+        true
+      } catch { case _: FileAlreadyExistsException => false }
+      finally Files.deleteIfExists(tmp)
+    }
+
+    def purge(thresholdBatchId: Long): Unit =
+      versions().filter(_ < thresholdBatchId).foreach { v =>
+        Files.deleteIfExists(path.resolve(v.toString))
+        Files.deleteIfExists(path.resolve(s".$v.crc"))
+      }
   }
 }
 
@@ -78,8 +164,9 @@ object KvStore {
   * Tiny by construction (a handful of keys per filter), so every version
   * holds the whole map and every call runs on the driver: no Spark job.
   *
-  * Crash safety: a version becomes visible only by an atomic rename of its
-  * complete file, and readers take the newest one, so a crash at any point
+  * Crash safety: a version becomes visible only by an atomic link (local
+  * roots) or rename (any other filesystem) of its complete file, and
+  * readers take the newest one, so a crash at any point
   * leaves the previous version readable (losing the checkpoint would
   * otherwise silently re-backfill the whole history on restart). Commits
   * keep the last [[retainVersions]] versions.
@@ -97,7 +184,7 @@ final class KvStore(spark: SparkSession, root: String,
     s"retainVersions must be >= 2 (newest + at least one reader window), " +
       s"got $retainVersions")
   private val dir = s"$root/kv"
-  private val log = new KvStore.Log(spark, dir)
+  private val log = KvStore.log(spark, dir)
 
   /** Test seam: runs after a reader pins the newest version and before it
     * reads that version — the retention specs interleave a deterministic
@@ -158,14 +245,14 @@ final class KvStore(spark: SparkSession, root: String,
     * the commit aborts with [[ConcurrentCommitException]] unless the
     * newest committed version still equals it. Writing the next version
     * is create-if-absent, so a writer that finds it already committed, or
-    * loses the rename to it, also aborts. `claimStaleMs` is ignored.
+    * loses the link or rename to it, also aborts. `claimStaleMs` is ignored.
     */
   def setAll(kvs: Map[String, String], drop: String => Boolean = _ => false,
       expectedVersion: Option[Long] = None,
       claimStaleMs: Long = 10L * 60 * 1000): Unit =
     // same-JVM writers serialize on a per-store monitor, so two threads of
     // one driver never race the same version; distinct processes are
-    // arbitrated by the create-if-absent rename
+    // arbitrated by the create-if-absent link or rename
     KvStore.commitMonitor(dir).synchronized {
       commit(kvs, drop, expectedVersion)
     }

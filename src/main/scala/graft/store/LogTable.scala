@@ -8,11 +8,11 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.BlockMetaData
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.StructType
+
+import graft.ops.LogOps.HeldRows
 
 /** The store layer (SURVEY.md §1.1e): per-filter append-only indexed log
   * over parquet directories, plus a tiny KV metadata log ([[KvStore]]).
@@ -32,7 +32,7 @@ import org.apache.spark.sql.types.StructType
   *    ([[graft.ops.LogOps.withAppendIndexes]]), `base` being the table's
   *    LastIndex. A batch already on the driver (the JSON-RPC provider's
   *    parse, a sync-tail block) is sorted, numbered and written there,
-  *    through Spark's own parquet writer, with no job ([[publish]]); any
+  *    through Spark's parquet write support, with no job ([[publish]]); any
   *    other batch takes the ranged two-pass scheme (repartitionByRange +
   *    per-partition counts → offsets) and one Spark write, so no
   *    single-partition sort exists on the append path however large the
@@ -294,12 +294,12 @@ final class LogTable(spark: SparkSession, root: String, filterHash: String,
   private[graft] def storeLogs(batch: DataFrame, crashAt: String): Long = {
     val base = lastIndex()
     graft.ops.LogOps.withAppendIndexes(batch, base) { b =>
-      val out = b.rows
-        .withColumn("block_range", floor(col("block_num") / lit(blocksPerRange)))
-      LogStore.driverRows(out) match {
-        case Some(rows) => publish(out.schema, rows, crashAt)
-        case None =>
-          out.write.mode(SaveMode.Append).partitionBy("block_range").parquet(dir)
+      b.held match {
+        case Some(h) => publish(h, crashAt)
+        case None => b.rows
+          .withColumn("block_range",
+            floor(col("block_num") / lit(blocksPerRange)))
+          .write.mode(SaveMode.Append).partitionBy("block_range").parquet(dir)
       }
       base + b.n
     }
@@ -312,27 +312,21 @@ final class LogTable(spark: SparkSession, root: String, filterHash: String,
     * readers and the watermark probes skip; the files are then renamed
     * in ascending `block_range` order, which is index order, so a crash
     * leaves a prefix of the batch (the sync loop's orphan probe truncates
-    * it) and at worst stale temp files ([[sweepStagedAppends]]). Cached
-    * plans over the table are refreshed as Spark's insert command does.
+    * it) and at worst stale temp files ([[sweepStagedAppends]]). On a
+    * local root the files are written through java.nio. Cached plans
+    * over the table are refreshed as Spark's insert command does.
     */
-  private def publish(schema: StructType, rows: Seq[InternalRow],
-      crashAt: String): Unit = if (rows.nonEmpty) {
-    val r = schema.fieldIndex("block_range")
-    val types = schema.map(_.dataType)
-    val files = new Bridge.ParquetFiles(spark,
-      StructType(schema.patch(r, Nil, 1)))
+  private def publish(h: HeldRows, crashAt: String): Unit = if (h.rows.nonEmpty) {
+    val files = new Bridge.ParquetFiles(spark, h.schema)
+    val range = LogStore.blockRange(h, blocksPerRange)
     // groupBy keeps each range's rows in index order; nulls sort first
-    val ranges = rows
-      .groupBy(row => if (row.isNullAt(r)) None else Some(row.getLong(r)))
-      .toSeq.sortBy(_._1)
+    val ranges = h.rows.groupBy(range).toSeq.sortBy(_._1)
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val staged = scala.collection.mutable.ArrayBuffer.empty[Path]
-    try ranges.foreach { case (range, rs) =>
+    try ranges.foreach { case (r, rs) =>
       val part = new Path(dir, ExternalCatalogUtils.getPartitionPathString(
-        "block_range", range.map(_.toString).orNull))
-      staged += files.write(part, rs.iterator.map(row =>
-        InternalRow.fromSeq(row.toSeq(types).patch(r, Nil, 1))),
-        prefix = stagedPrefix)
+        "block_range", r.map(_.toString).orNull))
+      staged += files.write(part, rs.iterator, prefix = stagedPrefix)
     } catch {
       case t: Throwable =>
         staged.foreach(fs.delete(_, false))

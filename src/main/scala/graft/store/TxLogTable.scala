@@ -3,10 +3,11 @@ package graft.store
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import graft.ops.LogOps.HeldRows
 
 /** The backend-agnostic store surface (ref `store/store.go:6-36`): what
   * the sync engine and the streaming ingest actually consume. Two
@@ -41,17 +42,18 @@ trait LogStore {
 }
 
 private[store] object LogStore {
-  /** The rows of `out`, a projection of a driver-held batch
-    * ([[graft.ops.LogOps.IndexedBatch]]`.driverHeld`), when its optimized
-    * plan is still a `LocalRelation`: Catalyst evaluates the projection on
-    * the driver, in row order, with no job. None sends the caller to
-    * Spark's write.
+  /** The `block_range` of a driver-held row: `block_num` div
+    * `blocksPerRange`, None for a null `block_num`. The value Spark's
+    * `floor(block_num / blocksPerRange)` gives the distributed write.
     */
-  def driverRows(out: DataFrame): Option[Seq[InternalRow]] =
-    out.queryExecution.optimizedPlan match {
-      case l: LocalRelation => Some(l.data)
-      case _ => None
-    }
+  def blockRange(held: HeldRows,
+      blocksPerRange: Long): InternalRow => Option[Long] = {
+    val b = held.at("block_num")
+    val t = held.schema(b).dataType
+    row => if (row.isNullAt(b)) None
+      else Some(Math.floorDiv(
+        row.get(b, t).asInstanceOf[Number].longValue(), blocksPerRange))
+  }
 
   /** `min(indx)` of `rows`; None when it is empty. */
   def minIndex(rows: DataFrame): Option[Long] = {
@@ -352,9 +354,10 @@ final class TxLogTable(spark: SparkSession, root: String, filterHash: String,
   private[graft] var beforeCommit: () => Unit = () => ()
 
   /** Append = one invisible data write + one manifest commit. The data
-    * write of a driver-held batch runs on the driver through Spark's own
-    * parquet writer ([[Bridge.ParquetFiles]]): one file in the new commit
-    * dir, no job. Any other batch is one Spark write. The commit
+    * write of a driver-held batch runs on the driver through Spark's
+    * parquet write support ([[Bridge.ParquetFiles]], java.nio on a local
+    * root): one file in the new commit dir, no job and no query plan. Any
+    * other batch is one Spark write. The commit
     * is a compare-and-set against the manifest read at entry; losing the
     * race REBASES — the batch's indices derive from the stale lastIndex,
     * so the data is rewritten from the fresh base and the stale directory
@@ -372,16 +375,18 @@ final class TxLogTable(spark: SparkSession, root: String, filterHash: String,
           if (b.n == 0L) base
           else {
             val name = s"c${System.nanoTime()}"
-            val out = b.rows
-              .withColumn("block_range",
-                floor(col("block_num") / lit(blocksPerRange)))
-              .select(logSchema.fieldNames.map(col): _*)
             // the commit dir is invisible until the manifest names it, so
             // a driver-held batch is written straight to its final name
-            LogStore.driverRows(out) match {
-              case Some(rows) => new Bridge.ParquetFiles(spark, out.schema)
-                .write(new Path(s"$dataDir/$name"), rows.iterator)
-              case None => out.write.parquet(s"$dataDir/$name")
+            b.held match {
+              case Some(h) =>
+                val (schema, rows) = asLogSchema(h)
+                new Bridge.ParquetFiles(spark, schema)
+                  .write(new Path(s"$dataDir/$name"), rows)
+              case None => b.rows
+                .withColumn("block_range",
+                  floor(col("block_num") / lit(blocksPerRange)))
+                .select(logSchema.fieldNames.map(col): _*)
+                .write.parquet(s"$dataDir/$name")
             }
             if (crashAt == "after-data-write") throw new InjectedCrash(crashAt)
             beforeCommit()
@@ -397,6 +402,22 @@ final class TxLogTable(spark: SparkSession, root: String, filterHash: String,
       }
     }
     sys.error("unreachable")
+  }
+
+  /** A driver-held batch as the Spark write lays it out: `logSchema`'s
+    * columns in its order under the batch's types, with `block_range`
+    * computed per row and typed as `floor(block_num / n)` types it, a
+    * nullable long.
+    */
+  private def asLogSchema(h: HeldRows): (StructType, Iterator[InternalRow]) = {
+    val range = LogStore.blockRange(h, blocksPerRange)
+    val src = logSchema.fieldNames.toSeq
+      .map(f => if (f == "block_range") -1 else h.at(f))
+    val types = h.schema.map(_.dataType)
+    (StructType(src.map(i =>
+      if (i < 0) StructField("block_range", LongType) else h.schema(i))),
+      h.rows.iterator.map(r => InternalRow.fromSeq(src.map(i =>
+        if (i < 0) range(r).map(Long.box).orNull else r.get(i, types(i))))))
   }
 
   /** S9 — truncation as ONE metadata commit: drop entries fully above

@@ -1,6 +1,7 @@
 package graft.sync
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 import graft.model.{BlockHeader, FilterConfig}
@@ -78,9 +79,10 @@ final class ProviderScanLocator(provider: Provider, headHint: Long)
   * goroutine. A distributed provider's batch (a parquet scan) stays
   * distributed through the store's ranged index assignment. Rows reach
   * the driver only where they are bounded by construction: a JSON-RPC
-  * answer (capped by the node) and a tail block's logs, which are
-  * collected once so the file stores write them on the driver with no
-  * Spark job ([[graft.ops.LogOps.withAppendIndexes]]).
+  * answer (capped by the node) and a tail block's logs, which are held
+  * on the driver (as the provider built them, or collected once) so the
+  * file stores write them there with no Spark job
+  * ([[graft.ops.LogOps.withAppendIndexes]]).
   *
   * Provider round trips follow the reference: the chain-identity guard
   * runs on an instance's first [[sync]] only, the tail reuses headers the
@@ -376,18 +378,25 @@ final class Syncer(
         return SyncReport(batches + r.batches, added + r.added,
           r.removed, r.headNumber)
       }
-      // T8: tolerate a transiently-unsynced node on the hot tail. Collect
-      // the fetched rows inside the retry — storeLogs evaluates its input,
-      // and a lazy provider DataFrame would hit the provider again OUTSIDE
-      // the retry (unprotected, and possibly returning different rows than
-      // were counted). The tail block's logs are small by construction
-      // (one block); rebuilt as a LocalRelation they append with no pin,
-      // count or write job on either file store.
+      // T8: tolerate a transiently-unsynced node on the hot tail. The
+      // block's rows must be on the driver when the retry ends: storeLogs
+      // evaluates its input, and a lazy provider DataFrame would hit the
+      // provider again OUTSIDE the retry (unprotected, and possibly
+      // returning different rows than were counted). A frame that is a
+      // LocalRelation as built (HttpRpcProvider parses the answer inside
+      // this retry) already is, and is used as it is; any other is
+      // collected here and rebuilt as one. The tail block's logs are small
+      // by construction (one block), and either way they append with no
+      // Spark job on both file stores.
       val (logs, c) = withRetry(s"logs of block ${b.hash}") {
         val df = provider.getLogsByHash(b.hash, filter)
-        val rows = df.collect()
-        (spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema),
-          rows.length.toLong)
+        df.queryExecution.logical match {
+          case l: LocalRelation => (df, l.data.size.toLong)
+          case _ =>
+            val rows = df.collect()
+            (spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+              df.schema), rows.length.toLong)
+        }
       }
       added += c
       table.storeLogs(logs)

@@ -1,11 +1,19 @@
 package graft.store
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
-import graft.{MockChain, MockProvider, SparkSpec}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.{MBlock, MockChain, MockProvider, SparkSpec}
 import graft.model.FilterConfig
-import graft.sync.Syncer
+import graft.sync.{Provider, Syncer}
 
 /** Appends of driver-held batches (a `LocalRelation`: the JSON-RPC
   * provider's parse, a collected sync-tail block) are indexed and, on
@@ -73,6 +81,72 @@ class AppendJobsSpec extends SparkSpec with JobCount {
     assert(sync.table.lastIndex() == 6L)
     assert(sync.table.read.select("block_num").as[Long].collect().sorted
       .toSeq == Seq(0L, 0L, 2L, 2L, 2L, 3L))
+  }
+
+  /** MockProvider whose by-hash answer is built as HttpRpcProvider builds
+    * its own: `createDataFrame` over rows already on the driver, a
+    * `LocalRelation` as built.
+    */
+  private class HeldProvider(session: SparkSession, chain: Seq[MBlock])
+      extends MockProvider(session, chain) {
+    override def getLogsByHash(hash: String, filter: FilterConfig): DataFrame = {
+      val rows = chain.filter(_.hash == hash).flatMap(b => (0 until b.nLogs)
+        .map(i => Row(i.toLong, s"tx-${b.hash}-$i", b.num, b.hash,
+          s"a${b.num % 3}", Seq(s"sig${b.num % 2}"), "0x")))
+      session.createDataFrame(rows.asJava, StructType(TxLogTable.logSchema
+        .filterNot(f => f.name == "indx" || f.name == "block_range")))
+    }
+  }
+
+  /** `f`'s result and the `collect` actions it ran in `session`: its own
+    * listener manager sees only its own queries, and a sentinel `count`
+    * flushes the listener bus (it delivers in order).
+    */
+  private def collectsOf[A](session: SparkSession)(f: => A): (A, Int) = {
+    val collects = new AtomicInteger()
+    val sentinel = new CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit =
+        name match {
+          case "collect" => collects.incrementAndGet(): Unit
+          case "count" => sentinel.countDown()
+          case _ => ()
+        }
+      override def onFailure(name: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    session.listenerManager.register(listener)
+    try {
+      val a = f
+      session.range(1).count(): Unit
+      assert(sentinel.await(60, TimeUnit.SECONDS))
+      (a, collects.get())
+    } finally session.listenerManager.unregister(listener)
+  }
+
+  test("a driver-held tail block is stored as built: no collect, no job") {
+    // HttpRpcProvider's shape: the frame is a LocalRelation as built, so
+    // the tail uses it as it is; MockProvider's (a Filter over a
+    // LocalRelation) is still collected inside the retry
+    val logsAt = (n: Long) => Seq(2, 0, 3, 1, 2)(n.toInt)
+    Seq[(SparkSession, Seq[MBlock]) => Provider](
+      new HeldProvider(_, _), new MockProvider(_, _)).zip(Seq(0, 1))
+      .foreach { case (provider, wantCollects) =>
+        val session = spark.newSession()
+        val root = tmpDir("appendjobs-held")
+        new Syncer(session, provider(session, MockChain.linear(4, logsAt)),
+          root, FilterConfig(), transactionalStore = true).sync()
+        val sync = new Syncer(session,
+          provider(session, MockChain.linear(5, logsAt)), root,
+          FilterConfig(), transactionalStore = true)
+        val ((report, jobs), collects) =
+          collectsOf(session)(jobsOf(sync.sync()))
+        assert(report.added == 2L)
+        assert(jobs == 0, s"$jobs Spark jobs for a one-block tail sync()")
+        assert(collects == wantCollects,
+          s"$collects collects for a one-block tail sync()")
+        assert(sync.table.read.where($"block_num" === 4L).count() == 2L)
+      }
   }
 
   test("a resumed sync() with one new block runs only its write, on both file stores") {

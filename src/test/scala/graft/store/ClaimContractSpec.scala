@@ -24,9 +24,11 @@ class RacyFileSystem extends RawLocalFileSystem {
   * then runs to completion; B resumes and writes), driven through the
   * no-monitor seam so nothing leans on the same-JVM lock:
   *
-  *  - atomic exclusive create (the local FS through `FileContext`): the
-  *    version A committed excludes B;
-  *  - NON-atomic exclusive create ([[RacyFileSystem]]): B detects A's
+  *  - atomic exclusive create (the local FS, where the version file is a
+  *    java.nio hard link that fails if the name exists): the version A
+  *    committed excludes B;
+  *  - NON-atomic exclusive create ([[RacyFileSystem]], committed through
+  *    Spark's metadata log over Hadoop's filesystem): B detects A's
   *    committed version before its check-then-act rename and aborts with
   *    [[ConcurrentCommitException]] — a lost claim is never a lost
   *    update, and the caller's rebase loop handles the rest.

@@ -4,12 +4,14 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.functions.{col, floor, lit}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.IntegerType
@@ -90,29 +92,84 @@ class DriverWriteSpec extends SparkSpec with JobCount {
     assert(local.lastIndex() == ranged.lastIndex())
   }
 
+  /** The rows of `df`, a driver-held frame. */
+  private def heldRows(df: DataFrame): Seq[InternalRow] =
+    df.queryExecution.optimizedPlan.asInstanceOf[LocalRelation].data
+
+  /** Per row group, per column: path, codec, encodings, and whether the
+    * chunk carries min/max statistics.
+    */
+  private def chunks(m: ParquetMetadata): Seq[Seq[(String, String, Set[String], Boolean)]] =
+    m.getBlocks.asScala.toSeq.map(_.getColumns.asScala.toSeq.map(c =>
+      (c.getPath.toDotString, c.getCodec.name,
+        c.getEncodings.asScala.map(_.name).toSet,
+        c.getStatistics != null && c.getStatistics.hasNonNullValue)))
+
+  /** Writes `rows` with the driver writer into `dir` and with Spark's
+    * writer into `sparkDir` (`session` carrying the settings), and asserts
+    * the two footers agree: schema, key-value metadata, row groups, and
+    * each column's codec, encodings and statistics.
+    */
+  private def assertSameFile(session: SparkSession, rows: DataFrame,
+      dir: String, sparkDir: String): ParquetMetadata = {
+    val path = new Bridge.ParquetFiles(session, rows.schema)
+      .write(new Path(dir), heldRows(rows).iterator)
+    rows.coalesce(1).write.parquet(sparkDir)
+    val Seq(theirs) = dataFiles(new java.io.File(sparkDir))
+    val Seq(ours) = dataFiles(new java.io.File(new Path(dir).toUri.getPath))
+    assert(ours.getName == path.getName)
+    assert(ours.getName.endsWith(theirs.getName.dropWhile(_ != '.')))
+    val (a, b) = (footer(ours), footer(theirs))
+    assert(a.getFileMetaData.getSchema == b.getFileMetaData.getSchema)
+    assert(a.getFileMetaData.getKeyValueMetaData ==
+      b.getFileMetaData.getKeyValueMetaData)
+    assert(chunks(a) == chunks(b))
+    assert(session.read.parquet(dir).collect().toSeq ==
+      session.read.parquet(sparkDir).collect().toSeq)
+    a
+  }
+
   test("the driver writer's file matches Spark's writer under the session codec") {
     Seq("snappy", "gzip").foreach { codec =>
       val session = spark.newSession()
       session.conf.set("spark.sql.parquet.compression.codec", codec)
       val rows = driverHeld(session, logs(straddling: _*))
-      val driverDir = tmpDir(s"driverwrite-$codec") + "/driver"
-      val path = new Bridge.ParquetFiles(session, rows.schema).write(
-        new Path(driverDir), LogStore.driverRows(rows).get.iterator)
-      val sparkDir = tmpDir(s"driverwrite-$codec") + "/spark"
-      rows.coalesce(1).write.parquet(sparkDir)
-      val Seq(theirs) = dataFiles(new java.io.File(sparkDir))
+      val root = tmpDir(s"driverwrite-$codec")
+      val m = assertSameFile(session, rows, s"$root/driver", s"$root/spark")
       val ext = if (codec == "gzip") ".gz.parquet" else ".snappy.parquet"
-      assert(path.getName.endsWith(ext) && theirs.getName.endsWith(ext))
-      val (a, b) = (footer(new java.io.File(path.toString)), footer(theirs))
-      assert(a.getFileMetaData.getSchema == b.getFileMetaData.getSchema)
-      assert(a.getFileMetaData.getKeyValueMetaData ==
-        b.getFileMetaData.getKeyValueMetaData)
-      def codecs(m: ParquetMetadata) = m.getBlocks.asScala
-        .flatMap(_.getColumns.asScala.map(_.getCodec.name)).toSet
-      assert(codecs(a) == Set(codec.toUpperCase) && codecs(b) == codecs(a))
-      assert(session.read.parquet(driverDir).collect().toSeq ==
-        session.read.parquet(sparkDir).collect().toSeq)
+      assert(dataFiles(new java.io.File(s"$root/driver")).head.getName
+        .endsWith(ext))
+      assert(chunks(m).flatten.map(_._2).toSet == Set(codec.toUpperCase))
+      // dictionary pages and statistics, as Spark writes them
+      assert(chunks(m).flatten.exists(_._3.exists(_.contains("DICTIONARY"))))
+      assert(chunks(m).flatten.forall(_._4))
     }
+  }
+
+  test("the driver writer applies a non-default session parquet setting") {
+    val session = spark.newSession()
+    session.conf.set("parquet.enable.dictionary", "false")
+    val rows = driverHeld(session, logs(straddling: _*))
+    val root = tmpDir("driverwrite-nodict")
+    val m = assertSameFile(session, rows, s"$root/driver", s"$root/spark")
+    assert(chunks(m).flatten.forall(!_._3.exists(_.contains("DICTIONARY"))))
+  }
+
+  test("a non-local path keeps Hadoop I/O and reads back as Spark's write") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.racy.impl", classOf[RacyFileSystem].getName)
+    val root = tmpDir("driverwrite-racy")
+    val dir = new Path(s"racy://$root/driver")
+    assert(Bridge.localPath(dir, conf).isEmpty)
+    assert(Bridge.localPath(new Path(s"file://$root"), conf).nonEmpty)
+    assert(Bridge.localPath(new Path(root), conf).nonEmpty)
+    dir.getFileSystem(conf) // registers the scheme's I/O statistics
+    def written(): Long = FileSystem.getGlobalStorageStatistics.get("racy")
+      .getLong("bytesWritten")
+    val before = written()
+    val rows = driverHeld(spark, logs(straddling: _*))
+    assertSameFile(spark, rows, dir.toString, s"$root/spark")
+    assert(written() > before, "the racy: write bypassed its filesystem")
   }
 
   test("a driver-held LogTable append reads back as Spark's write, one file per range") {
@@ -134,13 +191,30 @@ class DriverWriteSpec extends SparkSpec with JobCount {
   }
 
   test("a driver-held TxLogTable append reads back as Spark's write") {
-    val local = new TxLogTable(spark, tmpDir("driverwrite-tx-a"), "f1")
+    val root = tmpDir("driverwrite-tx-a")
+    val local = new TxLogTable(spark, root, "f1")
     val ranged = new TxLogTable(spark, tmpDir("driverwrite-tx-b"), "f1")
     assertParity(local, ranged, logs(straddling: _*))
     assert(local.read.schema == TxLogTable.logSchema)
     assert(local.manifest().entries.map(e => (e.minIndx, e.maxIndx,
       e.minBlock, e.maxBlock)) == ranged.manifest().entries.map(e =>
       (e.minIndx, e.maxIndx, e.minBlock, e.maxBlock)))
+    // the footer Spark writes for the same indexed rows projected to the
+    // store's layout, `indx` required and `block_range` optional
+    val batch = logs(straddling: _*)
+    val sparkDir = tmpDir("driverwrite-tx-spark") + "/out"
+    graft.ops.LogOps.withAppendIndexes(batch, 2L) { b =>
+      b.rows.withColumn("block_range", floor(col("block_num") / lit(10000L)))
+        .select(TxLogTable.logSchema.fieldNames.toSeq.map(col): _*)
+        .coalesce(1).write.parquet(sparkDir)
+    }
+    val Seq(theirs) = dataFiles(new java.io.File(sparkDir))
+    val Seq(ours) = dataFiles(new java.io.File(TxLogTable.dataDir(root, "f1") +
+      "/" + local.manifest().entries.last.name))
+    val schema = footer(ours).getFileMetaData.getSchema
+    assert(schema == footer(theirs).getFileMetaData.getSchema)
+    assert(schema.getType(schema.getFieldIndex("indx")).getRepetition ==
+      org.apache.parquet.schema.Type.Repetition.REQUIRED)
   }
 
   test("a null block_num lands where Spark's writer puts it, on both file stores") {
