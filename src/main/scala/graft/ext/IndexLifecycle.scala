@@ -15,11 +15,11 @@ import org.apache.spark.sql.functions._
   *    loss of the id-SORTED single-file layout the native-In rerank
   *    fetch's page skipping relies on. Compaction rewrites only the
   *    directories past a file-count threshold (one partition-pruned
-  *    job, never a full-index rewrite) and swaps them in under the same
-  *    trash/tmp + self-heal protocol as the log table's compaction
-  *    ([[graft.store.LogTable]]), restoring both the file count and the
-  *    id-sort. Probes over the compacted index are BIT-IDENTICAL to
-  *    before (same rows, same bytes — spec-pinned).
+  *    job, never a full-index rewrite) and swaps them in through the
+  *    journaled partition swap the log table's truncation and
+  *    compaction use ([[graft.store.PartitionSwap]]), restoring both the
+  *    file count and the id-sort. Probes over the compacted index are
+  *    BIT-IDENTICAL to before (same rows, same bytes — spec-pinned).
   *  - [[publish]] / [[currentPath]] / [[vacuum]] — REBUILD-WHILE-SERVING
   *    for the documented re-train-at-N×-growth contract: index artifacts
   *    live under `root/v<N>` and a `CURRENT` pointer file names the
@@ -57,64 +57,31 @@ object IndexLifecycle {
     Option(dir.listFiles()).getOrElse(Array.empty[java.io.File])
       .filter(f => f.isFile && f.getName.startsWith("part-")).toSeq
 
-  /** Roll a crashed compaction swap forward or back — the per-key twin
-    * of the log table's recovery: a key directory missing from the live
-    * tree is restored from the COMPLETE tmp (its job's `_SUCCESS` is the
-    * completeness witness) or, failing that, from its trash copy; then
-    * stale siblings are swept. Idempotent; called before every compact
-    * (single-writer contract: only a crashed predecessor can strand
-    * these states).
+  private def compactionSwap(spark: SparkSession, path: String) =
+    new graft.store.PartitionSwap(spark, path, s"$path/_journal",
+      "compact_intent")
+
+  /** Roll a crashed [[compactIndex]] forward; every batch build and
+    * append of a [[Similarity]] index runs this before it writes.
     */
-  private def recoverCompaction(spark: SparkSession, path: String): Unit = {
-    val self = new java.io.File(path)
-    val parent = Option(self.getParentFile).getOrElse(return)
-    val siblings = Option(parent.listFiles()).getOrElse(Array.empty)
-    val trashes = siblings.filter(_.getName.startsWith(self.getName + ".trash-"))
-    val tmps = siblings.filter(_.getName.startsWith(self.getName + ".compact-"))
-    if (trashes.isEmpty && tmps.isEmpty) return
-    val fs = hfs(spark, path)
-    def hp(f: java.io.File) = new org.apache.hadoop.fs.Path(f.getPath)
-    trashes.foreach { trash =>
-      val nonce = trash.getName.stripPrefix(self.getName + ".trash-")
-      val tmp = new java.io.File(parent, self.getName + ".compact-" + nonce)
-      val tmpComplete = new java.io.File(tmp, "_SUCCESS").exists()
-      partitionDirs(trash).foreach { keyDir =>
-        val live = new java.io.File(self, keyDir.getName)
-        if (!live.exists()) {
-          val compacted = new java.io.File(tmp, keyDir.getName)
-          val src = if (tmpComplete && compacted.exists()) compacted else keyDir
-          if (!fs.rename(hp(src), hp(live)))
-            throw new java.io.IOException(
-              s"index compaction self-heal: rename $src -> $live failed")
-        }
-      }
-      fs.delete(hp(trash), true)
-      if (tmp.exists()) fs.delete(hp(tmp), true): Unit
-    }
-    // orphan tmps (crash before any swap began): stale-swept like the
-    // log table's, so an in-flight sibling compactor is never raced
-    val staleMs = 60L * 60 * 1000
-    tmps.filter(t => !new java.io.File(parent,
-        self.getName + ".trash-" +
-          t.getName.stripPrefix(self.getName + ".compact-")).exists())
-      .filter(t => System.currentTimeMillis() - t.lastModified() > staleMs)
-      .foreach(t => fs.delete(hp(t), true))
-    spark.catalog.refreshByPath(path)
-  }
+  private[graft] def recover(spark: SparkSession, path: String): Unit =
+    compactionSwap(spark, path).recover()
 
   /** Compact the partition directories of a key-partitioned index that
     * have accumulated more than `maxFilesPerDir` part files (append
     * debt), restoring one-range-file-per-directory layout and the
     * within-file id sort. ONE partition-pruned job rewrites only the hot
     * keys — cost ∝ hot-key bytes, never index size — then each key
-    * directory is swapped in (live → trash, tmp → live; crash-recovered
-    * by [[recoverCompaction]] under the `_SUCCESS` witness). Returns the
-    * number of directories compacted.
+    * directory is swapped in by [[graft.store.PartitionSwap]], journaled
+    * in a KV store under `path/_journal` (a `_`-prefixed dir Spark's file
+    * index skips); the next compactIndex, batch build or append rolls a
+    * crashed swap forward ([[recover]]).
+    * Returns the number of directories compacted.
     *
     * Maintenance-window contract: run between serving batches (the same
     * cadence as any ingesting table's compaction). A probe concurrent
-    * with the swap could observe a key directory mid-rename; the
-    * rename-out/rename-in window is two metadata operations, but unlike
+    * with the swap could observe a key directory mid-swap; the
+    * delete/rename-in window is two metadata operations, but unlike
     * the duplicate-tolerant probe arithmetic it is not provably
     * invisible — so this is a maintainer-side op, not a serving-side
     * one. Probes BEFORE vs AFTER are bit-identical (same rows and
@@ -124,14 +91,20 @@ object IndexLifecycle {
     *              (`vec_id` for every [[Similarity]] index)
     */
   def compactIndex(spark: SparkSession, path: String, idCol: String,
-      maxFilesPerDir: Int = 4): Int = {
+      maxFilesPerDir: Int = 4): Int =
+    compactIndex(spark, path, idCol, maxFilesPerDir, crashAt = "")
+
+  /** Crash-injection twin of [[compactIndex]]: throws at one of
+    * [[graft.store.PartitionSwap]]'s windows.
+    */
+  private[graft] def compactIndex(spark: SparkSession, path: String,
+      idCol: String, maxFilesPerDir: Int, crashAt: String): Int = {
     require(maxFilesPerDir >= 1, s"maxFilesPerDir must be >= 1")
-    recoverCompaction(spark, path)
-    val self = new java.io.File(path)
-    val hot = partitionDirs(self)
+    val swap = compactionSwap(spark, path)
+    swap.recover()
+    val hot = partitionDirs(new java.io.File(path))
       .filter(d => partFiles(d).size > maxFilesPerDir)
     if (hot.isEmpty) return 0
-    val fs = hfs(spark, path)
     // partition column name + typed values parsed from the dir names —
     // typed `isin` keeps the rewrite read partition-PRUNED to hot keys
     val (pcol, rawVals) = {
@@ -146,38 +119,21 @@ object IndexLifecycle {
       case org.apache.spark.sql.types.IntegerType => rawVals.map(_.toInt)
       case _                                      => rawVals
     }
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val parent = self.getParentFile
-    val tmp = new java.io.File(parent, self.getName + ".compact-" + nonce)
-    val trash = new java.io.File(parent, self.getName + ".trash-" + nonce)
     // same layout discipline as the builders: range by (key, id), sort
     // within — restores the id-sorted single-file-per-dir shape the
     // rerank fetch's page skipping measures 2.8× on
-    base.where(col(pcol).isin(typed: _*))
-      .repartitionByRange(col(pcol), col(idCol))
-      .sortWithinPartitions(pcol, idCol)
-      .write.mode("overwrite").partitionBy(pcol).parquet(tmp.getPath)
-    require(new java.io.File(tmp, "_SUCCESS").exists(),
-      s"compaction tmp write left no _SUCCESS under $tmp")
-    java.nio.file.Files.createDirectories(trash.toPath)
-    def hp(f: java.io.File) = new org.apache.hadoop.fs.Path(f.getPath)
-    hot.foreach { keyDir =>
-      val compacted = new java.io.File(tmp, keyDir.getName)
+    swap.rewrite(hot.map(_.getName), crashAt) { tmp =>
+      base.where(col(pcol).isin(typed: _*))
+        .repartitionByRange(col(pcol), col(idCol))
+        .sortWithinPartitions(pcol, idCol)
+        .write.mode("overwrite").partitionBy(pcol).parquet(tmp)
       // a hot key can legitimately be absent from tmp only if its rows
       // were ALL dropped — impossible for a pure rewrite; refuse rather
       // than swap a key into nothingness
-      require(compacted.exists(),
-        s"compacted output missing for ${keyDir.getName}")
-      if (!fs.rename(hp(keyDir), hp(new java.io.File(trash, keyDir.getName))))
-        throw new java.io.IOException(s"rename-out failed for $keyDir")
-      if (!fs.rename(hp(compacted), hp(keyDir)))
-        throw new java.io.IOException(s"rename-in failed for $keyDir")
+      hot.foreach(keyDir => require(
+        new java.io.File(tmp, keyDir.getName).exists(),
+        s"compacted output missing for ${keyDir.getName}"))
     }
-    fs.delete(hp(trash), true)
-    fs.delete(hp(tmp), true)
-    // stale listings: any reader-held relation over this path must be
-    // re-resolved; drop cached plans/listings for new resolutions
-    spark.catalog.refreshByPath(path)
     hot.size
   }
 

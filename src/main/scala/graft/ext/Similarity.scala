@@ -43,8 +43,12 @@ object Similarity {
     * conversely, pointing a stream writer at a batch-built index is
     * refused by the stream's own checkpoint/offset machinery only when
     * the checkpoint is fresh — keep the families on separate paths.
+    *
+    * A crashed [[IndexLifecycle.compactIndex]] is rolled forward here,
+    * before any batch write: rows appended to a key dir its journaled
+    * swap has yet to replace would be lost when the swap completes.
     */
-  private def requireBatchOwnedPath(df: DataFrame, path: String): Unit = {
+  private def prepareBatchWrite(df: DataFrame, path: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path, "_spark_metadata")
     val fs = p.getFileSystem(
       df.sparkSession.sparkContext.hadoopConfiguration)
@@ -52,6 +56,7 @@ object Similarity {
       s"$path carries a streaming sink's _spark_metadata log; batch " +
         "appends/builds over it would be invisible to batch reads — " +
         "use a separate path per writer family (see lshMtStreamWriter)")
+    IndexLifecycle.recover(df.sparkSession, path)
   }
 
   /** Per-row dimension guard for index APPENDS: a wrong-dim batch row
@@ -311,7 +316,7 @@ object Similarity {
       vecCol: String, path: String, dim: Int, nbits: Int,
       tables: Int): Unit = {
     require(nbits >= 1 && nbits <= 20, s"nbits out of range: $nbits")
-    requireBatchOwnedPath(corpus, path)
+    prepareBatchWrite(corpus, path)
     // ONE PASS PER TABLE, not one exploded T× shuffle: the clustering
     // shuffle's map files live on disk until the write job ends, so the
     // all-tables form needs T×corpus of shuffle space NEXT TO the
@@ -412,7 +417,7 @@ object Similarity {
       vecCol: String, path: String, dim: Int, nbits: Int,
       tables: Int): Unit = {
     require(nbits >= 1 && nbits <= 20, s"nbits out of range: $nbits")
-    requireBatchOwnedPath(batch, path)
+    prepareBatchWrite(batch, path)
     (0 until tables).map { t =>
       val sig = signatureBits(col(vecCol), dim, t * nbits, nbits)
       batch.where(dimGuard(vecCol, dim)).select(col(idCol), col(vecCol),
@@ -622,7 +627,7 @@ object Similarity {
     */
   def writeIvfIndexMulti(corpus: DataFrame, idCol: String, vecCol: String,
       path: String, nlist: Int, nassign: Int): Array[Array[Double]] = {
-    requireBatchOwnedPath(corpus, path)
+    prepareBatchWrite(corpus, path)
     val (_, centroids) =
       ivfIndexMulti(corpus, idCol, vecCol, nlist, nassign)
     // one pass per assignment rank — the same bounded-build shape as
@@ -660,7 +665,7 @@ object Similarity {
       path: String, centroids: Array[Array[Double]], nassign: Int): Unit = {
     require(nassign >= 1 && nassign <= centroids.length,
       s"nassign must be in [1, ${centroids.length}], got $nassign")
-    requireBatchOwnedPath(batch, path)
+    prepareBatchWrite(batch, path)
     // one pass, all assignment ranks (see appendLshMultiTableIndex: the
     // per-rank split is a corpus-build shuffle bound, not an append's)
     batch
@@ -794,7 +799,7 @@ object Similarity {
       path: String, nlist: Int, nassign: Int, m: Int, codes: Int = 256,
       samplePerCode: Int = 16)
       : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    requireBatchOwnedPath(corpus, path)
+    prepareBatchWrite(corpus, path)
     val (_, centroids) =
       ivfIndexMulti(corpus, idCol, vecCol, nlist, nassign)
     val (_, codebooks) = pqIndex(corpus, idCol, vecCol, m, codes,
@@ -830,7 +835,7 @@ object Similarity {
       codebooks: Array[Array[Array[Double]]], nassign: Int): Unit = {
     require(nassign >= 1 && nassign <= centroids.length,
       s"nassign must be in [1, ${centroids.length}], got $nassign")
-    requireBatchOwnedPath(batch, path)
+    prepareBatchWrite(batch, path)
     // one pass, all assignment ranks (see appendLshMultiTableIndex)
     pqEncode(
       batch.where(dimGuard(vecCol, centroids.head.length))

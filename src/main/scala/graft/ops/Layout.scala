@@ -35,6 +35,23 @@ object Layout {
     }.reduce(_ + _)
   }
 
+  /** The Z key both log stores' `compactZOrdered` cluster by: a Morton
+    * key over the reference's two access dimensions, ranged scans (S1)
+    * and address-filtered standing queries (P1). The block coordinate is
+    * PARTITION-RELATIVE: raw low bits of block_num wrap every 2^bits
+    * blocks, and a `block_range` straddling that boundary would sort
+    * post-wrap blocks first; `block_num mod blocksPerRange` is monotone
+    * within every partition and fits the bit budget. The address is
+    * hashed so the second dimension is dense and numeric; pruning still
+    * works on the raw address column's file stats.
+    */
+  def logZorderKey(blocksPerRange: Long, bits: Int): Column = {
+    require(blocksPerRange <= (1L << bits),
+      s"blocksPerRange=$blocksPerRange exceeds the $bits-bit Z budget")
+    zorderKey(pmod(col("block_num"), lit(blocksPerRange)),
+      xxhash64(col("address")).bitwiseAND((1L << bits) - 1), bits)
+  }
+
   /** Write `df` clustered by a Z-order key over (xCol, yCol):
     * range-partition on the key (contiguous key ranges per output file),
     * sort within partitions so parquet row-group min/max stats are tight.

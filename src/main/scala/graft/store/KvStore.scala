@@ -108,7 +108,7 @@ object KvStore {
     * fails if `N` exists, so it is the create-if-absent claim. Listing
     * takes numeric names only, so Hadoop's `.N.crc` checksums and the
     * temp files of a crashed commit are invisible; purging deletes a
-    * version's checksum with it.
+    * version's checksum and its crashed commits' temp files with it.
     */
   private final class LocalLog(dir: String, path: JPath) extends Log {
     private implicit val formats: Formats = Serialization.formats(NoTypeHints)
@@ -147,15 +147,27 @@ object KvStore {
       try {
         Files.createLink(path.resolve(batchId.toString), tmp)
         true
-      } catch { case _: FileAlreadyExistsException => false }
-      finally Files.deleteIfExists(tmp)
+      } catch {
+        // a lost claim; or, for a writer that stalled while more than the
+        // retention window of versions landed, its temp file was purged
+        case _: FileAlreadyExistsException | _: NoSuchFileException => false
+      } finally Files.deleteIfExists(tmp)
     }
 
-    def purge(thresholdBatchId: Long): Unit =
-      versions().filter(_ < thresholdBatchId).foreach { v =>
-        Files.deleteIfExists(path.resolve(v.toString))
-        Files.deleteIfExists(path.resolve(s".$v.crc"))
-      }
+    /** Deletes `N`, `.N.crc` and every `.N.<uuid>.tmp` below the
+      * threshold. A commit in flight normally writes a version above it;
+      * one that stalled past the retention window loses its temp file
+      * here, and its link then fails as a lost claim ([[add]]).
+      */
+    def purge(thresholdBatchId: Long): Unit = names().foreach { n =>
+      val v =
+        if (n.startsWith(".") && (n.endsWith(".crc") || n.endsWith(".tmp")))
+          n.drop(1).takeWhile(_ != '.')
+        else n
+      if (v.forall(Character.isDigit) &&
+          v.toLongOption.exists(_ < thresholdBatchId))
+        Files.deleteIfExists(path.resolve(n))
+    }
   }
 }
 

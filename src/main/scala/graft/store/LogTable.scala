@@ -46,7 +46,9 @@ import graft.ops.LogOps.HeldRows
   *    engine with a transactional table format (Delta/Iceberg) would issue a
   *    metadata-only DELETE; plain parquet needs the rewrite, and reorgs only
   *    ever touch the last `MaxBlockBacklog` blocks by construction
-  *    (`tracker.go:296`).
+  *    (`tracker.go:296`);
+  *  - truncation and compaction both replace partition dirs through one
+  *    journaled, roll-forward swap ([[PartitionSwap]]).
   */
 final class LogTable(spark: SparkSession, root: String, filterHash: String,
     /** Blocks per at-rest partition directory. */
@@ -55,15 +57,13 @@ final class LogTable(spark: SparkSession, root: String, filterHash: String,
 
   private val dir = s"$root/logs/filter_hash=$filterHash"
 
-  /** Tiny versioned metadata store for the truncation journal — its
-    * atomic version commit is the POINTER this table's crash-safe
-    * truncation pivots on (the plain-parquet analog of a Delta/Iceberg
-    * metadata commit; ref `bolt_store.go:180-197` transactional truncate).
+  /** Truncation and compaction rewrite partitions through one journaled
+    * swap; its tiny versioned KV journal's atomic commit is the POINTER
+    * both pivot on (the plain-parquet analog of a Delta/Iceberg metadata
+    * commit; ref `bolt_store.go:180-197` transactional truncate).
     */
-  private lazy val meta = new KvStore(spark, s"$root/logs_meta/filter_hash=$filterHash")
-  private def metaDirExists: Boolean =
-    new java.io.File(s"$root/logs_meta/filter_hash=$filterHash/kv").exists()
-  private val intentKey = "truncate_intent"
+  private val swap = new PartitionSwap(spark, dir,
+    s"$root/logs_meta/filter_hash=$filterHash", "truncate_intent")
   @volatile private var intentChecked = false
 
   def exists: Boolean =
@@ -72,10 +72,8 @@ final class LogTable(spark: SparkSession, root: String, filterHash: String,
   /** Missing directory = genuinely fresh store → empty; any OTHER failure
     * (I/O, corrupt footer) propagates — silently treating it as "fresh"
     * would reset lastIndex to 0 and corrupt the monotonic sequence. A
-    * crashed maintenance operation self-heals first: a pending truncation
-    * intent rolls forward ([[recoverPendingTruncation]]) and a crashed
-    * compaction swap rolls forward/back ([[recoverCompaction]]) before
-    * the directory is interpreted.
+    * crashed truncation or compaction rolls forward first
+    * ([[PartitionSwap.recover]]), before the directory is interpreted.
     */
   def read: DataFrame = {
     recoverPending()
@@ -83,19 +81,10 @@ final class LogTable(spark: SparkSession, root: String, filterHash: String,
   }
 
   private def recoverPending(): Unit = if (!intentChecked) {
+    swap.recover()
+    sweepStagedAppends()
     intentChecked = true
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    recoverCompaction(fs)
-    recoverPendingTruncation(fs)
-    sweepStagedAppends(fs)
   }
-
-  /** Orphans and temp files of a crashed protocol are swept only once
-    * this old: the store allows concurrent readers, and a fresh reader
-    * must not delete a live writer's in-flight files.
-    */
-  private val staleMs = 60L * 60 * 1000
 
   /** Name prefix of a driver-held append's files before [[publish]]
     * renames them in.
@@ -106,39 +95,24 @@ final class LogTable(spark: SparkSession, root: String, filterHash: String,
     * `block_range` dirs: invisible to readers, swept so they cannot
     * accumulate.
     */
-  private def sweepStagedAppends(fs: org.apache.hadoop.fs.FileSystem): Unit = {
+  private def sweepStagedAppends(): Unit = {
     val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(root)) {
       val now = System.currentTimeMillis()
       fs.listStatus(root).filter(_.isDirectory)
         .flatMap(d => fs.listStatus(d.getPath))
         .filter(st => st.isFile && st.getPath.getName.startsWith(stagedPrefix))
-        .filter(st => now - st.getModificationTime > staleMs)
+        .filter(st => now - st.getModificationTime > PartitionSwap.staleMs)
         .foreach(st => fs.delete(st.getPath, false))
     }
   }
 
-  /** Whether the data dir exists. recoverCompaction has already rolled
-    * any crashed swap forward or back, so a still-missing dir is a
-    * genuinely fresh store — unless a trash sibling survived recovery
-    * (only possible if the heal itself failed), which must fail loudly,
-    * not read as empty.
+  /** A missing data dir is a genuinely fresh store: a dir missing
+    * because an earlier version's compaction crashed with it renamed
+    * aside is refused by [[PartitionSwap.recover]] first.
     */
-  private def dirExists: Boolean = {
-    val self = new java.io.File(dir)
-    self.exists() || {
-      val siblings = Option(self.getParentFile)
-        .flatMap(p => Option(p.listFiles()))
-        .getOrElse(Array.empty[java.io.File])
-      val strandedTrash =
-        siblings.find(_.getName.startsWith(self.getName + ".trash-"))
-      strandedTrash.foreach(t => throw new java.io.IOException(
-        s"log table $dir missing but ${t.getPath} exists — a compaction " +
-          "swap crashed mid-rename and self-heal failed; rename the trash " +
-          "dir back to recover"))
-      false
-    }
-  }
+  private def dirExists: Boolean = new java.io.File(dir).exists()
 
   private def readNoRecover: DataFrame =
     if (!dirExists) emptyLogs
@@ -324,22 +298,28 @@ final class LogTable(spark: SparkSession, root: String, filterHash: String,
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val staged = scala.collection.mutable.ArrayBuffer.empty[Path]
     try ranges.foreach { case (r, rs) =>
-      val part = new Path(dir, ExternalCatalogUtils.getPartitionPathString(
-        "block_range", r.map(_.toString).orNull))
-      staged += files.write(part, rs.iterator, prefix = stagedPrefix)
+      staged += files.write(new Path(dir, rangeDir(r)), rs.iterator,
+        prefix = stagedPrefix)
     } catch {
       case t: Throwable =>
         staged.foreach(fs.delete(_, false))
         throw t
     }
     staged.zipWithIndex.foreach { case (tmp, i) =>
-      if (i == 1) crash("mid-publish", crashAt)
+      if (i == 1) InjectedCrash.at("mid-publish", crashAt)
       val dst = new Path(tmp.getParent, tmp.getName.stripPrefix(stagedPrefix))
       if (!fs.rename(tmp, dst))
         throw new java.io.IOException(s"rename $tmp -> $dst failed")
     }
     spark.catalog.refreshByPath(dir)
   }
+
+  /** The partition dir of a `block_range` value: Spark's default-partition
+    * dir for null, as Spark's partitioned writer names it.
+    */
+  private def rangeDir(r: Option[Any]): String =
+    ExternalCatalogUtils.getPartitionPathString(
+      "block_range", r.map(_.toString).orNull)
 
   /** S9 — RemoveLogs(n): delete every log with `indx >= n`
     * (ref `postgresql_store.go:153-158`). Partition-pruned rewrite: only
@@ -354,26 +334,10 @@ final class LogTable(spark: SparkSession, root: String, filterHash: String,
     */
   def removeLogsFrom(n: Long): DataFrame = removeLogsFrom(n, crashAt = "")
 
-  /** Crash-injection hook for the truncation protocol spec: throws at the
-    * named point ("after-write", "after-intent", "mid-swap") so StoreSpec
-    * can kill the process-equivalent at every window and assert what a
-    * fresh reader sees.
-    */
-  private[graft] final class InjectedCrash(at: String)
-    extends RuntimeException(s"injected crash at $at")
-  private def crash(at: String, crashAt: String): Unit =
-    if (at == crashAt) throw new InjectedCrash(at)
-
-  /** Truncation protocol (crash-safe; single writer):
-    *  1. survivors of affected partitions → a fresh tmp dir
-    *     (crash ⇒ live table untouched; the orphan tmp is swept later);
-    *  2. ONE versioned KV commit journals the intent
-    *     {tmp, swap ranges, delete-only ranges} — THE atomic pointer: the
-    *     table is old before this commit, new after it;
-    *  3. per-partition delete+rename swaps, each idempotent
-    *     (crash ⇒ the next read()'s [[recoverPendingTruncation]] replays
-    *     step 3 to completion — roll-forward, never rollback);
-    *  4. clear the intent, drop the tmp dir.
+  /** Crash-injection twin of [[removeLogsFrom]]: throws at one of
+    * [[PartitionSwap]]'s windows ("after-write", "after-intent",
+    * "mid-swap") so StoreSpec can kill the process-equivalent at every
+    * window and assert what a fresh reader sees.
     */
   private[graft] def removeLogsFrom(n: Long, crashAt: String): DataFrame = {
     val current = read.cache() // read() also recovers any pending intent
@@ -388,33 +352,21 @@ final class LogTable(spark: SparkSession, root: String, filterHash: String,
       val removed = spark.createDataFrame(
         spark.sparkContext.parallelize(removedRows.toSeq, 1),
         current.schema)
-      // partition-dir values are type-inferred on read (int, not long)
-      val affected = removed.select(col("block_range").cast("long")).distinct()
-        .collect().map(_.getLong(0))
+      // partition values as read (type-inferred; null for a null block_num)
+      val affected = removedRows.toSeq
+        .map(r => Option(r.getAs[Any]("block_range"))).distinct
       if (affected.nonEmpty) {
-        val surv = current
-          .where(col("block_range").isin(affected.map(Long.box): _*) &&
-            col("indx") < n)
-          .cache()
+        val inAffected = col("block_range").isin(affected.flatten: _*) ||
+          (if (affected.contains(None)) col("block_range").isNull else lit(false))
+        val surv = current.where(inAffected && col("indx") < n).cache()
         survivors = Some(surv)
         surv.count()
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          spark.sparkContext.hadoopConfiguration)
-        val tmp = s"$dir.tmp-${System.nanoTime()}"
-        surv.write.mode(SaveMode.Overwrite)
-          .partitionBy("block_range").parquet(tmp)
-        crash("after-write", crashAt)
-        // a partition whose every row was removed has no tmp output — for
-        // it the delete IS the whole swap
-        val swapRanges = affected.filter(r =>
-          fs.exists(new org.apache.hadoop.fs.Path(s"$tmp/block_range=$r")))
-        val deleteOnly = affected.filterNot(swapRanges.contains)
-        meta.set(intentKey,
-          s"$tmp|${swapRanges.mkString(",")}|${deleteOnly.mkString(",")}")
-        crash("after-intent", crashAt)
-        applySwaps(fs, tmp, swapRanges, deleteOnly, crashAt)
-        meta.set(intentKey, "")
-        fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+        // a partition whose every row was removed has no tmp output: the
+        // swap drops it
+        swap.rewrite(affected.map(rangeDir), crashAt) { tmp =>
+          surv.write.mode(SaveMode.Overwrite)
+            .partitionBy("block_range").parquet(tmp)
+        }
       }
       removed
     } finally {
@@ -425,177 +377,33 @@ final class LogTable(spark: SparkSession, root: String, filterHash: String,
     }
   }
 
-  /** Step 3 of the protocol — idempotent per-partition swaps: a range
-    * whose tmp dir is gone was already swapped by a previous attempt.
-    */
-  private def applySwaps(fs: org.apache.hadoop.fs.FileSystem, tmp: String,
-      swapRanges: Seq[Long], deleteOnly: Seq[Long], crashAt: String = ""): Unit = {
-    var first = true
-    swapRanges.foreach { r =>
-      val dst = new org.apache.hadoop.fs.Path(s"$dir/block_range=$r")
-      val src = new org.apache.hadoop.fs.Path(s"$tmp/block_range=$r")
-      if (fs.exists(src)) {
-        fs.delete(dst, true)
-        if (!fs.rename(src, dst))
-          throw new java.io.IOException(s"rename $src -> $dst failed")
-      }
-      if (first) { first = false; crash("mid-swap", crashAt) }
-    }
-    deleteOnly.foreach { r =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/block_range=$r"), true)
-    }
-    // files changed underneath any existing reader: drop cached plans and
-    // stale listings over this path
-    spark.catalog.refreshByPath(dir)
-  }
-
-  /** Roll a crashed truncation forward (intent journaled but swaps
-    * incomplete) and sweep orphan tmp dirs (crash BEFORE the intent
-    * commit). Runs once per LogTable instance, before the first read —
-    * single-writer contract makes that sufficient: only a crashed
-    * predecessor can leave a pending intent.
-    */
-  /** Self-heal a crashed compaction swap (the truncation journal's
-    * sibling). [[swapInto]]'s windows and their recoveries:
-    *  - crash during the tmp write (live dir untouched): the partial
-    *    `.compact-*` orphan is swept;
-    *  - crash between the two renames (live dir aside in `.trash-*`, new
-    *    table complete in `.compact-*` — Spark's `_SUCCESS` marker is the
-    *    completeness witness): roll FORWARD, renaming the tmp in;
-    *    without a complete tmp, roll BACK the trash;
-    *  - crash after the swap, before the trash delete: the trash is
-    *    post-swap garbage and is swept.
-    * Idempotent; runs once per instance before the first read
-    * (single-writer contract — only a crashed predecessor can strand
-    * these states).
-    */
-  private def recoverCompaction(fs: org.apache.hadoop.fs.FileSystem): Unit = {
-    val self = new java.io.File(dir)
-    def siblings(prefix: String): Seq[java.io.File] =
-      Option(self.getParentFile).flatMap(p => Option(p.listFiles()))
-        .getOrElse(Array.empty[java.io.File])
-        .filter(_.getName.startsWith(self.getName + prefix)).toSeq
-    val trashes = siblings(".trash-")
-    val tmps = siblings(".compact-")
-    if (trashes.isEmpty && tmps.isEmpty) return
-    def hp(f: java.io.File) = new org.apache.hadoop.fs.Path(f.getPath)
-    val dst = new org.apache.hadoop.fs.Path(dir)
-    if (!self.exists() && trashes.nonEmpty) {
-      val complete = tmps.find(t => new java.io.File(t, "_SUCCESS").exists())
-      val src = complete.getOrElse(trashes.maxBy(_.getName))
-      if (!fs.rename(hp(src), dst))
-        throw new java.io.IOException(
-          s"compaction self-heal: rename ${src.getPath} -> $dir failed")
-      spark.catalog.refreshByPath(dir)
-    }
-    // Stranded siblings are garbage once a live dir exists — but a tmp
-    // could also belong to an IN-FLIGHT compaction by another process
-    // (readers are allowed concurrently; only writes are single-owner),
-    // so tmps are swept only when stale. Trash sweeping is always safe:
-    // with a live dir it is post-swap garbage, and the owner's own
-    // cleanup delete no-ops if we get there first.
-    if (new java.io.File(dir).exists()) {
-      siblings(".trash-").foreach(f => fs.delete(hp(f), true))
-      siblings(".compact-")
-        .filter(f => System.currentTimeMillis() - f.lastModified() > staleMs)
-        .foreach(f => fs.delete(hp(f), true))
-    }
-  }
-
-  private def recoverPendingTruncation(
-      fs: org.apache.hadoop.fs.FileSystem): Unit = {
-    if (metaDirExists) {
-      meta.get(intentKey).filter(_.nonEmpty).foreach { s =>
-        val parts = s.split("\\|", 3)
-        def ranges(x: String) =
-          x.split(",").filter(_.nonEmpty).map(_.toLong).toSeq
-        applySwaps(fs, parts(0), ranges(parts(1)), ranges(parts(2)))
-        meta.set(intentKey, "")
-        fs.delete(new org.apache.hadoop.fs.Path(parts(0)), true)
-      }
-      // orphan tmp dirs from pre-intent crashes: invisible to readers,
-      // swept here so they cannot accumulate. Stale-only, like the
-      // `.compact-*` sweep: the store allows concurrent READERS, and a
-      // fresh reader racing a live writer (between its survivor write and
-      // its intent commit) must not delete the in-flight tmp — the writer
-      // would then journal a delete-only intent and drop partitions
-      // without replacing survivors.
-      val self = new java.io.File(dir)
-      Option(self.getParentFile).flatMap(p => Option(p.listFiles()))
-        .getOrElse(Array.empty[java.io.File])
-        .filter(_.getName.startsWith(self.getName + ".tmp-"))
-        .filter(t => System.currentTimeMillis() - t.lastModified() > staleMs)
-        .foreach(t => fs.delete(
-          new org.apache.hadoop.fs.Path(t.getPath), true))
-    }
-  }
-
   /** S10 — point read (pushed-down unique-key predicate). */
   def getLog(n: Long): DataFrame = read.where(col("indx") === n)
 
-  /** Swap a freshly-written directory into place without a
-    * destroy-before-replace window: the live dir is RENAMED aside (not
-    * deleted) before the replacement moves in, so a crash at any point
-    * leaves the data recoverable under `<dir>` or `<dir>.trash-*` — the
-    * same no-lost-state discipline as KvStore's versioned commits. The
-    * brief not-found window between the two renames only affects
-    * concurrent readers, which the store contract (single writer, reads
-    * re-plan per query) already tolerates.
-    */
-  private def swapInto(fs: org.apache.hadoop.fs.FileSystem, tmp: String,
-      crashAt: String = ""): Unit = {
-    // Hadoop FileSystem.rename reports failure by RETURNING FALSE, not
-    // throwing — an unchecked rename-aside would let the second rename
-    // move tmp INSIDE the still-present live dir (nested garbage) or
-    // silently abandon the rewrite. Abort loudly instead; every failure
-    // mode leaves the data intact under dir, trash, or tmp.
-    def mustRename(from: org.apache.hadoop.fs.Path,
-        to: org.apache.hadoop.fs.Path): Unit =
-      if (!fs.rename(from, to))
-        throw new java.io.IOException(s"rename $from -> $to failed")
-    val dst = new org.apache.hadoop.fs.Path(dir)
-    val trash = new org.apache.hadoop.fs.Path(s"$dir.trash-${System.nanoTime()}")
-    if (fs.exists(dst)) mustRename(dst, trash)
-    crash("compact-after-aside", crashAt)
-    try mustRename(new org.apache.hadoop.fs.Path(tmp), dst)
-    catch {
-      case e: Throwable =>
-        // roll the live dir back so a failed swap leaves the table
-        // readable in place; if even the rollback fails, the next read's
-        // recoverCompaction self-heals from the stranded trash dir
-        if (fs.exists(trash)) fs.rename(trash, dst)
-        throw e
-    }
-    crash("compact-before-trash-delete", crashAt)
-    fs.delete(trash, true)
-  }
-
   /** Shared compaction scaffold: rewrite every partition into one file,
-    * rows clustered by `sortKeys`, then swap atomically-as-possible
-    * (see [[swapInto]]). No-op on an empty/fresh table — swapping in a
-    * row-less directory (which parquet writes with no data files) would
-    * leave a dir that fails schema inference on every later read.
+    * rows clustered by `sortKeys`, and swap each in through the journaled
+    * [[PartitionSwap]]; a live partition the rewrite lacks is dropped.
+    * No-op on an empty/fresh table — swapping in a row-less directory
+    * (which parquet writes with no data files) would leave a dir that
+    * fails schema inference on every later read.
     *
-    * The source dir stays intact until the tmp write has fully succeeded,
-    * so the write streams straight from the live files — no cache/
-    * materialization pass (unlike removeLogsFrom, which deletes the very
-    * partitions it reads and must pin rows first).
+    * The live partitions stay intact until the intent commit, after the
+    * tmp write has fully succeeded, so the write streams straight from
+    * the live files — no cache/materialization pass (unlike
+    * removeLogsFrom, whose survivors must outlive their source files).
     */
   private def rewriteClustered(sortKeys: Seq[org.apache.spark.sql.Column],
-      crashAt: String = ""): Unit = {
+      crashAt: String): Unit = {
     if (!new java.io.File(dir).exists() || read.isEmpty) return
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val tmp = s"$dir.compact-${System.nanoTime()}"
-    read
-      .repartition(col("block_range"))
-      // lead with the partition column: FileFormatWriter requires data
-      // sorted by partition cols and would otherwise inject its own
-      // (unstable) sort, destroying the clustering
-      .sortWithinPartitions(col("block_range") +: sortKeys: _*)
-      .write.mode(SaveMode.Overwrite).partitionBy("block_range").parquet(tmp)
-    crash("compact-after-write", crashAt)
-    swapInto(fs, tmp, crashAt)
+    swap.rewrite(swap.partitions(dir), crashAt) { tmp =>
+      read
+        .repartition(col("block_range"))
+        // lead with the partition column: FileFormatWriter requires data
+        // sorted by partition cols and would otherwise inject its own
+        // (unstable) sort, destroying the clustering
+        .sortWithinPartitions(col("block_range") +: sortKeys: _*)
+        .write.mode(SaveMode.Overwrite).partitionBy("block_range").parquet(tmp)
+    }
   }
 
   /** Layout maintenance: rewrite every partition clustered by
@@ -609,7 +417,9 @@ final class LogTable(spark: SparkSession, root: String, filterHash: String,
     */
   def compact(): Unit = compact(crashAt = "")
 
-  /** Crash-injection twin of [[compact]] for the protocol spec. */
+  /** Crash-injection twin of [[compact]]: throws at one of
+    * [[PartitionSwap]]'s windows.
+    */
   private[graft] def compact(crashAt: String): Unit =
     rewriteClustered(Seq(col("block_num"), col("tx_index")), crashAt)
 
@@ -622,21 +432,9 @@ final class LogTable(spark: SparkSession, root: String, filterHash: String,
     * leaves every file spanning all addresses. Within-partition file
     * count stays 1; the clustering only reorders rows.
     */
-  def compactZOrdered(bits: Int = 16): Unit = {
-    require(blocksPerRange <= (1L << bits),
-      s"blocksPerRange=$blocksPerRange exceeds the $bits-bit Z budget")
-    rewriteClustered(Seq(graft.ops.Layout.zorderKey(
-      // PARTITION-RELATIVE block coordinate: raw low bits of block_num
-      // wrap every 2^bits blocks, and a block_range straddling that
-      // boundary would sort post-wrap blocks first — destroying exactly
-      // the block clustering this method exists for. block_num mod
-      // blocksPerRange is monotone within every partition and fits the
-      // bit budget (blocksPerRange defaults to 10000 < 2^16).
-      pmod(col("block_num"), lit(blocksPerRange)),
-      // hash the address so the second dimension is dense + numeric;
-      // pruning still works on the raw address column's file stats
-      xxhash64(col("address")).bitwiseAND((1L << bits) - 1), bits)))
-  }
+  def compactZOrdered(bits: Int = 16): Unit =
+    rewriteClustered(
+      Seq(graft.ops.Layout.logZorderKey(blocksPerRange, bits)), crashAt = "")
 }
 
 private object LogTable {

@@ -126,8 +126,8 @@ private[store] object LogStore {
   *     reader of the OLD snapshot) until [[vacuum]].
   *  3. compact: rewrite the live rows (caps applied) into one fresh
   *     directory, then commit a single-entry manifest — same two-step
-  *     append shape, so it needs no swap/trash/self-heal machinery at
-  *     all (contrast [[LogTable.swapInto]]).
+  *     append shape, so it needs no journaled partition swap at all
+  *     (contrast [[PartitionSwap]]).
   *
   * Scale: the manifest is O(live commits) driver-side metadata (bounded
   * by compaction), never row data; reads prune whole directories by the
@@ -344,9 +344,6 @@ final class TxLogTable(spark: SparkSession, root: String, filterHash: String,
 
   def storeLogs(batch: DataFrame): Long = storeLogs(batch, crashAt = "")
 
-  private[graft] final class InjectedCrash(at: String)
-    extends RuntimeException(s"injected crash at $at")
-
   /** Test seam: runs between the invisible data write and the manifest
     * commit — a spec injects a competing committer here to exercise the
     * rebase path deterministically (thread races would be flaky).
@@ -388,7 +385,7 @@ final class TxLogTable(spark: SparkSession, root: String, filterHash: String,
                 .select(logSchema.fieldNames.map(col): _*)
                 .write.parquet(s"$dataDir/$name")
             }
-            if (crashAt == "after-data-write") throw new InjectedCrash(crashAt)
+            InjectedCrash.at("after-data-write", crashAt)
             beforeCommit()
             commit(Manifest(base + b.n, m.entries :+ Entry(name, base,
               base + b.n - 1, b.minBlock, b.maxBlock, Long.MaxValue),
@@ -479,8 +476,8 @@ final class TxLogTable(spark: SparkSession, root: String, filterHash: String,
   /** Layout maintenance, transactionally: rewrite the live rows (caps
     * applied) clustered by block order into ONE fresh directory, commit a
     * single-entry manifest. The old directories become unreferenced
-    * garbage for [[vacuum]] — no rename swap, no trash dir, no self-heal
-    * protocol, because the manifest pointer IS the swap.
+    * garbage for [[vacuum]] — no journaled partition swap, because the
+    * manifest pointer IS the swap.
     */
   def compact(): Unit =
     compactClustered(df => df.repartitionByRange(col("indx"))
@@ -493,11 +490,7 @@ final class TxLogTable(spark: SparkSession, root: String, filterHash: String,
     * groups; the manifest pointer is the whole swap.
     */
   def compactZOrdered(bits: Int = 16): Unit = {
-    require(blocksPerRange <= (1L << bits),
-      s"blocksPerRange=$blocksPerRange exceeds the $bits-bit Z budget")
-    val z = graft.ops.Layout.zorderKey(
-      pmod(col("block_num"), lit(blocksPerRange)),
-      xxhash64(col("address")).bitwiseAND((1L << bits) - 1), bits)
+    val z = graft.ops.Layout.logZorderKey(blocksPerRange, bits)
     compactClustered(df => df.repartition(col("block_range"))
       .sortWithinPartitions(z), "zorder")
   }

@@ -30,25 +30,39 @@ class IndexLifecycleSpec extends SparkSpec {
         probeHamming = 0, probeBudget = 3)
       .collect().map(bits).toSeq
 
-  test("compactIndex: append-debt directories collapse to the built " +
-    "layout; probes bit-identical before/after; cold dirs untouched") {
+  /** An LSH multi-table index over 300 vectors with append debt: a
+    * standing build plus three appended batches.
+    */
+  private def indebted(path: String): Seq[(Long, Seq[Float])] = {
     val all = mkVecs(0L until 300L, 11)
     val standing = all.filter(_._1 % 4 != 0).toDF("vec_id", "embedding")
     val batches = (1 to 3).map(b =>
       all.filter(p => p._1 % 4 == 0 && p._1 % 3 == b % 3)
         .toDF("vec_id", "embedding"))
-    val path = tmpDir("lshmt-compact")
     Similarity.writeLshMultiTableIndex(standing, "vec_id", "embedding",
       path, dim = 16, nbits = 4, tables = 4)
     batches.foreach(b => Similarity.appendLshMultiTableIndex(b, "vec_id",
       "embedding", path, dim = 16, nbits = 4, tables = 4))
+    all
+  }
 
-    def fileCounts: Map[String, Int] =
-      new java.io.File(path).listFiles().filter(_.isDirectory)
-        .filterNot(_.getName.startsWith("_"))
-        .map(d => d.getName -> d.listFiles()
-          .count(f => f.isFile && f.getName.startsWith("part-"))).toMap
-    val before = fileCounts
+  /** Part files per key dir. */
+  private def fileCounts(path: String): Map[String, Int] =
+    new java.io.File(path).listFiles().filter(_.isDirectory)
+      .filterNot(_.getName.startsWith("_"))
+      .map(d => d.getName -> d.listFiles()
+        .count(f => f.isFile && f.getName.startsWith("part-"))).toMap
+
+  /** Swap tmps beside the index. */
+  private def tmps(path: String): Seq[java.io.File] =
+    new java.io.File(path).getParentFile.listFiles().toSeq
+      .filter(_.getName.startsWith(new java.io.File(path).getName + ".tmp-"))
+
+  test("compactIndex: append-debt directories collapse to the built " +
+    "layout; probes bit-identical before/after; cold dirs untouched") {
+    val path = tmpDir("lshmt-compact")
+    val all = indebted(path)
+    val before = fileCounts(path)
     assert(before.values.max > 2, "append debt not created")
 
     val qs = Seq(0L, 1L, 4L, 77L).map(q => all(q.toInt)._2.toArray)
@@ -59,17 +73,13 @@ class IndexLifecycleSpec extends SparkSpec {
     val n = IndexLifecycle.compactIndex(spark, path, "vec_id",
       maxFilesPerDir = 2)
     assert(n > 0, "no directories compacted")
-    val after = fileCounts
+    val after = fileCounts(path)
     // hot dirs collapsed; cold dirs' files untouched
     assert(after.values.max <= 2, s"still-hot dirs after compact: $after")
     before.filter(_._2 <= 2).foreach { case (d, c) =>
       assert(after(d) == c, s"cold dir $d was rewritten")
     }
-    // no trash/tmp siblings survive a clean compact
-    val parent = new java.io.File(path).getParentFile
-    assert(!parent.listFiles().exists(f =>
-      f.getName.contains(".trash-") || f.getName.contains(".compact-")),
-      "compaction left siblings")
+    assert(tmps(path).isEmpty, "compaction left its tmp")
 
     val postIdx = spark.read.parquet(path)
     assert(postIdx.count() == expectedRows, "row count changed")
@@ -80,44 +90,94 @@ class IndexLifecycleSpec extends SparkSpec {
       maxFilesPerDir = 2) == 0)
   }
 
-  test("compactIndex recovery: a crash between rename-out and rename-in " +
-    "rolls forward from the complete tmp") {
-    val vecs = mkVecs(0L until 200L, 23).toDF("vec_id", "embedding")
-    val path = tmpDir("lshmt-recover")
-    Similarity.writeLshMultiTableIndex(vecs, "vec_id", "embedding",
-      path, dim = 16, nbits = 4, tables = 4)
-    val qv = mkVecs(Seq(5L), 23).head._2.toArray
-    val pre = probe(spark.read.parquet(path), qv)
-
-    // simulate the narrowest crash window: one key dir renamed OUT to
-    // trash, its compacted replacement complete in tmp (_SUCCESS), crash
-    // before rename-in — the live tree is missing the key
-    val self = new java.io.File(path)
-    val keyDir = self.listFiles().filter(_.isDirectory)
-      .filter(_.getName.startsWith("lsh_key=")).maxBy(_.getName)
-    val parent = self.getParentFile
-    val tmp = new java.io.File(parent, self.getName + ".compact-crash1")
-    val trash = new java.io.File(parent, self.getName + ".trash-crash1")
-    java.nio.file.Files.createDirectories(tmp.toPath)
-    java.nio.file.Files.createDirectories(trash.toPath)
-    // tmp gets a byte-identical "compacted" copy of the key dir
-    val tmpKey = new java.io.File(tmp, keyDir.getName)
-    java.nio.file.Files.createDirectories(tmpKey.toPath)
-    keyDir.listFiles().foreach { f =>
-      java.nio.file.Files.copy(f.toPath,
-        new java.io.File(tmpKey, f.getName).toPath)
+  test("compactIndex recovery: a crash at every swap window leaves the " +
+    "old index or rolls forward to the compacted one") {
+    Seq("after-write", "after-intent", "mid-swap").foreach { point =>
+      val path = tmpDir(s"lshmt-recover-$point")
+      val all = indebted(path)
+      val qs = Seq(0L, 1L, 4L, 77L).map(q => all(q.toInt)._2.toArray)
+      val pre = qs.map(probe(spark.read.parquet(path), _))
+      val before = fileCounts(path)
+      intercept[RuntimeException] {
+        IndexLifecycle.compactIndex(spark, path, "vec_id",
+          maxFilesPerDir = 2, crashAt = point)
+      }
+      val crashed = fileCounts(path)
+      if (point == "mid-swap")
+        assert(crashed.count { case (d, c) => c != before(d) } == 1,
+          "precondition: one key dir swapped at the crash")
+      else assert(crashed == before, s"$point: live index changed")
+      // every key dir is whole at every window: probes are bit-identical
+      // even before recovery
+      assert(qs.map(probe(spark.read.parquet(path), _)) == pre,
+        s"$point: probe diverged at the crash")
+      if (point == "after-write") {
+        // the orphan tmp is swept only once stale: a young one could be
+        // a live compactor's
+        assert(tmps(path).size == 1)
+        tmps(path).foreach(_.setLastModified(
+          System.currentTimeMillis() - 2 * graft.store.PartitionSwap.staleMs))
+      }
+      // recovery runs at the head of the next maintenance call; after the
+      // intent commit the swap has rolled forward and nothing is left hot
+      val n = IndexLifecycle.compactIndex(spark, path, "vec_id",
+        maxFilesPerDir = 2)
+      assert((n > 0) == (point == "after-write"), s"$point: compacted $n")
+      assert(fileCounts(path).values.max <= 2, s"$point: still hot")
+      assert(tmps(path).isEmpty, s"$point: stray tmp ${tmps(path)}")
+      assert(qs.map(probe(spark.read.parquet(path), _)) == pre,
+        s"$point: probe diverged after recovery")
     }
-    new java.io.File(tmp, "_SUCCESS").createNewFile()
-    // rename-out happened; rename-in did not
-    assert(keyDir.renameTo(new java.io.File(trash, keyDir.getName)))
-    assert(!keyDir.exists())
+  }
 
-    // recovery runs at the head of the next maintenance call
-    IndexLifecycle.compactIndex(spark, path, "vec_id", maxFilesPerDir = 99)
-    assert(keyDir.exists(), "key dir not restored")
-    assert(!trash.exists() && !tmp.exists(), "crash siblings not swept")
-    val post = probe(spark.read.parquet(path), qv)
-    assert(pre == post, "probe diverged after crash recovery")
+  test("compactIndex recovery: a batch appended after a crash past the " +
+    "intent survives the roll-forward") {
+    Seq("after-intent", "mid-swap").foreach { point =>
+      val path = tmpDir(s"lshmt-append-$point")
+      indebted(path)
+      intercept[RuntimeException] {
+        IndexLifecycle.compactIndex(spark, path, "vec_id",
+          maxFilesPerDir = 2, crashAt = point)
+      }
+      // the append rolls the journaled swap forward before it writes, so
+      // the swap cannot later replace the key dirs it lands in
+      val extra = mkVecs(300L until 340L, 12)
+      Similarity.appendLshMultiTableIndex(extra.toDF("vec_id", "embedding"),
+        "vec_id", "embedding", path, dim = 16, nbits = 4, tables = 4)
+      def extraRows() = spark.read.parquet(path).where(col("vec_id") >= 300L)
+        .count()
+      val appended = extraRows()
+      assert(appended == extra.size * 4, s"$point: one row per table")
+      IndexLifecycle.compactIndex(spark, path, "vec_id", maxFilesPerDir = 2)
+      // every table's copy of every appended vector is still there
+      assert(extraRows() == appended, s"$point: appended rows lost")
+      val idx = spark.read.parquet(path)
+      extra.foreach { case (id, v) =>
+        assert(probe(idx, v.toArray).map(_._1).contains(id),
+          s"$point: appended vec_id $id lost")
+      }
+    }
+  }
+
+  test("compactIndex refuses a rename-aside compaction's leftover sibling") {
+    // earlier versions renamed hot key dirs aside to `.trash-*`; a crash
+    // could strand one there, leaving probes short of its rows
+    val path = tmpDir("lshmt-trash")
+    indebted(path)
+    val self = new java.io.File(path)
+    val trash = new java.io.File(self.getParentFile, self.getName + ".trash-1")
+    java.nio.file.Files.createDirectories(trash.toPath)
+    val keyDir = self.listFiles().filter(_.getName.contains("=")).head
+    assert(keyDir.renameTo(new java.io.File(trash, keyDir.getName)))
+    val e = intercept[java.io.IOException] {
+      IndexLifecycle.compactIndex(spark, path, "vec_id", maxFilesPerDir = 2)
+    }
+    assert(e.getMessage.contains(trash.getName), e.getMessage)
+    intercept[java.io.IOException] {
+      Similarity.appendLshMultiTableIndex(
+        mkVecs(Seq(400L), 13).toDF("vec_id", "embedding"), "vec_id",
+        "embedding", path, dim = 16, nbits = 4, tables = 4)
+    }
   }
 
   test("publish/currentPath/vacuum: rebuild-while-serving — a held " +

@@ -128,63 +128,102 @@ class StoreSpec extends SparkSpec {
     assert(idxOf(freshC) == (0L until 19L))
   }
 
+  test("truncation drops a null block_num's default-partition dir like any other") {
+    val t = new LogTable(spark, tmpDir("store"), "f1", blocksPerRange = 10L)
+    val batch = Seq[(Long, String, Option[Long])]((0L, "tx-n", None),
+        (0L, "tx-a", Some(3L)))
+      .map { case (tx, hash, block) =>
+        (tx, hash, block, "h", "a1", Seq("sig"), "0x") }
+      .toDF("tx_index", "tx_hash", "block_num", "block_hash", "address",
+        "topics", "data")
+    assert(t.storeLogs(batch) == 2L)
+    assert(t.getLog(0L).where(col("block_num").isNull).count() == 1,
+      "precondition: the null row sorts first")
+    // the no-checkpoint restart truncation (Syncer.sync)
+    assert(t.removeLogsFrom(0L).count() == 2)
+    assert(t.lastIndex() == 0L && t.read.count() == 0)
+    assert(t.storeLogs(batch) == 2L)
+    // a truncation above the null row keeps it
+    assert(t.removeLogsFrom(1L).count() == 1)
+    assert(t.read.select("indx", "block_num").as[(Long, Option[Long])]
+      .collect().toSeq == Seq((0L, None)))
+  }
+
   test("compaction self-heals from a crash at every swap window") {
+    // a crash before the journal's intent commit leaves the OLD table, a
+    // crash after it rolls FORWARD to the compacted one on a fresh reader
     def build(root: String): LogTable = {
-      val t = new LogTable(spark, root, "f1", blocksPerRange = 2L)
-      // fragmented out-of-order appends, the compaction workload
+      val t = new LogTable(spark, root, "f1", blocksPerRange = 5L)
+      // fragmented out-of-order appends, the compaction workload: each
+      // partition holds three files
       Seq((8L, 9L), (0L, 1L), (6L, 7L), (2L, 3L), (4L, 5L)).foreach {
         case (a, b) => t.storeLogs(mkLogs(a, b))
       }
       t
     }
-    def idxOf(t: LogTable): Seq[Long] =
-      t.read.select("indx").as[Long].collect().sorted.toSeq
-    def noStrays(root: String): Unit = {
-      val strays = new java.io.File(s"$root/logs").listFiles()
-        .filter(f => f.getName.contains(".trash-") ||
-          f.getName.contains(".compact-"))
-      assert(strays.isEmpty, s"strays: ${strays.mkString(",")}")
+    def fresh(root: String) = new LogTable(spark, root, "f1", blocksPerRange = 5L)
+    def rows(t: LogTable): Seq[org.apache.spark.sql.Row] =
+      t.read.orderBy("indx").collect().toSeq
+    def filesPerPartition(root: String): Seq[Int] =
+      new java.io.File(s"$root/logs/filter_hash=f1").listFiles()
+        .filter(_.getName.startsWith("block_range=")).sortBy(_.getName)
+        .map(_.listFiles().count(_.getName.endsWith(".parquet"))).toSeq
+    def tmps(root: String): Seq[java.io.File] =
+      new java.io.File(s"$root/logs").listFiles()
+        .filter(_.getName.contains(".tmp-")).toSeq
+
+    Seq("after-write", "after-intent", "mid-swap").foreach { point =>
+      val root = tmpDir("store")
+      val t = build(root)
+      val expected = rows(t)
+      val fragmented = filesPerPartition(root)
+      assert(fragmented.size == 2 && fragmented.forall(_ > 1),
+        s"precondition: fragmented partitions, got $fragmented")
+      intercept[RuntimeException] { t.compact(crashAt = point) }
+      val crashed = filesPerPartition(root)
+      if (point == "mid-swap")
+        assert(crashed.head == 1 && crashed.last == fragmented.last,
+          s"precondition: one partition swapped at the crash, got $crashed")
+      else assert(crashed == fragmented, s"$point: live table changed")
+
+      val healed = fresh(root)
+      assert(rows(healed) == expected, s"$point: rows changed")
+      if (point == "after-write") {
+        assert(filesPerPartition(root) == fragmented,
+          "pre-intent crash must leave the ORIGINAL table")
+        // the orphan tmp is swept only once stale: a young one could be
+        // a live writer's
+        assert(tmps(root).size == 1)
+        tmps(root).foreach(_.setLastModified(
+          System.currentTimeMillis() - 2 * graft.store.PartitionSwap.staleMs))
+        assert(rows(fresh(root)) == expected)
+      } else assert(filesPerPartition(root) == Seq(1, 1),
+        s"$point: post-intent crash must roll FORWARD to the compacted table")
+      assert(tmps(root).isEmpty, s"$point: stray tmp ${tmps(root)}")
     }
+  }
 
-    // crash after the tmp write, before any rename → live table untouched
-    val rootA = tmpDir("store")
-    val tA = build(rootA)
-    intercept[RuntimeException] { tA.compact(crashAt = "compact-after-write") }
-    val freshA = new LogTable(spark, rootA, "f1", blocksPerRange = 2L)
-    assert(idxOf(freshA) == (0L until 20L))
-    // the partial/complete tmp is younger than the staleness window, so
-    // it is NOT swept (it could belong to an in-flight compaction) — but
-    // the table reads consistently around it, and a fresh compact works
-    freshA.compact()
-    assert(idxOf(freshA) == (0L until 20L))
-
-    // crash between the two renames (live dir aside, tmp complete) →
-    // roll FORWARD to the compacted table
-    val rootB = tmpDir("store")
-    val tB = build(rootB)
-    intercept[RuntimeException] { tB.compact(crashAt = "compact-after-aside") }
-    assert(!new java.io.File(s"$rootB/logs/filter_hash=f1").exists(),
-      "precondition: the live dir is aside at the crash point")
-    val freshB = new LogTable(spark, rootB, "f1", blocksPerRange = 2L)
-    assert(idxOf(freshB) == (0L until 20L),
-      "mid-swap crash must self-heal to a complete table")
-    noStrays(rootB)
-    // and the healed table is the COMPACTED one: one file per partition
-    val files = new java.io.File(s"$rootB/logs/filter_hash=f1").listFiles()
-      .filter(_.getName.startsWith("block_range="))
-      .map(d => d.listFiles().count(_.getName.endsWith(".parquet")))
-    assert(files.nonEmpty && files.forall(_ == 1),
-      s"healed table not compacted: ${files.mkString(",")}")
-
-    // crash after the swap, before the trash delete → trash swept
-    val rootC = tmpDir("store")
-    val tC = build(rootC)
-    intercept[RuntimeException] {
-      tC.compact(crashAt = "compact-before-trash-delete")
+  test("a rename-aside compaction's leftover sibling fails loudly, not as a short table") {
+    // earlier versions compacted by renaming the live dir aside to
+    // `.trash-*` and the rewrite in from `.compact-*`; a crash could
+    // strand a partition in either, and nothing rolls that forward now
+    Seq(".trash-", ".compact-").foreach { kind =>
+      val root = tmpDir("store")
+      val t = new LogTable(spark, root, "f1", blocksPerRange = 5L)
+      t.storeLogs(mkLogs(0, 9))
+      val dir = new java.io.File(s"$root/logs/filter_hash=f1")
+      val stranded = new java.io.File(dir.getParentFile, dir.getName + kind + "1")
+      java.nio.file.Files.createDirectories(stranded.toPath)
+      val part = dir.listFiles().filter(_.getName.startsWith("block_range=")).max
+      assert(part.renameTo(new java.io.File(stranded, part.getName)))
+      val reader = new LogTable(spark, root, "f1", blocksPerRange = 5L)
+      // every call refuses, not just the first
+      (1 to 2).foreach { _ =>
+        val e = intercept[java.io.IOException](reader.lastIndex())
+        assert(e.getMessage.contains(stranded.getName), e.getMessage)
+      }
+      intercept[java.io.IOException](reader.read)
     }
-    val freshC = new LogTable(spark, rootC, "f1", blocksPerRange = 2L)
-    assert(idxOf(freshC) == (0L until 20L))
-    noStrays(rootC)
   }
 
   test("point read GetLog (store.go:34-35)") {

@@ -13,7 +13,8 @@ import graft.SparkSpec
   * per version `N`, which Hadoop's local filesystem pairs with a `.N.crc`
   * checksum), so a store written before reads on, and a commit that
   * crashed between its temp write and its link leaves nothing a reader
-  * or the next writer trips over.
+  * or the next writer trips over, and its temp file is purged with its
+  * version.
   */
 class KvFilesSpec extends SparkSpec {
 
@@ -68,5 +69,14 @@ class KvFilesSpec extends SparkSpec {
     assert(tmp.exists(), "another writer's temp file must not be touched")
     // a commit leaves no temp file of its own
     assert(names(root).filter(_.endsWith(".tmp")) == Set(tmp.getName))
+    // the temp file goes with version 2: kept while it is retained
+    // (versions 2..5), purged by the commit that purges it
+    (3 to 5).foreach(i => reader.set("k", s"v$i"))
+    assert(names(root).contains("2") && tmp.exists(),
+      "a retained version's temp file must stay")
+    reader.set("k", "v6")
+    assert(!names(root).contains("2") && !tmp.exists(),
+      "a purged version's temp file must go with it")
+    assert(names(root).filter(_.endsWith(".tmp")).isEmpty)
   }
 }
