@@ -10,8 +10,8 @@ import org.apache.spark.sql.SparkSession
   *    Spark prune projections/expressions and under-reports real work;
   *  - one untimed warmup query absorbs JVM/codegen/parquet-footer costs so
   *    per-query numbers reflect steady state;
-  *  - local[32] with shuffle.partitions=32 (builder prompt) — matched
-  *    parallelism, no 200-partition default;
+  *  - the session is [[Harness.session]] at SPARK_GRAFT_CPUS (default
+  *    32) cores;
   *  - NOISE-PROOFING: the host has bursty CPU steal (identical code has
   *    measured 75→212 s sweep totals). Each query is timed
   *    SPARK_GRAFT_REPS (default 3) times and the MIN is recorded — reps
@@ -28,46 +28,16 @@ import org.apache.spark.sql.SparkSession
   *    steal/busy/total annotated under `sweeps` and the chosen index
   *    under `picked_sweep` — a still-polluted official line is loud,
   *    never silent.
+  *  - ANATOMY: a listener records each query's jobs, stages, tasks,
+  *    Σtask seconds and driver floor ([[Harness.QueryAnatomy]]) for the
+  *    rep that set its min time; they go to the full-map file under
+  *    `anatomy`. The listener bus is drained outside the timed window.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // serving-session conf: let a few-hundred-value IN reach parquet as
-      // a native In predicate (default threshold 10 degrades it to a
-      // min/max range that prunes nothing). The ANN rerank fetch filters
-      // an id-sorted index by ~400 shortlist ids — with the native
-      // predicate, parquet's page-level column index skips the vector
-      // pages no shortlist id touches (measured 2.8× on the fetch).
-      // 1024 is also a JVM-SAFETY ceiling, not just a tuning point
-      // (round 13): Spark 4.1 builds the native parquet In as a
-      // LEFT-DEEP FilterApi.or chain whose page-filter evaluation
-      // recurses once per value — a ~2,000-value In pushed natively
-      // overflowed the 1 MB task-thread stack (StackOverflowError in
-      // FileScanRDD). Above the threshold Spark pushes the In as a
-      // min/max range instead, which is safe.
-      .config("spark.sql.parquet.pushdown.inFilterThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_IN_THRESHOLD", "1024"))
-      // driver-floor conf (round 13, guide §1 measured): the generated-
-      // class cache (StaticSQLConf spark.sql.codegen.cache.maxEntries)
-      // defaults to 100 entries, while one sweep of this inventory
-      // compiles thousands of distinct fragments — by the time a query's
-      // next rep (or next AQE stage with a repeated shape) needs a
-      // fragment, it has been evicted and Janino recompiles it. A bigger
-      // cache is pure driver-side memoization: results and task-side
-      // behavior are untouched at any scale, and a production driver
-      // serving a repeated query mix wants the same thing. A/B in
-      // OPTIMIZATION_r13.md.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(cpus)
 
     def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -109,16 +79,20 @@ object Bench {
 
     /** One full min-of-reps sweep with its own /proc/stat window. */
     case class Sweep(best: Map[String, Double],
+        anatomy: Map[String, Harness.QueryAnatomy],
         failed: Seq[String], stealPct: Double, busyPct: Double) {
       def total: Double = best.values.sum
     }
+    val listener = new Harness.Anatomy(spark)
     def runSweep(): Sweep = {
       val failed = scala.collection.mutable.LinkedHashSet.empty[String]
       val best = scala.collection.mutable.Map.empty[String, Double]
+      val anat = scala.collection.mutable.Map.empty[String, Harness.QueryAnatomy]
       val (busy0, steal0, all0) = cpuJiffies()
       for (_ <- 1 to reps) {
         selected.foreach { case (name, fn) =>
           if (!failed.contains(name)) {
+            listener.begin()
             val t0 = System.nanoTime()
             try once(fn)
             catch { case e: Throwable =>
@@ -129,18 +103,22 @@ object Bench {
               best.remove(name)
             }
             val dt = (System.nanoTime() - t0) / 1e9
+            val a = listener.end(dt)
             // defensive, outside the timed window: drop any DataFrame caches
             // a query left behind so queries stay independent measurements
             // (localCheckpoint blocks release when their RDDs GC)
             spark.catalog.clearCache()
-            if (!failed.contains(name))
-              best(name) = math.min(best.getOrElse(name, Double.MaxValue), dt)
+            if (!failed.contains(name) &&
+                dt < best.getOrElse(name, Double.MaxValue)) {
+              best(name) = dt
+              anat(name) = a
+            }
           }
         }
       }
       val (busy1, steal1, all1) = cpuJiffies()
       val dAll = math.max(1L, all1 - all0)
-      Sweep(best.toMap, failed.toSeq,
+      Sweep(best.toMap, anat.toMap, failed.toSeq,
         100.0 * (steal1 - steal0) / dAll, 100.0 * (busy1 - busy0) / dAll)
     }
 
@@ -193,7 +171,9 @@ object Bench {
     // factors do not overwrite it.
     val fullPath =
       s"bench_full_c${cpus}_${new java.io.File(sfDir).getName}.json"
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$fail,"reps":$reps,"steal_pct":${p2(stealPct)},"busy_pct":${p2(busyPct)},"steal_gate_pct":$stealGate,"sweeps":$sweepsJson,"picked_sweep":$picked,"sf":"$sfDir"}"""
+    val anatJson = results.map { case (k, _) =>
+      "\"" + k + "\":" + chosen.anatomy(k).json }.mkString("{", ",", "}")
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"anatomy":$anatJson,"failed":$fail,"reps":$reps,"steal_pct":${p2(stealPct)},"busy_pct":${p2(busyPct)},"steal_gate_pct":$stealGate,"sweeps":$sweepsJson,"picked_sweep":$picked,"sf":"$sfDir"}"""
     try {
       val w = new java.io.PrintWriter(fullPath, "UTF-8")
       try w.println(fullLine) finally w.close()

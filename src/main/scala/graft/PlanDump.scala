@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates the physical-plan snapshots behind PLANS.md:
   * `sbt "runMain graft.PlanDump [sfDir] [query...]"` prints
   * `.explain("formatted")`-style plans for the named queries (default: the
@@ -42,21 +40,6 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq else headline
-    // AQE wraps everything in AdaptiveSparkPlan, under which CodegenMode
-    // reports "0 subtrees" — turn it off for the codegen audit only
-    val aqe = (sys.env.getOrElse("SPARK_GRAFT_PLAN_MODE", "simple")
-      != "codegen").toString
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", aqe)
-      // native parquet In pushdown for the ANN rerank id fetch (see Bench)
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "1024")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    // OFF, not ERROR: localCheckpoint cleanup logs benign "non-existent
-    // accumulator" DAGScheduler errors that would otherwise flood the
-    // regenerated PLANS.md with stack traces
-    spark.sparkContext.setLogLevel("OFF")
     // SPARK_GRAFT_PLAN_MODE=codegen prints WholeStageCodegen subtree counts
     // + generated code (audits that big projections haven't bailed out of
     // codegen); default stays the compact simple plan
@@ -65,6 +48,15 @@ object PlanDump {
       case "formatted" => org.apache.spark.sql.execution.FormattedMode
       case _ => org.apache.spark.sql.execution.SimpleMode
     }
+    val spark = Harness.session("8")
+    // AQE wraps everything in AdaptiveSparkPlan, under which CodegenMode
+    // reports "0 subtrees" — turn it off for the codegen audit only
+    if (mode == org.apache.spark.sql.execution.CodegenMode)
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+    // OFF, not WARN: localCheckpoint cleanup logs benign "non-existent
+    // accumulator" DAGScheduler errors that would otherwise flood the
+    // regenerated PLANS.md with stack traces
+    spark.sparkContext.setLogLevel("OFF")
     names.foreach { q =>
       println(s"## $q\n")
       println("```")

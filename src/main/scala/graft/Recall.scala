@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ext.{Dedup, Similarity}
@@ -23,14 +22,7 @@ object Recall {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val outFile = if (args.length > 1) args(1) else "RECALL.md"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // native parquet In pushdown for the ANN rerank id fetch (see Bench)
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "1024")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     val e = Tables.embeddings(spark, sfDir).cache()
@@ -60,15 +52,10 @@ object Recall {
     val (mtNbits, mtTables) = graft.queries.Serving.lshMtDial(nVec)
     val mtBudget = 12
     // temp index trees are several corpus multiples on disk (MT-LSH is
-    // 12×) — a shutdown hook reclaims them even when a recall gate
+    // 12×) — scratch dirs are reclaimed at exit even when a recall gate
     // BELOW throws (the tool's purpose is to fail on regression; a
     // failing run must not leak its indexes run after run)
-    def tempIndexDir(prefix: String): String = {
-      val p = java.nio.file.Files.createTempDirectory(prefix).toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(p)))
-      p
-    }
-    val mtPath = tempIndexDir("graft-recall-lshmt")
+    val mtPath = Harness.scratchDir("graft-recall-lshmt")
     Similarity.writeLshMultiTableIndex(e, "vec_id", "embedding", mtPath,
       dim = 64, nbits = mtNbits, tables = mtTables)
     val mtIdx = spark.read.parquet(mtPath)
@@ -87,7 +74,7 @@ object Recall {
     // dial, nprobe = nlist/16)
     val maNlist = graft.queries.Serving.ivfNlist(nVec)
     val maNprobe = graft.queries.Serving.ivfNprobe(maNlist, 16)
-    val maPath = tempIndexDir("graft-recall-ivfma")
+    val maPath = Harness.scratchDir("graft-recall-ivfma")
     val maCentroids = Similarity.writeIvfIndexMulti(e, "vec_id",
       "embedding", maPath, nlist = maNlist, nassign = 3)
     val maIdx = spark.read.parquet(maPath).cache()
@@ -101,7 +88,7 @@ object Recall {
     // COMPOSITE (multi-assign cells, ADC over code columns in nprobe
     // cells, IN-filter rerank)
     val pqNprobe = graft.queries.Serving.pqNprobe(maNlist)
-    val pqPath = tempIndexDir("graft-recall-ivfpq")
+    val pqPath = Harness.scratchDir("graft-recall-ivfpq")
     val (pqCentroids, pqBooks) = Similarity.writeIvfPqIndex(e, "vec_id",
       "embedding", pqPath, nlist = maNlist, nassign = 2, m = 16,
       codes = 256, samplePerCode = 16)
@@ -266,12 +253,7 @@ object Recall {
     // quadratically (all-pairs) or linearly-per-query (brute top-k) while
     // the approximate side's candidate sets stay bucket-bounded — the 10×
     // soak (SOAK.md) carries the scaled wall-clocks. ─────────────────────
-    def timed(f: => Unit): Double = {
-      def once(): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
-      math.min(once(), once())
-    }
+    def timed(f: => Unit): Double = Harness.timeMin(2)(f)
     val tExactTopK = timed(queryIds.foreach(q =>
       Similarity.cosineTopK(e, e.where(col("vec_id") === q),
         "vec_id", "embedding", k).collect()))
@@ -437,15 +419,7 @@ object Recall {
       f"dedup_audio planted re-master recall regressed: $audioRecall%.3f")
     require(videoRecall >= 0.93,
       f"dedup_video planted re-encode recall regressed: $videoRecall%.3f")
-    Seq(mtPath, maPath, pqPath).foreach(rmTree)
+    Seq(mtPath, maPath, pqPath).foreach(Harness.rmTree)
     spark.stop()
-  }
-
-  private def rmTree(p: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(): Unit
-    }
-    rm(new java.io.File(p))
   }
 }

@@ -1,11 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.model.{BlockHeader, FilterConfig}
 import graft.reorg.Reconciler
-import graft.stream.LiveSync
 import graft.sync.{FirstLogLocator, Provider, SyncReport, Syncer}
 
 /** Porcelain facade — the `NewTracker → Sync → events` surface of the
@@ -18,23 +16,18 @@ import graft.sync.{FirstLogLocator, Provider, SyncReport, Syncer}
   *   t.logs                         // the tracked log as a DataFrame
   *   t.logs.groupBy("address").count()
   *   t.lastBlock                    // checkpoint (T3)
-  *   t.live(headBlock = …)          // streaming ingestion (S4/T1)
   *   t.reconcile(liveHeaders)       // CDC delta for an incoming chain (T4)
   * }}}
   *
   * Everything here delegates to the layer modules (`sync.Syncer`,
-  * `store.LogTable`, `stream.*`) — the facade adds no behavior, only the
-  * reference-shaped surface.
+  * `store.LogTable`, `reorg.Reconciler`) — the facade adds no behavior,
+  * only the reference-shaped surface.
   */
 final class Tracker private (
-    spark: SparkSession,
     provider: Provider,
-    root: String,
     val filter: FilterConfig,
     syncer: Syncer,
-    maxBlockBacklog: Int,
-    batchSize: Long,
-    transactionalStore: Boolean
+    maxBlockBacklog: Int
 ) {
 
   /** The per-filter log table (S6–S11 store surface). */
@@ -62,16 +55,6 @@ final class Tracker private (
   /** T3 — the checkpointed last-synced block. */
   def lastBlock: Option[BlockHeader] = syncer.checkpoint()
 
-  /** S4/T1 — streaming ingestion with AIMD admission; one query per filter,
-    * checkpointed under this tracker's root. Defaults to the tracker's
-    * configured batch size — not a re-defaulted 100 (same rule as the
-    * backlog in [[reconcile]]).
-    */
-  def live(headBlock: Long, batchSize: Long = this.batchSize,
-      maxLogsPerBatch: Long = Long.MaxValue): StreamingQuery =
-    LiveSync.start(spark, root, filter, headBlock, batchSize,
-      maxLogsPerBatch, transactionalStore)
-
   /** T4 — CDC delta (add/del rows, retractions oldest-first) for an
     * incoming canonical header set, without mutating the store.
     */
@@ -98,14 +81,14 @@ object Tracker {
       batchSize: Long = 100L,
       maxBlockBacklog: Int = 10,
       locator: Option[FirstLogLocator] = None,
-      /** Store backend for BOTH the batch sync and [[Tracker.live]]:
-        * false = journaled parquet, true = the manifest-committed
-        * transactional table (see [[graft.store.TxLogTable]]).
+      /** Store backend of the sync: false = journaled parquet, true =
+        * the manifest-committed transactional table (see
+        * [[graft.store.TxLogTable]]).
         */
       transactionalStore: Boolean = false
   ): Tracker =
-    new Tracker(spark, provider, root, filter,
+    new Tracker(provider, filter,
       new Syncer(spark, provider, root, filter, batchSize, maxBlockBacklog,
         locator, transactionalStore = transactionalStore),
-      maxBlockBacklog, batchSize, transactionalStore)
+      maxBlockBacklog)
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,18 +10,7 @@ object Verify {
     // always calls the 2-arg form and gets the full dump)
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // native parquet In pushdown for the ANN rerank id fetch (see Bench)
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "1024")
-      // generated-class cache sized to the inventory (see Bench) — pure
-      // driver-side memoization, results unaffected
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(cpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only.contains(name) }
@@ -33,13 +21,7 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // a failed query must not leave a PREVIOUS run's dump in place —
         // the driver compare would silently pass it against stale results
-        val stale = new java.io.File(s"$outDir/$name")
-        if (stale.exists()) {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-          }
-          rm(stale)
-        }
+        Harness.rmTree(s"$outDir/$name")
       }
       // defensive: drop any DataFrame caches a query may leave behind
       // (localCheckpoint blocks are separate — released when their RDDs GC)

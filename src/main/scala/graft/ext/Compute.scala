@@ -31,16 +31,12 @@ import org.apache.spark.sql.{Column, DataFrame}
   * bit-identical either way; the determinism is belt-and-braces.
   */
 object Compute {
-  // A/B kill-switch for measurement only (results are identical either
-  // way): SPARK_GRAFT_FANOUT=off restores the raw input partitioning.
-  private val enabled = !sys.env.get("SPARK_GRAFT_FANOUT").contains("off")
-
   def fanOut(df: DataFrame, key: Column): DataFrame = {
     // a streaming frame cannot be plan-probed this way (and its
     // micro-batch partitioning comes from the source): pass it through
     // untouched — the batch twins of the streaming consumers keep the
     // fan-out
-    if (!enabled || df.isStreaming) return df
+    if (df.isStreaming) return df
     val target = df.sparkSession.sparkContext.defaultParallelism
     // Partitioning probe WITHOUT Dataset.rdd (optimization round 13,
     // ADVICE r12): under AQE, .rdd finalizes the adaptive plan, which
@@ -84,16 +80,12 @@ object Compute {
     * under the budget → checkpoint (the harness / serving regime); over
     * it → return the frame unchanged — plain recompute, correct under
     * executor loss, and AQE's runtime stage reuse still dedups what it
-    * can. Budget override: SPARK_GRAFT_PIN_MAX_BYTES (bytes).
+    * can. The default budget is 1 GiB.
     */
   def pinSmall(df: DataFrame, input: DataFrame,
-      maxBytes: Long = pinMaxBytes): DataFrame = {
+      maxBytes: Long = 1L << 30): DataFrame = {
     val bytes = input.queryExecution.optimizedPlan.collectLeaves()
       .map(_.stats.sizeInBytes).sum
     if (bytes <= maxBytes) df.localCheckpoint(false) else df
   }
-
-  private val pinMaxBytes: Long =
-    sys.env.get("SPARK_GRAFT_PIN_MAX_BYTES").map(_.toLong)
-      .getOrElse(1L << 30)
 }

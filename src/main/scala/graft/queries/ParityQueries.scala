@@ -63,15 +63,7 @@ object ParityQueries {
   private def txStoreRoot(s: SparkSession, d: String): String = {
     txStoreDirs.computeIfAbsent(
       (System.identityHashCode(s), d), _ => {
-        val path = java.nio.file.Files
-          .createTempDirectory("graft-txstore").toString
-        Runtime.getRuntime.addShutdownHook(new Thread(() => {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-            f.delete(): Unit
-          }
-          rm(new java.io.File(path))
-        }))
+        val path = graft.Harness.scratchDir("graft-txstore")
         val t = new graft.store.TxLogTable(s, path, "q")
         // deterministic event→log mapping: block = id div 10, tx = id mod
         // 10, so the append order key (block_num, tx_index, tx_hash) is
@@ -363,15 +355,7 @@ object ParityQueries {
 
   private def txStoreExport(s: SparkSession): DataFrame = {
     val root = txExports.computeIfAbsent(System.identityHashCode(s), _ => {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-txexport-src").toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-          f.delete(): Unit
-        }
-        rm(new java.io.File(path))
-      }))
+      val path = graft.Harness.scratchDir("graft-txexport-src")
       val t = new graft.store.TxLogTable(s, path, "x")
       def logsOf(lo: Long, hi: Long): DataFrame =
         s.range(lo, hi).select(
@@ -401,15 +385,7 @@ object ParityQueries {
   private def txStoreImport(s: SparkSession): DataFrame = {
     txStoreExport(s).queryExecution // ensure the export exists (memoized)
     val root = txImports.computeIfAbsent(System.identityHashCode(s), _ => {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-tximport").toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-          f.delete(): Unit
-        }
-        rm(new java.io.File(path))
-      }))
+      val path = graft.Harness.scratchDir("graft-tximport")
       new graft.store.TxLogTable(s, path, "i").importSnapshot(txExportPath)
       path
     })

@@ -53,18 +53,10 @@ object PipelineQueries {
   private def ingestDir(s: SparkSession, d: String, fmt: String,
       write: DataFrame => String => Unit): String =
     ingestDirs.computeIfAbsent((System.identityHashCode(s), d, fmt), _ => {
-      val path = java.nio.file.Files
-        .createTempDirectory(s"graft-ingest-$fmt").toString
-      // corpus-sized copy in /tmp: reclaim it at JVM exit so repeated
+      // corpus-sized copy in /tmp: reclaimed at JVM exit so repeated
       // bench sessions don't accumulate one directory per (session, sf,
       // format) forever
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-          f.delete(): Unit
-        }
-        rm(new java.io.File(path))
-      }))
+      val path = graft.Harness.scratchDir(s"graft-ingest-$fmt")
       write(Tables.documents(s, d))(path)
       path
     })

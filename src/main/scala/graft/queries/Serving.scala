@@ -28,18 +28,6 @@ object Serving {
   private val annIndexCache = new java.util.concurrent.ConcurrentHashMap[
     (Int, Int, String), AnyRef]()
 
-  private def tempArtifactDir(prefix: String): String = {
-    val path = java.nio.file.Files.createTempDirectory(prefix).toString
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(): Unit
-      }
-      rm(new java.io.File(path))
-    }))
-    path
-  }
-
   private def annKey(e: DataFrame, cfg: String): (Int, Int, String) =
     (System.identityHashCode(e.sparkSession),
       e.queryExecution.analyzed.semanticHash(), cfg)
@@ -135,7 +123,7 @@ object Serving {
       dim: Int): (DataFrame, Int, Int) =
     annIndexCache.computeIfAbsent(annKey(e, s"lshmt$dim"), _ => {
       val (nbits, tables) = lshMtDial(corpusSize(e))
-      val path = tempArtifactDir("graft-lshmtidx-")
+      val path = graft.Harness.scratchDir("graft-lshmtidx-")
       Similarity.writeLshMultiTableIndex(e, "vec_id", "embedding", path,
         dim, nbits, tables)
       (e.sparkSession.read.parquet(path), nbits, tables)
@@ -160,7 +148,7 @@ object Serving {
     annIndexCache.computeIfAbsent(annKey(e, s"lshmt-incr$dim"),
       _ => {
         val (nbits, tables) = lshMtDial(corpusSize(e))
-        val path = tempArtifactDir("graft-lshmtincr-")
+        val path = graft.Harness.scratchDir("graft-lshmtincr-")
         Similarity.writeLshMultiTableIndex(
           e.where(pmod(col("vec_id"), lit(10)) =!= 0), "vec_id",
           "embedding", path, dim, nbits, tables)
@@ -177,7 +165,7 @@ object Serving {
       nassign: Int): (DataFrame, Array[Array[Double]], Int) =
     annIndexCache.computeIfAbsent(annKey(e, s"ivfma$nassign"), _ => {
       val nlist = ivfNlist(corpusSize(e))
-      val path = tempArtifactDir("graft-ivfmaidx-")
+      val path = graft.Harness.scratchDir("graft-ivfmaidx-")
       val centroids = Similarity.writeIvfIndexMulti(e, "vec_id",
         "embedding", path, nlist, nassign)
       (e.sparkSession.read.parquet(path), centroids, nlist)
@@ -192,7 +180,7 @@ object Serving {
     annIndexCache.computeIfAbsent(
       annKey(e, s"ivfpq$nassign-$m-$codes-$samplePerCode"), _ => {
         val nlist = ivfNlist(corpusSize(e))
-        val path = tempArtifactDir("graft-ivfpqidx-")
+        val path = graft.Harness.scratchDir("graft-ivfpqidx-")
         val (centroids, books) = Similarity.writeIvfPqIndex(e, "vec_id",
           "embedding", path, nlist, nassign, m, codes, samplePerCode)
         (e.sparkSession.read.parquet(path), centroids, books, nlist)
@@ -208,7 +196,7 @@ object Serving {
     */
   private[queries] def bandIndexOf(corpus: DataFrame): String =
     annIndexCache.computeIfAbsent(annKey(corpus, "bandidx3-32-16"), _ => {
-      val path = tempArtifactDir("graft-bandidx-")
+      val path = graft.Harness.scratchDir("graft-bandidx-")
       graft.ext.Dedup.writeBandIndex(corpus, "doc_id", "text", path,
         shingleN = 3, numHashes = 32, bands = 16)
       path

@@ -1,8 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Harness
+import graft.Harness.timeMin
 import graft.ext.Similarity
 
 /** ANN crossover harness: measures WHERE the approximate top-k tiers
@@ -40,16 +42,7 @@ object AnnCrossover {
     val nQueries = sys.env.getOrElse("SPARK_GRAFT_ANN_QUERIES", "8").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val k = 20
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // native parquet In pushdown for the ANN rerank id fetch (see Bench)
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "1024")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(cpus)
     import spark.implicits._
 
     def cells(factor: Int): Seq[String] = {
@@ -80,11 +73,8 @@ object AnnCrossover {
 
       /** min over reps of mean-per-query seconds, running every query. */
       def time(run: Array[Float] => DataFrame): Double =
-        (0 until reps).map { _ =>
-          val t0 = System.nanoTime()
-          queries.foreach(qv => run(qv).collect(): Unit)
-          (System.nanoTime() - t0) / 1e9 / queries.length
-        }.min
+        timeMin(reps)(queries.foreach(qv => run(qv).collect(): Unit)) /
+          queries.length
 
       // cached-exact context row (the round-9 harness's baseline): the
       // RAM-resident scan a single-node deployment could afford
@@ -122,10 +112,10 @@ object AnnCrossover {
       def lshMtIndexOf(nbits: Int, tables: Int): (DataFrame, Double) =
         lshMtIdx.getOrElseUpdate((nbits, tables), {
           val path = s"$idxRoot/lshmt$nbits-$tables"
-          val t0 = System.nanoTime()
-          Similarity.writeLshMultiTableIndex(embs, "vec_id", "embedding",
-            path, dim = 64, nbits = nbits, tables = tables)
-          (spark.read.parquet(path), (System.nanoTime() - t0) / 1e9)
+          val secs = timeMin(1)(Similarity.writeLshMultiTableIndex(embs,
+            "vec_id", "embedding", path, dim = 64, nbits = nbits,
+            tables = tables))
+          (spark.read.parquet(path), secs)
         })
       def lshMtCell(name: String, nbits: Int, tables: Int,
           hamming: Int): (String, Double, Double, Double) = {
@@ -160,11 +150,7 @@ object AnnCrossover {
       val batchQs = queries.zipWithIndex.map { case (qv, i) => (i.toLong, qv) }
       def batchTimeRecall(runBatch: () => Map[Long, Set[Long]])
           : (Double, Double) = {
-        val secs = (0 until reps).map { _ =>
-          val t0 = System.nanoTime()
-          runBatch(): Unit
-          (System.nanoTime() - t0) / 1e9 / queries.length
-        }.min
+        val secs = timeMin(reps)(runBatch(): Unit) / queries.length
         val res = runBatch()
         val rec = truth.zipWithIndex.map { case (t, i) =>
           t.intersect(res.getOrElse(i.toLong, Set.empty[Long]))
@@ -375,16 +361,12 @@ object AnnCrossover {
         val wr = org.apache.spark.sql.expressions.Window
           .partitionBy("query_id")
           .orderBy(col("cosine").desc, col("vec_id"))
-        (0 until reps).map { _ =>
-          val t0 = System.nanoTime()
-          embsAtRest.crossJoin(broadcast(qdf))
-            .select(col("query_id"), col("vec_id"),
-              Similarity.cosine(col("embedding"), col("__q")).as("cosine"))
-            .withColumn("rnk", row_number().over(wr))
-            .where(col("rnk") <= k)
-            .collect(): Unit
-          (System.nanoTime() - t0) / 1e9 / queries.length
-        }.min
+        timeMin(reps)(embsAtRest.crossJoin(broadcast(qdf))
+          .select(col("query_id"), col("vec_id"),
+            Similarity.cosine(col("embedding"), col("__q")).as("cosine"))
+          .withColumn("rnk", row_number().over(wr))
+          .where(col("rnk") <= k)
+          .collect(): Unit) / queries.length
       }
 
       val out = Seq(
@@ -398,11 +380,7 @@ object AnnCrossover {
           f""""$name":{"query_s":$s%.4f,"recall":$r%.3f,""" +
             f""""speedup":${exactS / s}%.2f,"index_s":$indexS%.2f}"""
         }
-      def rmAll(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rmAll)
-        f.delete(): Unit
-      }
-      rmAll(new java.io.File(idxRoot))
+      Harness.rmTree(idxRoot)
       Seq(s""""x$factor":{"n_vectors":$n,${out.mkString(",")}}""")
     }
 

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Harness
 import graft.ext.Similarity
 
 /** Measures the incremental-ingest claim behind `sim_search_incremental`:
@@ -32,15 +32,7 @@ object AppendBench {
     // the harness inside its disk ceiling (24× corpus at 5M ≈ 31 GB
     // index + a corpus-sized pass shuffle + the rebuild twin)
     val nbits = 10; val tables = 12; val dim = 64; val k = 20
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "1024")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(cpus)
     import spark.implicits._
 
     val dir =
@@ -65,9 +57,7 @@ object AppendBench {
 
     val root = java.nio.file.Files
       .createTempDirectory("graft-appendbench-").toString
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
+    def timed(f: => Unit): Double = Harness.timeMin(1)(f)
     // untimed warm-up over the batch-sized slice: the rebuild is timed
     // FIRST, and on a cold JVM it would pay codegen/JIT/committer
     // warm-up the later columns don't — which biased the published
@@ -76,14 +66,7 @@ object AppendBench {
     // commit) at batch size, so every timed column starts warm.
     Similarity.writeLshMultiTableIndex(batch, "vec_id", "embedding",
       s"$root/warm", dim, nbits, tables)
-    def rmDir(p: String): Unit = {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(): Unit
-      }
-      rm(new java.io.File(p))
-    }
-    rmDir(s"$root/warm")
+    Harness.rmTree(s"$root/warm")
 
     // one-shot rebuild over the union — the cost an ingest WITHOUT the
     // append path pays on every batch arrival
@@ -124,11 +107,8 @@ object AppendBench {
     val identical = queries.forall(qv => probe(fullIdx, qv) == probe(incrIdx, qv))
     val dirtyIdx = spark.read.parquet(s"$root/incr")
     def probeAllS(idx: org.apache.spark.sql.DataFrame): Double =
-      (0 until 3).map { _ =>
-        val t0 = System.nanoTime()
-        queries.foreach(qv => probe(idx, qv): Unit)
-        (System.nanoTime() - t0) / 1e9 / queries.length
-      }.min
+      Harness.timeMin(3)(queries.foreach(qv => probe(idx, qv): Unit)) /
+        queries.length
     val preCompactS = probeAllS(dirtyIdx)
     val preCompact = queries.map(qv => probe(dirtyIdx, qv))
     val tCompact = timed {
@@ -153,11 +133,7 @@ object AppendBench {
       s""""probe_postcompact_s":${p2(postCompactS)},""" +
       s""""probes_identical_across_compact":$compactIdentical}""")
 
-    def rmAll(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rmAll)
-      f.delete(): Unit
-    }
-    rmAll(new java.io.File(root))
+    Harness.rmTree(root)
     spark.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Multi-split copy of a harness scale-factor directory (optimization
   * round 13 — VERDICT r12 #7). Every harness table ships as ONE parquet
   * file, so every scan is ONE input split: narrow compute stages
@@ -30,16 +28,10 @@ object MultiSplit {
       .orElse(sys.env.get("SPARK_GRAFT_SPLITS").map(_.toInt))
       .getOrElse(32)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts can be TIMESTAMP(NANOS) (see graft.Tables): read it as
-      // raw int64 so the copy round-trips values bit-exactly
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(cpus)
+    // events.ts can be TIMESTAMP(NANOS) (see graft.Tables): read it as
+    // raw int64 so the copy round-trips values bit-exactly
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val tables = Seq("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings")
     tables.foreach { t =>

@@ -1,9 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.functions._
-
+import graft.{Harness, Tables}
 import graft.ext.{Dedup, Similarity}
-import graft.Tables
 
 /** One-off measurement sweep for the multi-probe pair-mining dial
   * (knnJoin / embeddingNearDup `probes`): recall and wall time per
@@ -14,12 +12,7 @@ import graft.Tables
 object ProbeSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .appName("graft-probe-sweep").master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
 
     val e = Tables.embeddings(spark, sfDir).cache()
     e.count()
@@ -30,34 +23,32 @@ object ProbeSweep {
     val exactEmb = ExactBaselines.cosinePairs(e, "vec_id", "embedding", 0.3)
     println(s"exact: knn edges ${exactKnn.size}, emb pairs ${exactEmb.size}")
 
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
-    def minOf2[T](f: => (T, Double)): (T, Double) = {
-      val (r1, t1) = f; val (_, t2) = f
-      (r1, math.min(t1, t2))
+    // min-of-2 wall seconds of a pair-set run, with its (deterministic)
+    // pairs
+    def minOf2(f: => Set[(Long, Long)]): (Set[(Long, Long)], Double) = {
+      var got = Set.empty[(Long, Long)]
+      val secs = Harness.timeMin(2) { got = f }
+      (got, secs)
     }
 
     val cells = Seq((8, 0), (8, 1), (8, 2), (6, 0), (6, 1), (6, 2), (4, 2))
     println("tier tables probes recall time_s")
     cells.foreach { case (t, p) =>
-      val (got, secs) = minOf2(timed(
+      val (got, secs) = minOf2(
         Similarity.knnJoin(e, "vec_id", "embedding", dim = 64, nbits = 4,
           k = knnK, maxBucket = 1000, tables = t, probes = p)
           .select("id", "neighbor").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet))
+          .map(r => (r.getLong(0), r.getLong(1))).toSet)
       val rec = exactKnn.intersect(got).size.toDouble / exactKnn.size
       println(f"knn $t $p $rec%.3f $secs%.2f")
     }
     cells.foreach { case (t, p) =>
-      val (got, secs) = minOf2(timed(
+      val (got, secs) = minOf2(
         Dedup.embeddingNearDup(e, "vec_id", "embedding", dim = 64,
           nbits = 4, minCosine = 0.3, maxBucket = 1000, tables = t,
           probes = p)
           .select("id_a", "id_b").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet))
+          .map(r => (r.getLong(0), r.getLong(1))).toSet)
       val rec = exactEmb.intersect(got).size.toDouble / exactEmb.size
       println(f"emb $t $p $rec%.3f $secs%.2f")
     }

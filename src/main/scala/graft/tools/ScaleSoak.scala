@@ -243,16 +243,7 @@ object ScaleSoak {
     val factor = sys.env.getOrElse("SPARK_GRAFT_SOAK_FACTOR", "10").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // native parquet In pushdown for the ANN rerank id fetch (see Bench)
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "1024")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(cpus)
 
     val zipf = vocabMode == "zipf10k"
     val srcDir =
@@ -272,11 +263,9 @@ object ScaleSoak {
     // the scaled dir carries only documents/embeddings; every soaked
     // query reads nothing else
 
-    def time(fn: (SparkSession, String) => DataFrame, dir: String): Double = {
-      val t0 = System.nanoTime()
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def time(fn: (SparkSession, String) => DataFrame, dir: String): Double =
+      graft.Harness.timeMin(1)(
+        fn(spark, dir).write.format("noop").mode("overwrite").save())
 
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)

@@ -1,8 +1,8 @@
 package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
+import graft.Harness
 import graft.store.{LogStore, LogTable, TxLogTable}
 
 /** Store-scale soak: measures the operations the transactional backend
@@ -43,31 +43,9 @@ object StoreSoak {
     val batch = sys.env.getOrElse("SPARK_GRAFT_STORE_BATCH", "10000").toLong
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-store-soak").toString
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(): Unit
-      }
-      rm(new java.io.File(root))
-    }))
-
-    def timeMin(rep: Int)(body: => Unit): Double =
-      (0 until rep).map { _ =>
-        val t0 = System.nanoTime()
-        body
-        (System.nanoTime() - t0) / 1e9
-      }.min
+    val spark = Harness.session(cpus)
+    val root = Harness.scratchDir("graft-store-soak")
+    import Harness.timeMin
 
     def f(d: Double) = f"$d%.3f"
     val cells = sizes.flatMap { n =>
@@ -81,20 +59,16 @@ object StoreSoak {
         val top = t.lastIndex()
         // truncate a fixed reorg depth; the restore append runs BETWEEN
         // timing windows so each rep measures the truncation alone
-        val truncS = (0 until reps).map { _ =>
-          val t0 = System.nanoTime()
-          t.removeLogsFrom(top - depth).count(): Unit
-          val dt = (System.nanoTime() - t0) / 1e9
+        def restore(): Unit =
           t.storeLogs(mkBatch(spark, top - depth, depth)): Unit
-          dt
-        }.min
+        val truncS = timeMin(reps,
+            before = if (t.lastIndex() < top) restore())(
+          t.removeLogsFrom(top - depth).count(): Unit)
+        restore()
         val lastS = timeMin(reps)(t.lastIndex(): Unit)
-        val appendS = (0 until reps).map { _ =>
-          val start = t.lastIndex() // outside the window
-          val t0 = System.nanoTime()
-          t.storeLogs(mkBatch(spark, start, batch)): Unit
-          (System.nanoTime() - t0) / 1e9
-        }.min
+        var start = 0L
+        val appendS = timeMin(reps, before = { start = t.lastIndex() })(
+          t.storeLogs(mkBatch(spark, start, batch)): Unit)
         // the incremental-compaction claim, measured: simulate the
         // commit-per-micro-batch streaming tail (64 small commits), then
         // time ONE maintain() — healthy = flat across N, because the
@@ -105,18 +79,13 @@ object StoreSoak {
           if (kind != "tx") ""
           else {
             val tx = t.asInstanceOf[TxLogTable]
-            val maintainS = (0 until reps).map { _ =>
+            val maintainS = timeMin(reps, before = {
               val start = t.lastIndex()
               (0 until 64).foreach(i =>
                 t.storeLogs(mkBatch(spark, start + i * 200L, 200L)): Unit)
-              val t0 = System.nanoTime()
-              require(tx.maintain(maxEntries = 64, smallRows = 16384L),
-                "maintain did not trigger")
-              (System.nanoTime() - t0) / 1e9
-            }.min
-            val compactT0 = System.nanoTime()
-            tx.compact()
-            val compactS = (System.nanoTime() - compactT0) / 1e9
+            })(require(tx.maintain(maxEntries = 64, smallRows = 16384L),
+              "maintain did not trigger"))
+            val compactS = timeMin(1)(tx.compact(): Unit)
             s""","maintain_s":${f(maintainS)},"full_compact_s":${f(compactS)}"""
           }
         s""""$kind-$n":{"rows":$n,"backend":"$kind","truncate_s":${f(truncS)},""" +

@@ -11,6 +11,7 @@ import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetOutputFormat, Parque
 import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.io.{LocalOutputFile, OutputFile}
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -23,12 +24,18 @@ import org.apache.spark.sql.types.StructType
   * `Column(expr)` constructor and `Dataset.ofRows` private[sql];
   * third-party expression libraries bridge through a same-package
   * accessor (the pattern used across the Spark ecosystem). Besides these
-  * conversions, only the session state and write support behind
-  * [[ParquetFiles]] are touched.
+  * conversions, only the listener bus, the session state and the write
+  * support behind [[ParquetFiles]] are touched.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** Waits until every listener event posted so far has been delivered,
+    * so counts a listener keeps are complete when read. Throws
+    * `TimeoutException` past the bus's own 10 s bound.
+    */
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 
   /** A DataFrame over a plan built by the caller (`Dataset.ofRows`) — how
     * driver-held `InternalRow`s become a `LocalRelation` frame without a
