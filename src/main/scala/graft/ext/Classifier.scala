@@ -76,13 +76,18 @@ object Classifier {
     * Hessian entries — 20 doubles at d = 4, bounded by construction; the
     * 5×5 solve is driver-local Gaussian elimination. `feats` should be
     * cached/checkpointed by the caller — each iteration re-reads it.
+    * `iters` caps the iterations: the loop stops early once a step is at
+    * round-off, max |step| ≤ 1e-12 · max(1, max |w|): a further job
+    * would only move the weights in their last digits.
     */
   def train(feats: DataFrame, iters: Int = 8,
       lambda: Double = 1e-3): Model = {
     val d1 = NumFeatures + 1
     val w = Array.fill(d1)(0.0)
     var n = -1L
-    for (_ <- 0 until iters) {
+    var it = 0
+    var converged = false
+    while (it < iters && !converged) {
       val x = (j: Int) => if (j == 0) lit(1.0) else col(s"f${j - 1}")
       val margin = (0 until NumFeatures)
         .map(j => col(s"f$j") * lit(w(j + 1)))
@@ -108,6 +113,9 @@ object Classifier {
       for (j <- 1 until d1) h(j)(j) += lambda
       val step = solve(h, g)
       for (j <- 0 until d1) w(j) += step(j)
+      converged = step.map(math.abs).max <=
+        1e-12 * math.max(1.0, w.map(math.abs).max)
+      it += 1
     }
     Model(w)
   }

@@ -247,17 +247,6 @@ object LogOps {
   def truncateFrom(df: DataFrame, n: Long, indxCol: String = "indx"): DataFrame =
     df.where(col(indxCol) < n)
 
-  /** W2/W3 — reverse-ordered suffix: logs with `block >= cutoff`, newest
-    * first — the retraction emission order (ref `tracker.go:717-761`).
-    */
-  def reverseSuffix(
-      df: DataFrame,
-      cutoff: Long,
-      blockCol: String = "block_num",
-      indxCol: String = "indx"
-  ): DataFrame =
-    df.where(col(blockCol) >= cutoff).orderBy(col(indxCol).desc)
-
   /** W5 — tail window: the last `k` headers by height
     * (ref `tracker.go:701-702`). `orderBy.limit(k)` lets Spark run a
     * per-partition top-k (TakeOrderedAndProject) instead of a full sort.

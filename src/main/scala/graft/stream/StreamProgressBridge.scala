@@ -7,20 +7,22 @@ import graft.sync.{SyncListener, SyncProgress}
 /** T7's STREAMING twin (the batch side is `Syncer.addListener`): bridges
   * Structured Streaming's [[StreamingQueryListener]] progress events into
   * the same [[SyncProgress]] ticks the batch sync emits, so one consumer
-  * watches either ingestion path through one interface — the reference's
-  * lossy SyncCh events (`tracker.go:362-367`) regardless of engine mode.
+  * watches the sync and a streaming query (the CDC tail,
+  * [[TxCdcSource]]) through one interface — the reference's lossy SyncCh
+  * events (`tracker.go:362-367`) regardless of engine mode.
   *
   * Delivery contract matches the batch side: a throwing consumer loses
   * that tick and the stream proceeds (Spark's listener bus is already
   * async + lossy under backpressure, the SyncCh semantics exactly).
   *
-  * `current` is the chain-source block cursor ([[BlockOffset]] serializes
-  * as the plain block number); for non-graft sources it falls back to the
-  * batch id. `appended` accumulates `numInputRows` across batches for
-  * this bridge's lifetime — note Spark counts source READS, so a
-  * foreachBatch sink that re-executes its batch frame (isEmpty, collect,
-  * write) inflates the count: treat it as an upper-bound activity meter,
-  * not an exact row count (the store itself is the exact count).
+  * `current` is the source's end offset when it serializes as a bare
+  * number — the CDC tail's table version ([[VersionOffset]]); for other
+  * sources it falls back to the batch id. `appended` accumulates
+  * `numInputRows` across batches for this bridge's lifetime — note Spark
+  * counts source READS, so a foreachBatch sink that re-executes its batch
+  * frame (isEmpty, collect, write) inflates the count: treat it as an
+  * upper-bound activity meter, not an exact row count (the store itself
+  * is the exact count).
   *
   * Usage:
   * {{{

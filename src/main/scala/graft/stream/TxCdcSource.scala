@@ -161,8 +161,7 @@ final class TxCdcMicroBatchStream(root: String, filterHash: String,
   /** Admission: at most `maxCommitsPerBatch` commits per micro-batch —
     * bounds each batch to the ingest batches that produced those
     * commits, so a CDC consumer far behind a bulk backfill catches up
-    * in controlled steps instead of one giant batch (the same
-    * admission-control posture as [[ChainMicroBatchStream]]'s AIMD,
+    * in controlled steps instead of one giant batch (admission control
     * with the table's own commit granularity as the unit).
     *
     * Under Trigger.AvailableNow the head is CLAMPED to the version

@@ -92,9 +92,7 @@ final class ProviderScanLocator(provider: Provider, headHint: Long)
   *
   * The root's checkpoint is the KV `lastBlock_<filter>` key this class
   * writes: rows in a store with no checkpoint are the orphans of a crashed
-  * first sync, and [[sync]] truncates them. A root filled only by
-  * [[graft.stream.LiveSync]], whose progress lives in Spark's streaming
-  * checkpoint, is therefore not a `Syncer` root.
+  * first sync, and [[sync]] truncates them.
   */
 final class Syncer(
     spark: SparkSession,

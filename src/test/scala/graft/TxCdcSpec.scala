@@ -5,10 +5,13 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.{DataFrame, Row}
 
+import graft.model.FilterConfig
 import graft.store.TxLogTable
+import graft.sync.{LatestTickBox, Syncer, SyncProgress}
 
 /** The streaming change-data-feed source over the transactional table's
   * commit log ([[graft.stream.TxCdcSource]]): offsets are table versions,
@@ -31,11 +34,13 @@ class TxCdcSpec extends SparkSpec {
   /** Drain all available commits into `sink`, checkpointed at `cp`. */
   private def drain(root: String, hash: String, cp: String,
       sink: ConcurrentLinkedQueue[Change],
-      startingVersion: Option[Long] = None): Unit = {
+      startingVersion: Option[Long] = None,
+      maxCommitsPerBatch: Option[Long] = None): Unit = {
     var r = spark.readStream
       .format("graft.stream.TxCdcSourceProvider")
       .option("root", root).option("filterHash", hash)
     startingVersion.foreach(v => r = r.option("startingVersion", v))
+    maxCommitsPerBatch.foreach(n => r = r.option("maxCommitsPerBatch", n))
     val q = r.load()
       .writeStream
       .foreachBatch { (df: DataFrame, _: Long) =>
@@ -203,24 +208,82 @@ class TxCdcSpec extends SparkSpec {
   }
 
   test("streaming ingest to CDC tail: the live sync's commits arrive as deltas") {
-    // end-to-end: LiveSync writes micro-batches into the tx table; the
-    // CDC stream tails the SAME table's commit log and reproduces it
-    val root = tmpDir("txcdc-live")
-    val filter = graft.model.FilterConfig(addresses = Seq("a1"),
-      topics = Seq(Some("sig1")))
-    val q1 = graft.stream.LiveSync.start(spark, root, filter,
-      headBlock = 39, batchSize = 8, transactionalStore = true)
-    q1.awaitTermination(120000)
-    val t = new TxLogTable(spark, root, filter.hash)
+    // end-to-end: the tracker's sync writes the tx table (AIMD backfill
+    // batches, then the tail block by block, then a depth-2 fork's
+    // retraction and replacement); the CDC stream tails the SAME table's
+    // commit log from version 0
+    val root = tmpDir("txcdc-sync")
+    val chain = MockChain.linear(30, n => if (n % 2 == 0) 2 else 3)
+    def syncer(c: Seq[MBlock]) = new Syncer(spark, new MockProvider(spark, c),
+      root, FilterConfig(), batchSize = 8L, transactionalStore = true)
+    syncer(chain).sync()
+    val forked = MockChain.fork(chain, depth = 2, extend = 1)
+    val r = syncer(forked).sync()
+    assert(r.removed > 0, "the fork retracted nothing")
+    val t = new TxLogTable(spark, root, FilterConfig().hash)
+    val stored = t.read.select("indx", "tx_hash").as[(Long, String)]
+      .collect().toSeq
+    assert(stored.map(_._2).sorted == new MockProvider(spark, forked).allLogs
+      .select("tx_hash").as[String].collect().toSeq.sorted)
     val got = new ConcurrentLinkedQueue[Change]()
-    drain(root, filter.hash, tmpDir("txcdc-cp"), got,
+    drain(root, FilterConfig().hash, tmpDir("txcdc-cp"), got,
       startingVersion = Some(0L))
-    // every ingested row arrives exactly once as an insert, across the
-    // per-micro-batch commits
-    assert(got.asScala.forall(_._2 == "insert"))
-    assert(got.asScala.map(_._3).toSeq.sorted ==
-      t.read.select("indx").as[Long].collect().toSeq.sorted)
-    assert(got.asScala.map(_._1).toSet.size > 1,
-      "expected multiple per-micro-batch commits in the feed")
+    val feed = got.asScala.toSeq
+    // inserts minus deletes, as a multiset, is the synced table
+    def bag(cs: Seq[(Long, String)]) =
+      cs.groupBy(identity).map { case (k, v) => k -> v.size }
+    val ins = bag(feed.collect { case (_, "insert", i, h) => (i, h) })
+    val del = bag(feed.collect { case (_, "delete", i, h) => (i, h) })
+    val net = (ins.keySet ++ del.keySet)
+      .map(k => k -> (ins.getOrElse(k, 0) - del.getOrElse(k, 0)))
+      .filter(_._2 != 0).toMap
+    assert(net == bag(stored))
+    assert(feed.map(_._1).toSet.size > 1,
+      "expected multiple per-batch commits in the feed")
+    assert(feed.exists(_._2 == "delete"), "the fork's retraction is missing")
+  }
+
+  test("T7 streaming twin: progress ticks bridge from the listener bus") {
+    val root = tmpDir("txcdc-bridge")
+    val t = new TxLogTable(spark, root, "f1")
+    (0L until 4L).foreach(i => t.storeLogs(mkLogs(2 * i, 2 * i + 1)))
+    t.removeLogsFrom(13L)       // v1..v4 inserts, v5 a delete
+    val head = t.version()
+    val ticks = new ConcurrentLinkedQueue[SyncProgress]()
+    val box = new LatestTickBox
+    val bridge = new graft.stream.StreamProgressBridge(p => {
+      ticks.add(p); box.onProgress(p)
+    })
+    // a second, misbehaving consumer must lose ticks, not kill the stream
+    val bad = new graft.stream.StreamProgressBridge(
+      _ => sys.error("misbehaving consumer"))
+    // earlier queries' progress must not reach this bridge
+    Bridge.drainListeners(spark.sparkContext)
+    spark.streams.addListener(bridge)
+    spark.streams.addListener(bad)
+    try {
+      val changes = new ConcurrentLinkedQueue[Change]()
+      drain(root, "f1", tmpDir("txcdc-bridge-cp"), changes,
+        startingVersion = Some(0L), maxCommitsPerBatch = Some(1L))
+      assert(changes.size.toLong == t.changesBetween(0L, head).count())
+      // the listener bus is async — drain it before asserting
+      Bridge.drainListeners(spark.sparkContext)
+      val got = ticks.asScala.toSeq
+      assert(got.nonEmpty, "no progress ticks bridged")
+      assert(got.forall(_.phase == "stream"))
+      // the version cursor (VersionOffset is the bare version) is
+      // monotone across batches and reaches the table's head
+      val cursors = got.map(_.current)
+      assert(cursors == cursors.sorted, s"cursor not monotone: $cursors")
+      assert(cursors.last == head, s"cursor stopped at ${cursors.last}")
+      // numInputRows counts source READS and the sink reads each batch
+      // once, so the cumulative count covers the delivered feed
+      assert(got.last.appended >= changes.size.toLong)
+      // the poll mailbox holds the freshest tick
+      assert(box.poll().contains(got.last))
+    } finally {
+      spark.streams.removeListener(bridge)
+      spark.streams.removeListener(bad)
+    }
   }
 }
